@@ -428,7 +428,17 @@ final case class VersionChecksum(
 final class VersionAlreadyExists(val version: Long)
   extends RuntimeException(s"delta version $version already exists")
 
+/** `version` is committed and durable, but something after the publish
+  * failed: a post-commit hook, auto-compaction, or the store's own
+  * acknowledgement of the publish. The write LANDED: its files must
+  * never be deleted, and a replay of the same txn batch is a skip. */
+final class PostCommitFailure(val version: Long, cause: Throwable)
+  extends RuntimeException(
+    s"delta version $version is committed; post-commit work failed: ${cause.getMessage}", cause)
+
 object DeltaLog {
+  private[delta] val logger = org.slf4j.LoggerFactory.getLogger(classOf[DeltaLog])
+
   /** Row-tracking domain name (Delta PROTOCOL.md "Row Tracking": fresh
     * base row IDs are assigned AT COMMIT TIME from this domain's
     * `rowIdHighWaterMark`). */
@@ -1023,7 +1033,16 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
   /** [[commit]] with per-attempt action GENERATION: `gen` runs against
     * the then-current snapshot on every retry, so actions that depend on
     * the predecessor state (row-id blocks, version-stamped fields) are
-    * recomputed against the actual winner instead of committing stale. */
+    * recomputed against the actual winner instead of committing stale.
+    *
+    * Outcome contract: once `write(next, …)` returns, version `next` is
+    * durable and this method returns `next` — the `.crc` and checkpoint
+    * that follow are best-effort (a failure is a logged warning), and a
+    * failing post-commit hook throws [[PostCommitFailure]] carrying
+    * `next`. Any other exception means `write` never returned: the
+    * version is unpublished unless `write` itself failed after the
+    * publish (an ambiguous store error), which only a re-read of `next`
+    * can tell. */
   def commitWith(gen: Snapshot => Seq[Action], check: Snapshot => Boolean = _ => true,
                  maxAttempts: Int = 1000): Long = {
     var attempt = 0
@@ -1067,22 +1086,32 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
           case _ => a
         })
       }
-      try {
-        write(next, withTxnTimes)
-        writeChecksum(next, snap, withTxnTimes)
-        maybeCheckpoint(next,
-          withTxnTimes.flatMap(_.metaData).lastOption.orElse(snap.metadata))
-        // post-commit hooks (e.g. symlink-manifest maintenance) run after
-        // the commit is DURABLE: a hook failure propagates to the caller
-        // as a visible error, but the commit itself stands — delta-spark's
-        // PostCommitHook contract for GenerateSymlinkManifest.
-        postCommitHooks.foreach(h => h(next, snap, withTxnTimes))
+      val published =
+        try { write(next, withTxnTimes); true }
+        catch { case _: VersionAlreadyExists => false }
+      if (published) {
+        afterCommit(next, snap, withTxnTimes)
         return next
-      } catch {
-        case _: VersionAlreadyExists => attempt += 1
       }
+      attempt += 1
     }
     throw new RuntimeException(s"commit retry ceiling ($maxAttempts) hit")
+  }
+
+  /** Everything after a DURABLE commit. Only a hook failure escapes, as
+    * [[PostCommitFailure]] — delta-spark's postCommit contract: the
+    * checkpoint is an optimization the next interval retries, while a
+    * hook's artifact (a symlink manifest) is what its readers see, so its
+    * failure stays visible. */
+  private def afterCommit(version: Long, snap: Snapshot, actions: Seq[Action]): Unit = {
+    writeChecksum(version, snap, actions)
+    try maybeCheckpoint(version, actions.flatMap(_.metaData).lastOption.orElse(snap.metadata))
+    catch { case scala.util.control.NonFatal(e) =>
+      DeltaLog.logger.warn(s"checkpoint at version $version of $tablePath failed; " +
+        "the commit stands and the next checkpoint interval retries", e)
+    }
+    try postCommitHooks.foreach(h => h(version, snap, actions))
+    catch { case scala.util.control.NonFatal(e) => throw new PostCommitFailure(version, e) }
   }
 
   /** The committed state's live file set, derived from the predecessor
@@ -1176,7 +1205,10 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * state, so hooks can maintain derived artifacts without re-listing
     * the log. Registered once per [[DeltaTable]] instance; commits made
     * through OTHER handles (or other writers entirely) do not fire them —
-    * same scope as delta-spark's transaction-local post-commit hooks. */
+    * same scope as delta-spark's transaction-local post-commit hooks.
+    * Hooks run only after the version is durable, so a hook that throws
+    * reaches the committer as [[PostCommitFailure]] with the committed
+    * version — never as a failed commit. */
   private val postCommitHooks =
     scala.collection.mutable.ArrayBuffer.empty[(Long, Snapshot, Seq[Action]) => Unit]
   def onPostCommit(h: (Long, Snapshot, Seq[Action]) => Unit): Unit =

@@ -200,7 +200,9 @@ object DeltaTable {
   /** Bounded-pool parallel map for driver-side storage round-trips
     * (footer reads, existence probes, deletes): 32 threads cap namenode
     * pressure while unblocking per-call object-store latency. One copy —
-    * four call sites hand-rolled this before round 13's review. */
+    * four call sites hand-rolled this before round 13's review. Returns
+    * or throws only once every call has finished, so a caller cleaning up
+    * after a failed call sees the side effects of all the others. */
   private[delta] def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.isEmpty) return Nil
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -208,7 +210,10 @@ object DeltaTable {
     try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
       override def call(): B = f(a)
     })).map(_.get())
-    finally pool.shutdown()
+    finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS): Unit
+    }
   }
 
   /** One listed entry of [[parallelWalk]] — a lightweight serializable
@@ -763,11 +768,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** This table's staged-write parquet codec (see
-    * [[DeltaTable.ParquetCodecKey]]). */
-  private def tableCodec: String =
-    DeltaTable.codecOf(snapshot.metadata.map(_.configuration).getOrElse(Map.empty))
-
   def exists: Boolean = log.exists()
 
   /** Create the table (v0: protocol + metaData), like the reference's test
@@ -897,44 +897,28 @@ final class DeltaTable(spark: SparkSession, val path: String) {
             .putLong("parquet.field.id", idByLogical(c)).build())
         else col(c).as(nm)
       }.toSeq: _*)
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-    // staged bytes bind to the NEW table definition's codec, like its
-    // schema and stats width
-    val writer = physical.write.mode("overwrite")
-      .option("compression", DeltaTable.codecOf(newMeta.configuration))
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(staging.toString)
-    val adds = collectStagedFiles(staging, physParts,
-      statsConf = Some(newMeta.configuration))
-    try {
-      val expected = snap0.files.map(_.path).toSet
-      val now = System.currentTimeMillis()
-      val (commitInfoTail, creationHead) = creation.partition(_.commitInfo.isDefined)
-      val actions = creationHead ++
-        snap0.files.map(f => Action(remove = Some(removeOf(f, now)))) ++
-        // a replaced-away clustered layout must not leave its domain behind
-        (if (clusterBy.isEmpty &&
-             snap0.domainMetadata.contains(DeltaTable.ClusteringDomain))
-          Seq(Action(domainMetadata = Some(DomainMetadata(
-            DeltaTable.ClusteringDomain, removed = true))))
-        else Nil) ++
-        adds.map(a => Action(add = Some(a))) ++
-        commitInfoTail
-      val committed =
-        try log.commit(actions, check = s => s.files.map(_.path).toSet == expected)
-        catch { case e: Throwable =>
-          adds.foreach(a => fs.delete(new Path(path, a.path), false))
-          throw e
-        }
-      if (committed < 0) {
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-        throw new java.util.ConcurrentModificationException(
-          "REPLACE TABLE lost a commit race: the file set changed underneath it")
-      }
-      committed
-    } finally {
-      fs.delete(staging, true)
-    }
+    // staged bytes bind to the NEW table definition's codec and stats
+    // width, like its schema
+    val adds = stage(physical, physParts, newMeta.configuration)
+    val expected = snap0.files.map(_.path).toSet
+    val now = System.currentTimeMillis()
+    val (commitInfoTail, creationHead) = creation.partition(_.commitInfo.isDefined)
+    val actions = creationHead ++
+      snap0.files.map(f => Action(remove = Some(removeOf(f, now)))) ++
+      // a replaced-away clustered layout must not leave its domain behind
+      (if (clusterBy.isEmpty &&
+           snap0.domainMetadata.contains(DeltaTable.ClusteringDomain))
+        Seq(Action(domainMetadata = Some(DomainMetadata(
+          DeltaTable.ClusteringDomain, removed = true))))
+      else Nil) ++
+      adds.map(a => Action(add = Some(a))) ++
+      commitInfoTail
+    val committed = commitStaged(snap0.version, adds.map(_.path), _ => actions,
+      s => s.files.map(_.path).toSet == expected)
+    if (committed < 0)
+      throw new java.util.ConcurrentModificationException(
+        "REPLACE TABLE lost a commit race: the file set changed underneath it")
+    committed
   }
 
   /** The protocol/metaData/clustering actions CREATE commits — shared
@@ -1979,7 +1963,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       if (!mergeSchema) Nil else evolvedFieldsFor(baseSnap, df.schema)
     val evolvedSchema = org.apache.spark.sql.types.StructType(baseSchema.fields ++ evolution)
     val parts = partitionColumns
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
     // IDENTITY COLUMNS (Delta protocol, writer v6): columns the batch
     // omits get machine-assigned contiguous values `next, next+step, ...`
     // from the high-water mark stored in the field metadata; explicit
@@ -2067,129 +2050,113 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       }
       else if (parts.nonEmpty) aligned.repartition(parts.map(col): _*)
       else aligned
-    val physParts = physicalPartNames(parts)
-    val writer = toPhysicalForWrite(arranged, evolvedSchema).write.mode("overwrite")
-      .option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(staging.toString)
-
-    val adds = collectStagedFiles(staging, physParts)
-    try {
-      // identity high-water-mark advance: assigned blocks move it to the
-      // last allocated value (batch row count from the staged stats);
-      // explicit batches move it past their farthest value
-      val batchRows = adds.flatMap(_.stats).map(s =>
-        Actions.mapper.readTree(s).path("numRecords").asLong(0L)).sum
-      val identUpdates: Map[String, Long] =
-        (identAssign.flatMap { case (n, start, step, _, hwm) =>
-          if (batchRows == 0L) None
-          else {
-            val s0 = hwm.map(_ + step).getOrElse(start)
-            Some(n -> (s0 + (batchRows - 1L) * step))
-          }
-        } ++ identProvided.flatMap { case (n, start, step, _, hwm) =>
-          if (batchRows == 0L) None
-          else identProvidedExtreme.get(n).flatMap { ext =>
-            val cur = hwm.getOrElse(start - step)
-            val next = if (step > 0) math.max(cur, ext) else math.min(cur, ext)
-            if (next == cur) None else Some(n -> next)
-          }
-        }).toMap
-      val needsMeta = evolution.nonEmpty || identUpdates.nonEmpty
-      val baseMeta =
-        if (!needsMeta) None
-        else Some(baseSnap.metadata
-          .getOrElse(throw new IllegalStateException(s"no table at $path")))
-      val metaSchema =
-        if (identUpdates.isEmpty) evolvedSchema
-        else org.apache.spark.sql.types.StructType(evolvedSchema.fields.map(f =>
-          identUpdates.get(f.name).fold(f)(h =>
-            f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putLong(DeltaTable.IdentityHwmKey, h).build()))))
-      val schemaUpdate = baseMeta
-        .map(m => Action(metaData = Some(m.copy(
-          schemaString = metaSchema.json,
-          configuration =
-            if (!columnMappingEnabled || evolution.isEmpty) m.configuration
-            else m.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
-              evolvedSchema.fields.flatMap(f =>
-                if (f.metadata.contains(DeltaTable.ColMapIdKey))
-                  Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
-                else None).max.toString)))))
-        .toSeq
-      // an evolution that introduces a TIMESTAMP_NTZ column must raise
-      // the timestampNtz feature IN THE SAME COMMIT — NTZ pages under a
-      // protocol that never declares the feature violate the spec
-      val ntzRaise =
-        if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
-          !baseSnap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
-          Seq(Action(protocol = Some(raisedProtocol(baseSnap, 3, 7,
-            Seq("timestampNtz"), Seq("timestampNtz")))))
-        else Nil
-      val actions = ntzRaise ++ schemaUpdate ++
-        adds.map(a => Action(add = Some(a))) ++
-        txnAppId.map(app => Action(txn = Some(Txn(app, txnVersion,
-          Some(System.currentTimeMillis()))))).toSeq ++
-        Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), operation,
-          Map("mode" -> "Append"),
-          operationMetrics = Some(Map(
-            "numFiles" -> adds.size.toString,
-            "numOutputRows" -> batchRows.toString,
-            "numOutputBytes" -> adds.map(_.size).sum.toString))))))
-      // an evolving append must not clobber a schema change that landed
-      // while it was staging: its metaData was computed from baseSchema,
-      // so committing it over a different schema would silently drop the
-      // concurrent evolution — detect and throw instead of retrying past
-      var schemaConflict = false
-      // compare PARSED StructTypes, not raw JSON: another writer's
-      // metadata may serialize the same schema with different key order
-      // or formatting, and a string compare would misreport every
-      // evolving append against it as a schema race. The CONFIGURATION
-      // must also be unchanged: the metaData action above was copied from
-      // baseMeta, so retrying it over a concurrently-committed
-      // configuration change (a new CHECK constraint, say) would silently
-      // erase that change — and never enforce the constraint again.
-      // identity allocations ride the same guard: the high-water mark
-      // lives in the schema's field METADATA, so "schema unchanged since
-      // baseSnap" (StructType equality includes metadata) also proves no
-      // concurrent writer advanced the mark our id block was cut from
-      def evolutionCheck(snap: Snapshot): Boolean =
-        if (!txnNotYetApplied(snap)) false
-        else if (ntzRaise.nonEmpty && snap.protocol != baseSnap.protocol) {
-          schemaConflict = true; false
-        } else if (needsMeta &&
-          !snap.metadata.exists(m =>
-            org.apache.spark.sql.types.DataType.fromJson(m.schemaString) == baseSchema &&
-              m.configuration == baseMeta.get.configuration)) {
-          schemaConflict = true; false
-        } else true
-      val committed =
-        try log.commit(actions, evolutionCheck)
-        catch { case e: Throwable =>
-          // commit failed outright (retry ceiling, IO error): the files
-          // already moved into the table root are unreferenced — remove
-          // them instead of leaving orphans for vacuum to find days later
-          adds.foreach(a => fs.delete(new Path(path, a.path), false))
-          throw e
+    val adds = stage(toPhysicalForWrite(arranged, evolvedSchema), physicalPartNames(parts))
+    // identity high-water-mark advance: assigned blocks move it to the
+    // last allocated value (batch row count from the staged stats);
+    // explicit batches move it past their farthest value
+    val batchRows = adds.flatMap(_.stats).map(s =>
+      Actions.mapper.readTree(s).path("numRecords").asLong(0L)).sum
+    val identUpdates: Map[String, Long] =
+      (identAssign.flatMap { case (n, start, step, _, hwm) =>
+        if (batchRows == 0L) None
+        else {
+          val s0 = hwm.map(_ + step).getOrElse(start)
+          Some(n -> (s0 + (batchRows - 1L) * step))
         }
-      if (committed < 0) {
-        // the moved files are unreferenced either way — clean them up
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-        if (schemaConflict)
-          throw new java.util.ConcurrentModificationException(
-            "append lost a metadata race: the table schema (including an " +
-              "identity column's high-water mark) or configuration changed " +
-              "while this append was staging — re-run the append so it " +
-              "recomputes against the winner")
-        // otherwise: lost the race to a concurrent writer of the same
-        // txn batch — the documented idempotent-replay skip
-      }
-      if (committed >= 0) maybeAutoCompact()
-      committed
-    } finally {
-      fs.delete(staging, true)
+      } ++ identProvided.flatMap { case (n, start, step, _, hwm) =>
+        if (batchRows == 0L) None
+        else identProvidedExtreme.get(n).flatMap { ext =>
+          val cur = hwm.getOrElse(start - step)
+          val next = if (step > 0) math.max(cur, ext) else math.min(cur, ext)
+          if (next == cur) None else Some(n -> next)
+        }
+      }).toMap
+    val needsMeta = evolution.nonEmpty || identUpdates.nonEmpty
+    val baseMeta =
+      if (!needsMeta) None
+      else Some(baseSnap.metadata
+        .getOrElse(throw new IllegalStateException(s"no table at $path")))
+    val metaSchema =
+      if (identUpdates.isEmpty) evolvedSchema
+      else org.apache.spark.sql.types.StructType(evolvedSchema.fields.map(f =>
+        identUpdates.get(f.name).fold(f)(h =>
+          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putLong(DeltaTable.IdentityHwmKey, h).build()))))
+    val schemaUpdate = baseMeta
+      .map(m => Action(metaData = Some(m.copy(
+        schemaString = metaSchema.json,
+        configuration =
+          if (!columnMappingEnabled || evolution.isEmpty) m.configuration
+          else m.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
+            evolvedSchema.fields.flatMap(f =>
+              if (f.metadata.contains(DeltaTable.ColMapIdKey))
+                Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
+              else None).max.toString)))))
+      .toSeq
+    // an evolution that introduces a TIMESTAMP_NTZ column must raise
+    // the timestampNtz feature IN THE SAME COMMIT — NTZ pages under a
+    // protocol that never declares the feature violate the spec
+    val ntzRaise =
+      if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
+        !baseSnap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
+        Seq(Action(protocol = Some(raisedProtocol(baseSnap, 3, 7,
+          Seq("timestampNtz"), Seq("timestampNtz")))))
+      else Nil
+    val actions = ntzRaise ++ schemaUpdate ++
+      adds.map(a => Action(add = Some(a))) ++
+      txnAppId.map(app => Action(txn = Some(Txn(app, txnVersion,
+        Some(System.currentTimeMillis()))))).toSeq ++
+      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), operation,
+        Map("mode" -> "Append"),
+        operationMetrics = Some(Map(
+          "numFiles" -> adds.size.toString,
+          "numOutputRows" -> batchRows.toString,
+          "numOutputBytes" -> adds.map(_.size).sum.toString))))))
+    // an evolving append must not clobber a schema change that landed
+    // while it was staging: its metaData was computed from baseSchema,
+    // so committing it over a different schema would silently drop the
+    // concurrent evolution — detect and throw instead of retrying past
+    var schemaConflict = false
+    // compare PARSED StructTypes, not raw JSON: another writer's
+    // metadata may serialize the same schema with different key order
+    // or formatting, and a string compare would misreport every
+    // evolving append against it as a schema race. The CONFIGURATION
+    // must also be unchanged: the metaData action above was copied from
+    // baseMeta, so retrying it over a concurrently-committed
+    // configuration change (a new CHECK constraint, say) would silently
+    // erase that change — and never enforce the constraint again.
+    // identity allocations ride the same guard: the high-water mark
+    // lives in the schema's field METADATA, so "schema unchanged since
+    // baseSnap" (StructType equality includes metadata) also proves no
+    // concurrent writer advanced the mark our id block was cut from
+    def evolutionCheck(snap: Snapshot): Boolean =
+      if (!txnNotYetApplied(snap)) false
+      else if (ntzRaise.nonEmpty && snap.protocol != baseSnap.protocol) {
+        schemaConflict = true; false
+      } else if (needsMeta &&
+        !snap.metadata.exists(m =>
+          org.apache.spark.sql.types.DataType.fromJson(m.schemaString) == baseSchema &&
+            m.configuration == baseMeta.get.configuration)) {
+        schemaConflict = true; false
+      } else true
+    val committed = commitStaged(baseSnap.version, adds.map(_.path), _ => actions,
+      evolutionCheck)
+    if (committed < 0) {
+      if (schemaConflict)
+        throw new java.util.ConcurrentModificationException(
+          "append lost a metadata race: the table schema (including an " +
+            "identity column's high-water mark) or configuration changed " +
+            "while this append was staging — re-run the append so it " +
+            "recomputes against the winner")
+      // otherwise: lost the race to a concurrent writer of the same
+      // txn batch — the documented idempotent-replay skip
     }
+    // auto-compaction is post-commit work: the append has landed
+    if (committed >= 0)
+      try maybeAutoCompact()
+      catch { case scala.util.control.NonFatal(e) => throw new PostCommitFailure(committed, e) }
+    committed
   }
 
   /** COPY INTO (delta-spark's idempotent batch file loader — the batch
@@ -2419,69 +2386,55 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       val parts = partitionColumns
       val arranged =
         if (parts.nonEmpty) aligned.repartition(parts.map(col): _*) else aligned
-      val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-      val physParts = physicalPartNames(parts)
-      val writer = toPhysicalForWrite(arranged, evolvedSchema).write.mode("overwrite")
-        .option("compression", tableCodec)
-      (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-        .parquet(staging.toString)
-      val adds = collectStagedFiles(staging, physParts)
-      val committed =
-        try {
-          val now = System.currentTimeMillis()
-          // an evolving load carries its metaData update in the SAME
-          // commit (no reader sees the new columns without the rows or
-          // vice versa); column-mapping maxId bumps with the minted ids;
-          // a new TIMESTAMP_NTZ column raises the feature atomically too
-          val baseMeta =
-            if (evolution.isEmpty) None
-            else Some(baseSnap.metadata
-              .getOrElse(throw new IllegalStateException(s"no table at $path")))
-          val schemaUpdate = baseMeta.map(m => Action(metaData = Some(m.copy(
-            schemaString = evolvedSchema.json,
-            configuration =
-              if (!columnMappingEnabled) m.configuration
-              else m.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
-                evolvedSchema.fields.flatMap(f =>
-                  if (f.metadata.contains(DeltaTable.ColMapIdKey))
-                    Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
-                  else None).max.toString))))).toSeq
-          val ntzRaise =
-            if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
-              !baseSnap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
-              Seq(Action(protocol = Some(raisedProtocol(baseSnap, 3, 7,
-                Seq("timestampNtz"), Seq("timestampNtz")))))
-            else Nil
-          val actions = ntzRaise ++ schemaUpdate ++
-            adds.map(a => Action(add = Some(a))) ++
-            newFiles.map(p => Action(txn = Some(Txn(appIdOf(p), 0L, Some(now))))) ++
-            Seq(Action(commitInfo = Some(CommitInfo(now, "COPY INTO",
-              Map("source" -> source, "fileFormat" -> fmt,
-                "numSourceFiles" -> newFiles.size.toString),
-              operationMetrics = Some(Map(
-                "numFiles" -> adds.size.toString,
-                "numOutputRows" -> adds.flatMap(_.stats).map(s =>
-                  Actions.mapper.readTree(s).path("numRecords").asLong(0L))
-                  .sum.toString,
-                "numOutputBytes" -> adds.map(_.size).sum.toString))))))
-          // abort if ANY of our files was loaded meanwhile — committing
-          // would double their rows (our staged data already fuses them).
-          // An evolving load additionally refuses to clobber a schema or
-          // configuration change that landed while staging — the outer
-          // loop recomputes everything against the winner and retries
-          try log.commit(actions, check = s =>
-            newFiles.forall(p => !s.txns.contains(appIdOf(p))) &&
-              (evolution.isEmpty || (s.metadata.exists(m =>
-                org.apache.spark.sql.types.DataType.fromJson(m.schemaString) == sch &&
-                  m.configuration == baseMeta.get.configuration) &&
-                (ntzRaise.isEmpty || s.protocol == baseSnap.protocol))))
-          catch { case e: Throwable =>
-            adds.foreach(a => fs.delete(new Path(path, a.path), false))
-            throw e
-          }
-        } finally fs.delete(staging, true)
+      val adds = stage(toPhysicalForWrite(arranged, evolvedSchema), physicalPartNames(parts))
+      val now = System.currentTimeMillis()
+      // an evolving load carries its metaData update in the SAME
+      // commit (no reader sees the new columns without the rows or
+      // vice versa); column-mapping maxId bumps with the minted ids;
+      // a new TIMESTAMP_NTZ column raises the feature atomically too
+      val baseMeta =
+        if (evolution.isEmpty) None
+        else Some(baseSnap.metadata
+          .getOrElse(throw new IllegalStateException(s"no table at $path")))
+      val schemaUpdate = baseMeta.map(m => Action(metaData = Some(m.copy(
+        schemaString = evolvedSchema.json,
+        configuration =
+          if (!columnMappingEnabled) m.configuration
+          else m.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
+            evolvedSchema.fields.flatMap(f =>
+              if (f.metadata.contains(DeltaTable.ColMapIdKey))
+                Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
+              else None).max.toString))))).toSeq
+      val ntzRaise =
+        if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
+          !baseSnap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
+          Seq(Action(protocol = Some(raisedProtocol(baseSnap, 3, 7,
+            Seq("timestampNtz"), Seq("timestampNtz")))))
+        else Nil
+      val actions = ntzRaise ++ schemaUpdate ++
+        adds.map(a => Action(add = Some(a))) ++
+        newFiles.map(p => Action(txn = Some(Txn(appIdOf(p), 0L, Some(now))))) ++
+        Seq(Action(commitInfo = Some(CommitInfo(now, "COPY INTO",
+          Map("source" -> source, "fileFormat" -> fmt,
+            "numSourceFiles" -> newFiles.size.toString),
+          operationMetrics = Some(Map(
+            "numFiles" -> adds.size.toString,
+            "numOutputRows" -> adds.flatMap(_.stats).map(s =>
+              Actions.mapper.readTree(s).path("numRecords").asLong(0L))
+              .sum.toString,
+            "numOutputBytes" -> adds.map(_.size).sum.toString))))))
+      // abort if ANY of our files was loaded meanwhile — committing
+      // would double their rows (our staged data already fuses them).
+      // An evolving load additionally refuses to clobber a schema or
+      // configuration change that landed while staging — the outer
+      // loop recomputes everything against the winner and retries
+      val committed = commitStaged(baseSnap.version, adds.map(_.path), _ => actions,
+        s => newFiles.forall(p => !s.txns.contains(appIdOf(p))) &&
+          (evolution.isEmpty || (s.metadata.exists(m =>
+            org.apache.spark.sql.types.DataType.fromJson(m.schemaString) == sch &&
+              m.configuration == baseMeta.get.configuration) &&
+            (ntzRaise.isEmpty || s.protocol == baseSnap.protocol))))
       if (committed >= 0) return committed
-      adds.foreach(a => fs.delete(new Path(path, a.path), false))
       if (attempt >= 3) throw new java.util.ConcurrentModificationException(
         "COPY INTO lost the loaded-file (or schema-evolution) race 3 times " +
           "— concurrent writers of the same table; re-run to load the remainder")
@@ -2591,20 +2544,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     written.toSeq
   }
 
-  /** Post-commit symlink-manifest maintenance
-    * (`delta.compatibility.symlinkFormatManifest.enabled`): after a data
-    * commit, rewrite the manifests of exactly the partitions the commit
-    * touched; after the enabling ALTER (or any metadata commit), run a
-    * full generation. The committed state is derived from the
-    * predecessor snapshot + the commit's own actions — no log re-listing
-    * on the hot commit path, and hook runs see precisely the state their
-    * commit produced even under concurrent writers.
-    *
-    * Concurrency caveat (delta-spark's too): hooks of RACING writers can
-    * land out of order — writer A's manifest for a partition may
-    * overwrite writer B's newer one until the partition is next touched.
-    * Manifests are eventually consistent with the log; GENERATE is the
-    * explicit repair for readers that need a point-in-time sync. */
   /** Post-commit UniForm hook: when the (possibly just-committed)
     * configuration enables iceberg, advance the [[IcebergUniform]]
     * mirror to the committed version — sync is idempotent per Delta
@@ -2619,6 +2558,20 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     if (DeltaTable.uniformIcebergOn(conf)) IcebergUniform.sync(this): Unit
   }
 
+  /** Post-commit symlink-manifest maintenance
+    * (`delta.compatibility.symlinkFormatManifest.enabled`): after a data
+    * commit, rewrite the manifests of exactly the partitions the commit
+    * touched; after the enabling ALTER (or any metadata commit), run a
+    * full generation. The committed state is derived from the
+    * predecessor snapshot + the commit's own actions — no log re-listing
+    * on the hot commit path, and hook runs see precisely the state their
+    * commit produced even under concurrent writers.
+    *
+    * Concurrency caveat (delta-spark's too): hooks of RACING writers can
+    * land out of order — writer A's manifest for a partition may
+    * overwrite writer B's newer one until the partition is next touched.
+    * Manifests are eventually consistent with the log; GENERATE is the
+    * explicit repair for readers that need a point-in-time sync. */
   private def maybeUpdateManifest(version: Long, prev: Snapshot,
                                   actions: Seq[Action]): Unit = {
     val meta = actions.flatMap(_.metaData).lastOption.orElse(prev.metadata)
@@ -2663,14 +2616,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     ()
   }
 
-  /** Move staged parquet files into the table root preserving the Hive
-    * partition layout; build `add` actions with footer-derived stats.
-    *
-    * Scale: renames are namenode metadata ops and footer reads are one
-    * small range-read each, but doing them serially on the driver
-    * serializes the commit at thousands of files per batch (round-1
-    * verdict #4) — both run on a bounded thread pool here. (The next step
-    * at 100 TB would be collecting stats inside the write job's tasks.) */
   /** The table's stats-collection width for footer reads ( -1 ⇒ all). */
   private def statsIndexLimit(conf: Map[String, String]): Int =
     conf.get(DeltaTable.DataSkippingNumIndexedColsKey)
@@ -2678,48 +2623,153 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       .map(n => if (n < 0) Int.MaxValue else n)
       .getOrElse(DeltaTable.DefaultDataSkippingNumIndexedCols)
 
-  private def collectStagedFiles(staging: Path, parts: Seq[String],
-                                 statsConf: Option[Map[String, String]] = None): Seq[AddFile] = {
+  /** THE staged write every data-file writer uses: write `frame` (already
+    * arranged and under physical column names — each writer keeps its
+    * own repartition / rebalance / range routing) to a fresh
+    * `_staging-*` dir, then move its parquet files into the table root
+    * preserving the Hive partition layout — or under `_change_data/`
+    * when `cdc` — and describe each moved file as an [[AddFile]]
+    * (partition values from its Hive path; footer-derived stats, none
+    * for change files). `conf` is the configuration whose codec and
+    * stats width govern the write: REPLACE ... AS SELECT stages under
+    * the NEW table config before any commit exists.
+    *
+    * Failure contract: the staging dir is always removed, and if a move
+    * or footer read fails the files already moved are removed before
+    * the error surfaces (both through [[discard]]). What the caller then
+    * commits goes through [[commitStaged]].
+    *
+    * Scale: renames are namenode metadata ops and footer reads are one
+    * small range-read each, but doing them serially on the driver
+    * serializes the commit at thousands of files per batch (round-1
+    * verdict #4) — both run on a bounded thread pool here. (The next step
+    * at 100 TB would be collecting stats inside the write job's tasks.) */
+  private def stage(frame: DataFrame, physParts: Seq[String],
+                    conf: Map[String, String] = snapshot.metadata
+                      .map(_.configuration).getOrElse(Map.empty),
+                    cdc: Boolean = false): Seq[AddFile] = {
     import scala.jdk.CollectionConverters._
-    // statsConf: the configuration whose stats width governs the staged
-    // footers — REPLACE ... AS SELECT stages under the NEW table config
-    // before any commit exists, so it cannot read the current snapshot's
-    val statsCols = statsIndexLimit(statsConf.getOrElse(
-      snapshot.metadata.map(_.configuration).getOrElse(Map.empty)))
-    val stagingPrefix = fs.makeQualified(staging).toString
-    val files = {
-      val it = fs.listFiles(staging, true)
-      val buf = mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st
+    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
+    val moved = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    try {
+      val writer = frame.write.mode("overwrite")
+        .option("compression", DeltaTable.codecOf(conf))
+      (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
+        .parquet(staging.toString)
+      val statsCols = statsIndexLimit(conf)
+      val stagingPrefix = fs.makeQualified(staging).toString
+      val files = {
+        val it = fs.listFiles(staging, true)
+        val buf = mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.getPath.getName.endsWith(".parquet")) buf += st
+        }
+        buf.toSeq
       }
-      buf.toSeq
-    }
-    DeltaTable.parMap(files) { st =>
-      val p = st.getPath
-      val rel = fs.makeQualified(p).toString.stripPrefix(stagingPrefix).stripPrefix("/")
-      val partitionValues = rel.split('/').dropRight(1).iterator
-        .filter(_.contains('='))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> (if (v == DeltaTable.HiveDefaultPartition) null
-                else DeltaTable.unescapePathName(v))
-        }.toMap
-      val dest = new Path(path, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(p, dest))
-        throw new RuntimeException(s"failed to move staged file $p -> $dest")
-      val stats = ParquetStats.forFile(fs, dest, parts.toSet, statsCols)
-      AddFile(
-        path = rel,
-        partitionValues = partitionValues,
-        size = st.getLen,
-        modificationTime = st.getModificationTime,
-        dataChange = true,
-        stats = stats)
-    }
+      DeltaTable.parMap(files) { st =>
+        val p = st.getPath
+        val sub = fs.makeQualified(p).toString.stripPrefix(stagingPrefix).stripPrefix("/")
+        val partitionValues = sub.split('/').dropRight(1).iterator
+          .filter(_.contains('='))
+          .map { seg =>
+            val Array(k, v) = seg.split("=", 2)
+            k -> (if (v == DeltaTable.HiveDefaultPartition) null
+                  else DeltaTable.unescapePathName(v))
+          }.toMap
+        val rel = if (cdc) s"_change_data/$sub" else sub
+        val dest = new Path(path, rel)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(p, dest))
+          throw new RuntimeException(s"failed to move staged file $p -> $dest")
+        moved.add(rel)
+        AddFile(
+          path = rel,
+          partitionValues = partitionValues,
+          size = st.getLen,
+          modificationTime = st.getModificationTime,
+          dataChange = true,
+          stats = if (cdc) None
+                  else ParquetStats.forFile(fs, dest, physParts.toSet, statsCols))
+      }
+    } catch { case e: Throwable =>
+      discard(moved.asScala.toSeq.map(new Path(path, _)))
+      throw e
+    } finally discard(Seq(staging))
   }
+
+  /** The one place files a commit would have referenced — and staging
+    * dirs — are deleted. Best effort with one retry: it runs on paths
+    * where another outcome (a lost race, the original error) must
+    * surface, and a leftover is only garbage — unreferenced data files
+    * wait for VACUUM; a `_staging-*` dir, which VACUUM never collects,
+    * is why a transient failure gets the second attempt. */
+  private def discard(paths: Seq[Path]): Unit = paths.foreach { p =>
+    def attempt(): Boolean =
+      try { fs.delete(p, true); true }
+      catch { case scala.util.control.NonFatal(_) => false }
+    if (!attempt()) attempt(): Unit
+  }
+
+  /** Commit files staged by [[stage]] (plus a DV file written for this
+    * commit) through [[DeltaLog.commitWith]] and decide their fate.
+    * `created` lists their table-relative paths. They are deleted only
+    * when the commit provably did not land:
+    *   - `check` rejected it (-1: an idempotent replay or a lost race —
+    *     the caller decides whether the latter throws);
+    *   - it threw something other than [[PostCommitFailure]], and no
+    *     version after `base` (a version this writer read before
+    *     committing) names any of them.
+    * Staged file names carry a UUID, so a version that names one proves
+    * this commit published even when the store reported the publish as
+    * failed; that surfaces as [[PostCommitFailure]] for the version. If
+    * the log cannot be re-read the files stay, for VACUUM, and the
+    * original error surfaces. */
+  private def commitStaged(base: Long, created: Seq[String],
+                           gen: Snapshot => Seq[Action],
+                           check: Snapshot => Boolean): Long = {
+    val committed =
+      try log.commitWith(gen, check)
+      catch {
+        case e: PostCommitFailure => throw e
+        case e: Throwable =>
+          val landed =
+            try landedVersion(base, created.toSet)
+            catch { case scala.util.control.NonFatal(_) => throw e }
+          landed.foreach(v => throw new PostCommitFailure(v, e))
+          discard(created.map(new Path(path, _)))
+          throw e
+      }
+    if (committed < 0) discard(created.map(new Path(path, _)))
+    committed
+  }
+
+  /** The first version after `base` whose data, change or DV file
+    * references name one of `created`. */
+  private def landedVersion(base: Long, created: Set[String]): Option[Long] =
+    (base + 1 to log.latestVersion()).find(v =>
+      log.readVersion(v).exists(a => a.cdc.exists(c => created(c.path)) ||
+        a.add.exists(f => created(f.path) || f.deletionVector.exists(d =>
+          d.storageType == "u" &&
+            created(DeletionVectors.relativeFileName(d.pathOrInlineDv))))))
+
+  /** Identity columns on non-append write paths: machine assignment
+    * lives in [[append]] only. DML that writes NEW row values (merge,
+    * overwrite) must provide every identity column explicitly — and the
+    * column must allow explicit inserts. The high-water mark does not
+    * advance here (Delta proper's answer is SYNC IDENTITY); ids a later
+    * append assigns remain collision-free only past the mark, so
+    * explicit DML values should stay within already-allocated ranges. */
+  private def requireIdentityProvided(source: DataFrame, op: String): Unit =
+    schema.fields.filter(_.metadata.contains(DeltaTable.IdentityStartKey)).foreach { f =>
+      require(source.columns.exists(_.equalsIgnoreCase(f.name)) &&
+        f.metadata.contains(DeltaTable.IdentityAllowExplicitKey) &&
+        f.metadata.getBoolean(DeltaTable.IdentityAllowExplicitKey),
+        s"$op on a table with identity column '${f.name}' requires the source " +
+          "to provide it and the column to allow explicit inserts " +
+          "(identityField(allowExplicitInsert = true)) — use append() for " +
+          "machine-assigned ids")
+    }
 
   /** Copy-on-write MERGE (upsert, the delta-rs merge shape for a
     * unique-key source: matched target rows take the source's values for
@@ -2743,24 +2793,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     *
     * Contract: source keys unique (two source rows with one key would
     * both insert). Returns the committed version. */
-  /** Identity columns on non-append write paths: machine assignment
-    * lives in [[append]] only. DML that writes NEW row values (merge,
-    * overwrite) must provide every identity column explicitly — and the
-    * column must allow explicit inserts. The high-water mark does not
-    * advance here (Delta proper's answer is SYNC IDENTITY); ids a later
-    * append assigns remain collision-free only past the mark, so
-    * explicit DML values should stay within already-allocated ranges. */
-  private def requireIdentityProvided(source: DataFrame, op: String): Unit =
-    schema.fields.filter(_.metadata.contains(DeltaTable.IdentityStartKey)).foreach { f =>
-      require(source.columns.exists(_.equalsIgnoreCase(f.name)) &&
-        f.metadata.contains(DeltaTable.IdentityAllowExplicitKey) &&
-        f.metadata.getBoolean(DeltaTable.IdentityAllowExplicitKey),
-        s"$op on a table with identity column '${f.name}' requires the source " +
-          "to provide it and the column to allow explicit inserts " +
-          "(identityField(allowExplicitInsert = true)) — use append() for " +
-          "machine-assigned ids")
-    }
-
   def merge(source: DataFrame, keyCols: Seq[String],
             txnAppId: Option[String] = None, txnVersion: Long = -1L): Long = {
     // merge rewrites matched rows unconditionally, so even an insert-only
@@ -3359,64 +3391,40 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     if (plan.isEmpty && inserts0.isEmpty) return -1L
 
     val newData = withConstraintChecks(updated.unionByName(inserts))
-    val (staging, adds) = stageWrite(newData)
-    try {
-      val cdf = if (!cdfEnabled) None else {
-        val plain = sch.fieldNames.toSeq
-        val actedPlain = rawFor(cand).join(srcRen, keyCols, "left_outer")
-          .withColumn("__act", act)
-        val pre = actedPlain.filter(inSet(updIdx)).select(plain.map(col): _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val post = actedPlain.filter(inSet(updIdx)).select(plain.map(updatedValue): _*)
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val dels = actedPlain.filter(inSet(delIdx)).select(plain.map(col): _*)
-          .withColumn(ChangeTypeCol, lit("delete"))
-        Some(pre.unionByName(post).unionByName(dels)
-          .unionByName(inserts0.withColumn(ChangeTypeCol, lit("insert"))))
-      }
-      val basePaths = snap.files.map(_.path).toSet
-      val txnActs = txnAppId.filter(_ => txnVersion >= 0)
-        .map(app => Action(txn = Some(Txn(app, txnVersion,
-          Some(System.currentTimeMillis()))))).toSeq
-      val committed = plan match {
-        case Some(pl) =>
-          // a zombie replay of an already-recorded (appId, version) batch
-          // must stay a QUIET skip even when it surfaces as a lost race
-          try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
-            cdf, "MERGE", Map("mode" -> "deletionVectors",
-              "predicateKeys" -> keyCols.mkString(","),
-              "clauses" -> clauses.map(_.getClass.getSimpleName).mkString(",")),
-            extraCheck = s => !txnApplied(s) &&
-              s.files.map(_.path).forall(basePaths.contains))
-          catch {
-            case _: java.util.ConcurrentModificationException
-              if txnApplied(snapshot) => -1L
-          }
-        case None =>
-          // insert-only outcome: no masks, just the new file + txn
-          val cdcActions = cdf.map(stageChangeFiles(_)).getOrElse(Nil)
-          var txnSkip = false
-          val c = log.commit(
-            adds.map(a => Action(add = Some(a))) ++ cdcActions ++ txnActs ++
-              Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
-                "MERGE", Map("mode" -> "deletionVectors"))))),
-            check = s => {
-              if (txnApplied(s)) { txnSkip = true; false }
-              else s.files.map(_.path).forall(basePaths.contains)
-            })
-          if (c < 0) {
-            adds.foreach(a => fs.delete(new Path(path, a.path), false))
-            cdcActions.foreach(_.cdc.foreach(cf =>
-              fs.delete(new Path(path, cf.path), false)))
-            if (!txnSkip)
-              throw new java.util.ConcurrentModificationException(
-                "MERGE (deletion vectors) lost a commit race: a concurrent " +
-                  "commit added files during this merge")
-          }
-          c
-      }
-      committed
-    } finally fs.delete(staging, true)
+    val adds = stageWrite(newData)
+    val cdf = if (!cdfEnabled) None else {
+      val plain = sch.fieldNames.toSeq
+      val actedPlain = rawFor(cand).join(srcRen, keyCols, "left_outer")
+        .withColumn("__act", act)
+      val pre = actedPlain.filter(inSet(updIdx)).select(plain.map(col): _*)
+        .withColumn(ChangeTypeCol, lit("update_preimage"))
+      val post = actedPlain.filter(inSet(updIdx)).select(plain.map(updatedValue): _*)
+        .withColumn(ChangeTypeCol, lit("update_postimage"))
+      val dels = actedPlain.filter(inSet(delIdx)).select(plain.map(col): _*)
+        .withColumn(ChangeTypeCol, lit("delete"))
+      Some(pre.unionByName(post).unionByName(dels)
+        .unionByName(inserts0.withColumn(ChangeTypeCol, lit("insert"))))
+    }
+    val basePaths = snap.files.map(_.path).toSet
+    val txnActs = txnAppId.filter(_ => txnVersion >= 0)
+      .map(app => Action(txn = Some(Txn(app, txnVersion,
+        Some(System.currentTimeMillis()))))).toSeq
+    plan match {
+      case Some(pl) =>
+        // a zombie replay of an already-recorded (appId, version) batch
+        // must stay a QUIET skip even when it surfaces as a lost race
+        try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
+          cdf, "MERGE", Map("mode" -> "deletionVectors",
+            "predicateKeys" -> keyCols.mkString(","),
+            "clauses" -> clauses.map(_.getClass.getSimpleName).mkString(",")),
+          extraCheck = s => !txnApplied(s) &&
+            s.files.map(_.path).forall(basePaths.contains))
+        catch {
+          case _: java.util.ConcurrentModificationException
+            if txnApplied(snapshot) => -1L
+        }
+      case None => commitInsertOnly(snap, adds, cdf, txnActs, txnApplied)
+    }
   }
 
   /** Copy-on-write DELETE (delta-rs `delete`): drop every row matching
@@ -3546,21 +3554,19 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     }.toSeq ++ (if (rowTrackingEnabled)
       Seq(col(DeltaTable.MaterializedRowIdCol)) else Nil)): _*)
     val checked = withConstraintChecks(rewritten)
-    val (staging, adds) = stageWrite(checked)
-    try {
-      val cdf = if (!cdfEnabled) None else {
-        val pre = rawFor(cand).filter(coalesce(predicate, lit(false)))
-          .select(sch.fieldNames.toSeq.map(col): _*)
-        val post = pre.select(sch.fields.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-        }.toSeq: _*)
-        Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-          .unionByName(post.withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage"))))
-      }
-      commitDvMask(snap, plan,
-        adds.map(a => Action(add = Some(a))), cdf, "UPDATE",
-        Map("mode" -> "deletionVectors"))
-    } finally fs.delete(staging, true)
+    val adds = stageWrite(checked)
+    val cdf = if (!cdfEnabled) None else {
+      val pre = rawFor(cand).filter(coalesce(predicate, lit(false)))
+        .select(sch.fieldNames.toSeq.map(col): _*)
+      val post = pre.select(sch.fields.map { f =>
+        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
+      }.toSeq: _*)
+      Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
+        .unionByName(post.withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage"))))
+    }
+    commitDvMask(snap, plan,
+      adds.map(a => Action(add = Some(a))), cdf, "UPDATE",
+      Map("mode" -> "deletionVectors"))
   }
 
   /** Merge-on-read MERGE (the DV sibling of [[merge]] — the CDC-apply
@@ -3630,62 +3636,61 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     val inserts = if (!rowTrackingEnabled) inserts0
       else inserts0.withColumn(DeltaTable.MaterializedRowIdCol, lit(null).cast("long"))
     val newData = withConstraintChecks(matched.unionByName(inserts))
-    val (staging, adds) = stageWrite(newData)
-    try {
-      val cdf = if (!cdfEnabled) None else {
-        val pre = rawFor(cand).join(srcKeys, keyCols, "left_semi")
-          .select(sch.fieldNames.toSeq.map(col): _*)
-        Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-          .unionByName(matched
-            .drop(DeltaTable.MaterializedRowIdCol)
-            .withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage")))
-          .unionByName(inserts0
-            .withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
-      }
-      val basePaths = snap.files.map(_.path).toSet
-      val txnActs = txnAppId.filter(_ => txnVersion >= 0)
-        .map(app => Action(txn = Some(Txn(app, txnVersion,
-          Some(System.currentTimeMillis()))))).toSeq
-      val committed = plan match {
-        case Some(pl) =>
-          // a zombie replay of an already-recorded (appId, version) batch
-          // must stay a QUIET skip even when it surfaces as a lost race
-          try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
-            cdf, "MERGE", Map("mode" -> "deletionVectors",
-              "predicateKeys" -> keyCols.mkString(",")),
-            extraCheck = s => !txnApplied(s) &&
-              s.files.map(_.path).forall(basePaths.contains))
-          catch {
-            case _: java.util.ConcurrentModificationException
-              if txnApplied(snapshot) => -1L
-          }
-        case None =>
-          // insert-only outcome: no masks, just the new file + txn — a
-          // lost race still throws (a concurrent add may hold a matched
-          // key); only an already-recorded txn batch skips quietly
-          val cdcActions = cdf.map(stageChangeFiles(_)).getOrElse(Nil)
-          var txnSkip = false
-          val c = log.commit(
-            adds.map(a => Action(add = Some(a))) ++ cdcActions ++ txnActs ++
-              Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
-                "MERGE", Map("mode" -> "deletionVectors"))))),
-            check = s => {
-              if (txnApplied(s)) { txnSkip = true; false }
-              else s.files.map(_.path).forall(basePaths.contains)
-            })
-          if (c < 0) {
-            adds.foreach(a => fs.delete(new Path(path, a.path), false))
-            cdcActions.foreach(_.cdc.foreach(cf =>
-              fs.delete(new Path(path, cf.path), false)))
-            if (!txnSkip)
-              throw new java.util.ConcurrentModificationException(
-                "MERGE (deletion vectors) lost a commit race: a concurrent " +
-                  "commit added files during this merge")
-          }
-          c
-      }
-      committed
-    } finally fs.delete(staging, true)
+    val adds = stageWrite(newData)
+    val cdf = if (!cdfEnabled) None else {
+      val pre = rawFor(cand).join(srcKeys, keyCols, "left_semi")
+        .select(sch.fieldNames.toSeq.map(col): _*)
+      Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
+        .unionByName(matched
+          .drop(DeltaTable.MaterializedRowIdCol)
+          .withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage")))
+        .unionByName(inserts0
+          .withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
+    }
+    val basePaths = snap.files.map(_.path).toSet
+    val txnActs = txnAppId.filter(_ => txnVersion >= 0)
+      .map(app => Action(txn = Some(Txn(app, txnVersion,
+        Some(System.currentTimeMillis()))))).toSeq
+    plan match {
+      case Some(pl) =>
+        // a zombie replay of an already-recorded (appId, version) batch
+        // must stay a QUIET skip even when it surfaces as a lost race
+        try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
+          cdf, "MERGE", Map("mode" -> "deletionVectors",
+            "predicateKeys" -> keyCols.mkString(",")),
+          extraCheck = s => !txnApplied(s) &&
+            s.files.map(_.path).forall(basePaths.contains))
+        catch {
+          case _: java.util.ConcurrentModificationException
+            if txnApplied(snapshot) => -1L
+        }
+      case None => commitInsertOnly(snap, adds, cdf, txnActs, txnApplied)
+    }
+  }
+
+  /** The insert-only outcome of a DV merge: no masks, just the new files
+    * + txn. A lost race still throws (a concurrent add may hold a matched
+    * key); only an already-recorded txn batch skips quietly. */
+  private def commitInsertOnly(snap: Snapshot, adds: Seq[AddFile],
+                               cdf: Option[DataFrame], txnActs: Seq[Action],
+                               txnApplied: Snapshot => Boolean): Long = {
+    val cdcActions = cdf.map(stageChangeFiles(_)).getOrElse(Nil)
+    val basePaths = snap.files.map(_.path).toSet
+    val actions = adds.map(a => Action(add = Some(a))) ++ cdcActions ++ txnActs ++
+      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
+        "MERGE", Map("mode" -> "deletionVectors")))))
+    var txnSkip = false
+    val c = commitStaged(snap.version,
+      adds.map(_.path) ++ cdcActions.flatMap(_.cdc).map(_.path), _ => actions,
+      s => {
+        if (txnApplied(s)) { txnSkip = true; false }
+        else s.files.map(_.path).forall(basePaths.contains)
+      })
+    if (c < 0 && !txnSkip)
+      throw new java.util.ConcurrentModificationException(
+        "MERGE (deletion vectors) lost a commit race: a concurrent " +
+          "commit added files during this merge")
+    c
   }
 
   private final case class DvPlanned(f: AddFile, bytes: Array[Byte], fullFile: Boolean)
@@ -3770,8 +3775,8 @@ final class DeltaTable(spark: SparkSession, val path: String) {
   /** Commit a [[planDvMask]] result plus any extra adds/change files:
     * removes precede the DV re-adds (ReplayState replays in order,
     * keyed by path); the lost-update guard requires every affected file
-    * live WITH the exact descriptor the mask merged from. Cleans staged
-    * cdc and the shared DV file on a lost race and throws. */
+    * live WITH the exact descriptor the mask merged from. A lost race
+    * discards the new data, change and DV files and throws. */
   private def commitDvMask(snap: Snapshot, plan: DvPlan, extraAdds: Seq[Action],
                            cdf: Option[DataFrame], operation: String,
                            params: Map[String, String],
@@ -3788,28 +3793,22 @@ final class DeltaTable(spark: SparkSession, val path: String) {
         extraAdds ++
         cdcActions ++
         Seq(Action(commitInfo = Some(CommitInfo(now, operation, params))))
+    val created = extraAdds.flatMap(_.add).map(_.path) ++
+      cdcActions.flatMap(_.cdc).map(_.path) ++
+      plan.bigDescs.map(d => DeletionVectors.relativeFileName(d.pathOrInlineDv)).distinct
     // the PROTOCOL regenerates per attempt: a fixed action built from the
     // base snapshot would clobber a feature a concurrent commit raised
     // while this one retried (the widenColumnType invariant)
-    val committed = log.commitWith(
+    val committed = commitStaged(snap.version, created,
       att => Action(protocol = Some(protocolWithDv(att))) +: rest,
-      check = s => {
+      s => {
         val live = s.files.map(f => f.path -> f.deletionVector).toMap
         expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
       })
-    if (committed < 0) {
-      cdcActions.foreach(_.cdc.foreach(c => fs.delete(new Path(path, c.path), false)))
-      // the freshly written shared DV file is unreferenced too, and so are
-      // the new-data files the caller already moved into the table dir —
-      // clean ALL of them before throwing (leaked orphans otherwise)
-      plan.bigDescs.map(d => DeletionVectors.relativeFileName(d.pathOrInlineDv))
-        .distinct.foreach(p => fs.delete(new Path(path, p), false))
-      extraAdds.flatMap(_.add).foreach(a =>
-        fs.delete(new Path(path, a.path), false))
+    if (committed < 0)
       throw new java.util.ConcurrentModificationException(
         s"$operation (deletion vectors) lost a commit race: an affected file " +
           "was rewritten or DV'd concurrently")
-    }
     committed
   }
 
@@ -3874,31 +3873,20 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     val snap = snapshot
     val dvd = snap.files.filter(_.deletionVector.isDefined)
     if (dvd.isEmpty) return -1L
-    val physParts = physicalPartNames(partitionColumns)
     // DV-applied read; on a row-tracking table the surviving rows carry
     // their materialized identity into the purged files
     val df = materializingRowIds(snap.copy(files = dvd))
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-    val writer = toPhysicalForWrite(df, schema).write
-      .mode("overwrite").option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer).parquet(staging.toString)
-    val adds = collectStagedFiles(staging, physParts)
-    try {
-      val expected = dvd.map(f => f.path -> f.deletionVector).toMap
-      val committed = log.commit(
-        dvd.map(f => Action(remove = Some(removeOf(f,
-          System.currentTimeMillis(), dataChange = false)))) ++
-          adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
-          Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
-            "OPTIMIZE", Map("operation" -> "purgeDeletionVectors"))))),
-        check = s => {
-          val live = s.files.map(f => f.path -> f.deletionVector).toMap
-          expected.forall { case (p, dv) => live.get(p).contains(dv) }
-        })
-      if (committed < 0)
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-      committed
-    } finally fs.delete(staging, true)
+    val adds = stage(toPhysicalForWrite(df, schema), physicalPartNames(partitionColumns))
+    val expected = dvd.map(f => f.path -> f.deletionVector).toMap
+    val actions = dvd.map(f => Action(remove = Some(removeOf(f,
+      System.currentTimeMillis(), dataChange = false)))) ++
+      adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
+      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
+        "OPTIMIZE", Map("operation" -> "purgeDeletionVectors")))))
+    commitStaged(snap.version, adds.map(_.path), _ => actions, s => {
+      val live = s.files.map(f => f.path -> f.deletionVector).toMap
+      expected.forall { case (p, dv) => live.get(p).contains(dv) }
+    })
   }
 
   /** Copy-on-write UPDATE (delta-rs `update`): for rows matching
@@ -4102,6 +4090,15 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     }
   }
 
+  /** Stage DML output rows with the DML write arrangement: partition
+    * values co-located, physical column names. */
+  private def stageWrite(newData: DataFrame,
+                         writeSchema: StructType = schema): Seq[AddFile] = {
+    val parts = partitionColumns
+    val arranged = if (parts.nonEmpty) newData.repartition(parts.map(col): _*) else newData
+    stage(toPhysicalForWrite(arranged, writeSchema), physicalPartNames(parts))
+  }
+
   /** Stage `newData`, then atomically commit it as adds plus `affected`
     * as removes — the shared copy-on-write tail of [[merge]], [[delete]]
     * and [[update]]. A failed commit check is a LOST RACE, not a no-op:
@@ -4109,24 +4106,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * thrown, so callers can never mistake an unapplied DML for "nothing
     * matched" (compact stays quiet on races — skipping an optimization
     * is safe; skipping a DML is not). */
-  /** Stage a new-data frame exactly like append's write path (partition
-    * co-location, physical names, snappy) and move the files into the
-    * table dir, returning (staging dir to delete in the caller's
-    * finally, collected adds). ONE copy of this recipe — three
-    * hand-rolled copies diverged on error-path cleanup (review). */
-  private def stageWrite(newData: DataFrame,
-                         writeSchema: StructType = schema): (Path, Seq[AddFile]) = {
-    val parts = partitionColumns
-    val physParts = physicalPartNames(parts)
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-    val arranged = if (parts.nonEmpty) newData.repartition(parts.map(col): _*) else newData
-    val writer = toPhysicalForWrite(arranged, writeSchema).write
-      .mode("overwrite").option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(staging.toString)
-    (staging, collectStagedFiles(staging, physParts))
-  }
-
   private def commitRewrite(affected: Seq[AddFile], newData: DataFrame,
                             operation: String,
                             params: Map[String, String] = Map.empty,
@@ -4143,48 +4122,43 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     // and its restart can't both land
     def txnApplied(s: Snapshot): Boolean = txn.exists { case (app, v) =>
       s.txns.getOrElse(app, -1L) >= v }
-    if (txnApplied(snapshot)) return -1L
-    val (staging, adds) = stageWrite(newData, writeSchema)
+    val base = snapshot
+    if (txnApplied(base)) return -1L
+    val adds = stageWrite(newData, writeSchema)
     val cdcActions = changes.map(stageChangeFiles(_, writeSchema)).getOrElse(Nil)
-    try {
-      // a file is "still ours" only with the same path AND the same DV
-      // descriptor — a concurrent DV delete keeps the path live while
-      // changing the logical content this rewrite was computed from
-      val expected = affected.map(f => f.path -> f.deletionVector).toMap
-      var txnSkip = false
-      val committed = log.commit(
-        extraActions ++
-          adds.map(a => Action(add = Some(a))) ++
-          cdcActions ++
-          affected.map(f => Action(remove = Some(removeOf(f,
-            System.currentTimeMillis())))) ++
-          txn.map { case (app, v) => Action(txn = Some(Txn(app, v,
-            Some(System.currentTimeMillis())))) }.toSeq ++
-          Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), operation, params,
-            operationMetrics = Some(Map(
-              "numAddedFiles" -> adds.size.toString,
-              "numRemovedFiles" -> affected.size.toString,
-              "numAddedChangeFiles" -> cdcActions.size.toString,
-              "numAddedBytes" -> adds.map(_.size).sum.toString)))))),
-        check = s => {
-          if (txnApplied(s)) { txnSkip = true; false }
-          else {
-            val live = s.files.map(f => f.path -> f.deletionVector).toMap
-            expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
-          }
-        })
-      if (committed < 0) {
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-        cdcActions.foreach(_.cdc.foreach(c =>
-          fs.delete(new Path(path, c.path), false)))
-        // losing to the SAME txn batch is the documented idempotent
-        // replay; losing to a concurrent rewrite is a race
-        if (!txnSkip)
-          throw new java.util.ConcurrentModificationException(
-            s"$operation lost a commit race: $conflictHint")
-      }
-      committed
-    } finally fs.delete(staging, true)
+    // a file is "still ours" only with the same path AND the same DV
+    // descriptor — a concurrent DV delete keeps the path live while
+    // changing the logical content this rewrite was computed from
+    val expected = affected.map(f => f.path -> f.deletionVector).toMap
+    val actions = extraActions ++
+      adds.map(a => Action(add = Some(a))) ++
+      cdcActions ++
+      affected.map(f => Action(remove = Some(removeOf(f,
+        System.currentTimeMillis())))) ++
+      txn.map { case (app, v) => Action(txn = Some(Txn(app, v,
+        Some(System.currentTimeMillis())))) }.toSeq ++
+      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), operation, params,
+        operationMetrics = Some(Map(
+          "numAddedFiles" -> adds.size.toString,
+          "numRemovedFiles" -> affected.size.toString,
+          "numAddedChangeFiles" -> cdcActions.size.toString,
+          "numAddedBytes" -> adds.map(_.size).sum.toString))))))
+    var txnSkip = false
+    val committed = commitStaged(base.version,
+      adds.map(_.path) ++ cdcActions.flatMap(_.cdc).map(_.path), _ => actions,
+      s => {
+        if (txnApplied(s)) { txnSkip = true; false }
+        else {
+          val live = s.files.map(f => f.path -> f.deletionVector).toMap
+          expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
+        }
+      })
+    // losing to the SAME txn batch is the documented idempotent replay;
+    // losing to a concurrent rewrite is a race
+    if (committed < 0 && !txnSkip)
+      throw new java.util.ConcurrentModificationException(
+        s"$operation lost a commit race: $conflictHint")
+    committed
   }
 
   /** Write a DML commit's change rows (table columns + `_change_type`)
@@ -4196,44 +4170,14 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * unpartitioned tables write flat. The reader lists paths from the
     * commit JSON, never the directory layout, and still accepts legacy
     * FLAT change files (empty partitionValues, partition columns
-    * inline). */
+    * inline). Change files carry PHYSICAL column names like data files
+    * (the `_change_type` column is not in the schema and passes
+    * through). */
   private def stageChangeFiles(changes: DataFrame,
-                               writeSchema: StructType = schema): Seq[Action] = {
-    val staging = new Path(path, s"_staging-cdc-${java.util.UUID.randomUUID()}")
-    val physParts = physicalPartNames(partitionColumns)
-    try {
-      // change files carry PHYSICAL column names like data files (the
-      // `_change_type` column is not in the schema and passes through)
-      val writer = toPhysicalForWrite(changes, writeSchema).write
-        .mode("overwrite").option("compression", tableCodec)
-      (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-        .parquet(staging.toString)
-      val stagingPrefix = fs.makeQualified(staging).toString
-      val it = fs.listFiles(staging, true)
-      val buf = mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st
-      }
-      buf.toSeq.map { st =>
-        val sub = fs.makeQualified(st.getPath).toString
-          .stripPrefix(stagingPrefix).stripPrefix("/")
-        val partitionValues = sub.split('/').dropRight(1).iterator
-          .filter(_.contains('='))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> (if (v == DeltaTable.HiveDefaultPartition) null
-                  else DeltaTable.unescapePathName(v))
-          }.toMap
-        val rel = s"_change_data/$sub"
-        val dest = new Path(path, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new RuntimeException(s"failed to move change file ${st.getPath} -> $dest")
-        Action(cdc = Some(Actions.AddCDCFile(rel, partitionValues, st.getLen)))
-      }
-    } finally fs.delete(staging, true)
-  }
+                               writeSchema: StructType = schema): Seq[Action] =
+    stage(toPhysicalForWrite(changes, writeSchema), physicalPartNames(partitionColumns),
+      cdc = true)
+      .map(f => Action(cdc = Some(Actions.AddCDCFile(f.path, f.partitionValues, f.size))))
 
   /** True when `delta.enableChangeDataFeed=true` in the table
     * configuration: every delete/update/merge then captures its change
@@ -5954,59 +5898,33 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       .repartitionByRange(n, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .drop("__zv")
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-    val physParts = physicalPartNames(parts)
-    val writer = toPhysicalForWrite(sorted, schema).write
-      .mode("overwrite").option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer).parquet(staging.toString)
-    val adds = collectStagedFiles(staging, physParts)
+    val adds = stage(toPhysicalForWrite(sorted, schema), physicalPartNames(parts))
     // one fresh cube id per run: every output file of this rewrite is
     // one cluster unit for later incremental candidate selection
     val cubeTags = Some(Map(
       DeltaTable.ZCubeIdTag -> java.util.UUID.randomUUID().toString,
       DeltaTable.ZCubeColsTag -> colsJson,
       DeltaTable.ZCubeCurveTag -> curve))
-    try {
-      val expected = snap.files.map(f => f.path -> f.deletionVector).toMap
-      val committed = log.commit(
-        adds.map(a => Action(add = Some(a.copy(dataChange = false, tags = cubeTags)))) ++
-          snap.files.map(f => Action(remove = Some(removeOf(f,
-            System.currentTimeMillis(), dataChange = false)))) ++
-          Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
-            operationMetrics = Some(Map(
-              "numAddedFiles" -> adds.size.toString,
-              "numRemovedFiles" -> snap.files.size.toString,
-              "numAddedBytes" -> adds.map(_.size).sum.toString,
-              "numRemovedBytes" -> snap.files.map(_.size).sum.toString)))))),
-        // path-AND-descriptor guard: a concurrent DV delete keeps paths
-        // live while changing logical content — clobbering it would
-        // resurrect its deleted rows
-        check = s => {
-          val live = s.files.map(f => f.path -> f.deletionVector).toMap
-          expected.forall { case (p, dv) => live.get(p).contains(dv) }
-        })
-      if (committed < 0)
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-      committed
-    } finally fs.delete(staging, true)
+    val expected = snap.files.map(f => f.path -> f.deletionVector).toMap
+    val actions =
+      adds.map(a => Action(add = Some(a.copy(dataChange = false, tags = cubeTags)))) ++
+        snap.files.map(f => Action(remove = Some(removeOf(f,
+          System.currentTimeMillis(), dataChange = false)))) ++
+        Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
+          operationMetrics = Some(Map(
+            "numAddedFiles" -> adds.size.toString,
+            "numRemovedFiles" -> snap.files.size.toString,
+            "numAddedBytes" -> adds.map(_.size).sum.toString,
+            "numRemovedBytes" -> snap.files.map(_.size).sum.toString))))))
+    // path-AND-descriptor guard: a concurrent DV delete keeps paths live
+    // while changing logical content — clobbering it would resurrect its
+    // deleted rows
+    commitStaged(snap0.version, adds.map(_.path), _ => actions, s => {
+      val live = s.files.map(f => f.path -> f.deletionVector).toMap
+      expected.forall { case (p, dv) => live.get(p).contains(dv) }
+    })
   }
 
-  /** Small-file compaction (the reference's min_bytes_per_file lever, B3,
-    * re-expressed as OPTIMIZE): rewrite files below `minBytes` per partition
-    * into bin-packed ~target-size ones; commits add+remove with
-    * dataChange=false.
-    *
-    * Output sizing: files greedily pack into bins of
-    * `max(minBytes, delta.targetFileSize)` bytes per PARTITION (exact
-    * `add.size` values, driver-side — the file list is log metadata).
-    * The max keeps compaction CONVERGENT: with one input per bin
-    * excepted, outputs land at or above `minBytes`, so a re-run never
-    * re-selects what a pass just wrote. Rows route to their bin by
-    * source file name (UUID-unique within a table) and one
-    * range-partition task writes ≈ one bin — a 100 TB streaming table's
-    * small-file debt compacts into target-size files with one shuffle of
-    * ONLY the small bytes, instead of funneling through the single
-    * output task a coalesce(1) would schedule. */
   /** The bin-routing frame [[compact]] shuffles: each row tagged with
     * its bin through a BROADCAST fileKey→bin probe inside the scan stage
     * (the FileLongValue shape the DV/row-id reads use) — never a
@@ -6047,6 +5965,22 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     m.toMap
   }
 
+  /** Small-file compaction (the reference's min_bytes_per_file lever, B3,
+    * re-expressed as OPTIMIZE): rewrite files below `minBytes` per partition
+    * into bin-packed ~target-size ones; commits add+remove with
+    * dataChange=false.
+    *
+    * Output sizing: files greedily pack into bins of
+    * `max(minBytes, delta.targetFileSize)` bytes per PARTITION (exact
+    * `add.size` values, driver-side — the file list is log metadata).
+    * The max keeps compaction CONVERGENT: with one input per bin
+    * excepted, outputs land at or above `minBytes`, so a re-run never
+    * re-selects what a pass just wrote. Rows route to their bin by
+    * source file name (UUID-unique within a table) and one
+    * range-partition task writes ≈ one bin — a 100 TB streaming table's
+    * small-file debt compacts into target-size files with one shuffle of
+    * ONLY the small bytes, instead of funneling through the single
+    * output task a coalesce(1) would schedule. */
   def compact(minBytes: Long = 128L * 1024 * 1024,
               where: Option[org.apache.spark.sql.Column] = None): Long = {
     val snap = snapshot
@@ -6072,36 +6006,26 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     // columns) — an inferred read crashes after schema evolution
     val df0 = materializingRowIds(snap.copy(files = small))
     val df = binRoutedFrame(snap, df0, binOf, totalBins)
-    val staging = new Path(path, s"_staging-${java.util.UUID.randomUUID()}")
-    val physParts = physicalPartNames(parts)
-    val writer = toPhysicalForWrite(df, schema).write
-      .mode("overwrite").option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer).parquet(staging.toString)
-    val adds = collectStagedFiles(staging, physParts)
-    try {
-      val expected = small.map(f => f.path -> f.deletionVector).toMap
-      val committed = log.commit(
-        adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
-          small.map(f => Action(remove = Some(removeOf(f,
-            System.currentTimeMillis(), dataChange = false)))) ++
-          Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
-            operationMetrics = Some(Map(
-              "numAddedFiles" -> adds.size.toString,
-              "numRemovedFiles" -> small.size.toString,
-              "numAddedBytes" -> adds.map(_.size).sum.toString,
-              "numRemovedBytes" -> small.map(_.size).sum.toString)))))),
-        // concurrency guard: if ANY of the files this rewrite is based on
-        // is no longer live — or now carries a different DV descriptor (a
-        // concurrent compaction, vacuum, or DV delete got there first) —
-        // committing our adds would duplicate or resurrect rows; abort
-        // instead (the retry re-runs this check on the new snapshot)
-        check = s => {
-          val live = s.files.map(f => f.path -> f.deletionVector).toMap
-          expected.forall { case (p, dv) => live.get(p).contains(dv) }
-        })
-      if (committed < 0)
-        adds.foreach(a => fs.delete(new Path(path, a.path), false))
-      committed
-    } finally fs.delete(staging, true)
+    val adds = stage(toPhysicalForWrite(df, schema), physicalPartNames(parts))
+    val expected = small.map(f => f.path -> f.deletionVector).toMap
+    val actions =
+      adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
+        small.map(f => Action(remove = Some(removeOf(f,
+          System.currentTimeMillis(), dataChange = false)))) ++
+        Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
+          operationMetrics = Some(Map(
+            "numAddedFiles" -> adds.size.toString,
+            "numRemovedFiles" -> small.size.toString,
+            "numAddedBytes" -> adds.map(_.size).sum.toString,
+            "numRemovedBytes" -> small.map(_.size).sum.toString))))))
+    // concurrency guard: if ANY of the files this rewrite is based on is
+    // no longer live — or now carries a different DV descriptor (a
+    // concurrent compaction, vacuum, or DV delete got there first) —
+    // committing our adds would duplicate or resurrect rows; abort
+    // instead (the retry re-runs this check on the new snapshot)
+    commitStaged(snap.version, adds.map(_.path), _ => actions, s => {
+      val live = s.files.map(f => f.path -> f.deletionVector).toMap
+      expected.forall { case (p, dv) => live.get(p).contains(dv) }
+    })
   }
 }

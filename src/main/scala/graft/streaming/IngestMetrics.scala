@@ -73,7 +73,7 @@ object IngestMetrics {
   /** Emit per-batch counters from the Observation row collected during the
     * Delta write (keys: messages, deser_failed, transform_failed, bytes). */
   def emitBatch(sink: MetricsSink, observed: Map[String, Any],
-                writeMillis: Long, failed: Boolean): Unit = {
+                writeMillis: Long): Unit = {
     def n(key: String): Long = observed.get(key) match {
       case Some(v: Long) => v
       case Some(v: Number) => v.longValue()
@@ -91,7 +91,7 @@ object IngestMetrics {
     sink.counter(RecordBatchCompleted)
     sink.timer(RecordBatchWriteDuration, writeMillis)
     sink.counter(DeltaWriteStarted)
-    if (failed) sink.counter(DeltaWriteFailed) else sink.counter(DeltaWriteCompleted)
+    sink.counter(DeltaWriteCompleted)
     sink.timer(DeltaWriteDuration, writeMillis)
   }
 }

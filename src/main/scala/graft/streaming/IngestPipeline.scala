@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.coercions.Coercions
-import graft.delta.DeltaTable
+import graft.delta.{DeltaTable, PostCommitFailure}
 import graft.serialization.Decoders
 import graft.transforms.{JmesPath, KafkaMeta, Transformer}
 
@@ -245,15 +245,20 @@ object IngestPipeline {
     else staged0
     val (ok, dead) = PipelineStages.split(staged)
     val t0 = System.nanoTime()
-    val committed =
-      try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
-      catch { case e: Throwable => opts.metricsSink.foreach(
-        _.counter(IngestMetrics.DeltaWriteFailed)); throw e }
-    val ms = (System.nanoTime() - t0) / 1000000L
     // obs.get blocks until the write job fires it; safe only when the
     // append actually committed (an idempotent skip may run no job)
-    if (committed >= 0)
-      opts.metricsSink.foreach(s => IngestMetrics.emitBatch(s, obs.get, ms, failed = false))
+    def landed(): Unit = opts.metricsSink.foreach(s =>
+      IngestMetrics.emitBatch(s, obs.get, (System.nanoTime() - t0) / 1000000L))
+    val committed =
+      try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
+      catch {
+        // the version is durable and the batch landed; only post-commit
+        // work failed, so this is not a failed write
+        case e: PostCommitFailure => landed(); throw e
+        case e: Throwable =>
+          opts.metricsSink.foreach(_.counter(IngestMetrics.DeltaWriteFailed)); throw e
+      }
+    if (committed >= 0) landed()
     dlq.write(dead, batchId)
     if (committed >= 0) opts.minBytesPerFile.foreach(table.compact(_): Unit)
   }

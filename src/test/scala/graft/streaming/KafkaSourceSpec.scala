@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
-import graft.delta.DeltaTable
+import graft.delta.{DeltaTable, PostCommitFailure}
 
 /** Kafka option assembly (S1/S4/B2, broker-free) and the metrics surface
   * (M1): reference counter names fed from the observed batch aggregates.
@@ -135,5 +135,31 @@ class KafkaSourceSpec extends SparkSpec {
     assert(sink.counters("delta.write.completed") === 1L)
     assert(sink.counters("delta.write.failed") === 0L)
     assert(sink.timers.exists(_._1 == "delta.write.duration"))
+  }
+
+  test("metrics: delta.write.failed counts only batches that did not land") {
+    val schema = StructType(Seq(StructField("id", LongType)))
+    def batch(ids: Long*) = ids.map(i => (i, s"""{"id": $i}""")).toDF("offset", "value")
+      .select(col("value"), lit(0).as("partition"), col("offset"),
+        lit("t").as("topic"), lit(0L).as("timestamp"), lit(0).as("timestampType"))
+    // the version is durable and only its post-commit hook fails: written
+    val landed = DeltaTable.forPath(spark, tmpDir("metrics-hook")).create(schema)
+    landed.log.onPostCommit((_, _, _) => throw new IllegalStateException("hook down"))
+    val hookSink = new RecordingMetricsSink
+    intercept[PostCommitFailure](IngestPipeline.processBatch(batch(1L, 2L), 0L, landed,
+      NoopDeadLetterSink, IngestOptions(appId = "m", metricsSink = Some(hookSink))))
+    assert(landed.snapshot.version === 1L)
+    assert(hookSink.counters("delta.write.completed") === 1L)
+    assert(hookSink.counters("delta.write.failed") === 0L)
+    assert(hookSink.counters("messages.deserialization.completed") === 2L)
+    // a CHECK violation aborts the staged write: nothing lands
+    val refused = DeltaTable.forPath(spark, tmpDir("metrics-check")).create(schema,
+      configuration = Map(DeltaTable.ConstraintPrefix + "positive" -> "id > 0"))
+    val failSink = new RecordingMetricsSink
+    intercept[Exception](IngestPipeline.processBatch(batch(0L), 0L, refused,
+      NoopDeadLetterSink, IngestOptions(appId = "m", metricsSink = Some(failSink))))
+    assert(refused.snapshot.version === 0L)
+    assert(failSink.counters("delta.write.failed") === 1L)
+    assert(failSink.counters("delta.write.completed") === 0L)
   }
 }
