@@ -16,8 +16,12 @@ import org.apache.spark.sql.types._
   *     timestamp; RFC-3339 *strings* become epoch-µs; non-RFC-3339 strings
   *     are left alone (and the row subsequently dead-letters); JSON *numbers*
   *     pass through as already-µs.
-  * `parse_json` keeps the original types; one parse per message, then cheap
-  * binary sub-access per field (codegen'd, no UDFs on the hot path).
+  * `parse_json` keeps the original types, then cheap binary sub-access per
+  * field (codegen'd, no UDFs on the hot path). Every field's value and
+  * error reads the one parsed column, so a consumer that filters on the
+  * errors re-parses the message once per field unless the filter sits
+  * above a node the optimizer cannot push it through (ingest's
+  * `PipelineStages.split` observation: one parse per message).
   */
 object Coercions {
 

@@ -58,28 +58,6 @@ object KeyedCheckpoint {
       n, partitionKeys, sortKeys)
   }
 
-  /** Checkpoint a frame the CALLER already materialized in the declared
-    * layout — for plans whose last exchange is an explicit
-    * `repartition(numShufflePartitions, partitionKeys)` followed only by
-    * partitioning-preserving operators whose physical output order is
-    * `sortKeys` (e.g. a window over the same keys). Skips the extra
-    * exchange+sort [[apply]] would pay. The caller's claim is load-
-    * bearing: a wrong declaration silently corrupts downstream joins —
-    * every caller must be covered by an exact-result gate. */
-  def declaredLayout(df: DataFrame, partitionKeys: Seq[String],
-                     sortKeys: Seq[String]): DataFrame = {
-    require(sortKeys.startsWith(partitionKeys),
-      s"sortKeys $sortKeys must extend partitionKeys $partitionKeys")
-    val cs = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val n = cs.sessionState.conf.numShufflePartitions
-    val cp = df.localCheckpoint()
-    require(cp.rdd.getNumPartitions == n,
-      s"declaredLayout: materialized partition count ${cp.rdd.getNumPartitions}" +
-        s" != numShufflePartitions $n — the claimed explicit-N repartition" +
-        " is not the frame's layout")
-    declare(cp, n, partitionKeys, sortKeys)
-  }
-
   private def declare(cp: DataFrame, n: Int, partitionKeys: Seq[String],
                       sortKeys: Seq[String]): DataFrame = {
     val cs = cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

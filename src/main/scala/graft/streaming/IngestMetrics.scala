@@ -9,6 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * the same counter/timer/gauge names, fed from Spark-native signals —
   * `Observation` aggregates piggybacked on the batch write (zero extra
   * jobs) and `StreamingQueryListener` progress events for consumer lag.
+  * Every batch carries the observation, sink or not: it is also the
+  * barrier that keeps the ok/dead split above the staged frame
+  * (`PipelineStages.split`); only reading it waits for a sink.
   */
 trait MetricsSink {
   def counter(name: String, value: Long = 1L): Unit
@@ -71,7 +74,8 @@ object IngestMetrics {
   val BufferLagMin = "buffer.lag.min"
 
   /** Emit per-batch counters from the Observation row collected during the
-    * Delta write (keys: messages, deser_failed, transform_failed, bytes). */
+    * Delta write (keys: messages, deser_failed, transform_failed, bytes —
+    * the aggregates `PipelineStages.split` observes). */
   def emitBatch(sink: MetricsSink, observed: Map[String, Any],
                 writeMillis: Long): Unit = {
     def n(key: String): Long = observed.get(key) match {

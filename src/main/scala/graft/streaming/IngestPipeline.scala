@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StreamBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -93,7 +94,7 @@ object PipelineStages {
 
     // coercion of the raw message to the table schema
     val (msg, errs) = Coercions.coerceMessage(col("_v"), schema)
-    val coerced = withVar.withColumn("msg", msg).withColumn("_errs0", errs)
+    val coerced = withVar.withColumn("msg", msg).withColumn("errs", errs)
 
     // transforms (pre-coercion sources: raw variant + kafka meta), outputs
     // written into the typed msg struct at their target paths
@@ -113,10 +114,7 @@ object PipelineStages {
       acc.withColumn("msg", col("msg").withField(target, coalesce(coercedOut, existing)))
     }
 
-    transformed
-      .withColumn("errs", col("_errs0"))
-      .withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
-      .drop("_errs0")
+    transformed.withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
   }
 
   private def fieldAt(root: Column, path: String): Column =
@@ -153,11 +151,27 @@ object PipelineStages {
     }
   }
 
-  /** Split a staged frame into (ok, deadLetters): ok rows have clean decode
-    * and no coercion errors; dead rows carry the reference DeadLetter shape
-    * (E2 deserialization failure → base64 bytes; E3/E4 transform/coercion
-    * failure → json text + error). */
-  def split(staged: DataFrame): (DataFrame, DataFrame) = {
+  /** Stage a batch and split it into (observation, ok, deadLetters): ok rows
+    * have clean decode and no coercion errors; dead rows carry the
+    * reference DeadLetter shape (E2 deserialization failure → base64
+    * bytes; E3/E4 transform/coercion failure → json text + error).
+    *
+    * The observation (the M1 counters [[IngestMetrics.emitBatch]] reads)
+    * is also the evaluation barrier. The optimizer never pushes a filter
+    * below an observed aggregate, since that would change what it counts,
+    * so both filters read the staged columns and each job decodes and
+    * coerces a message once. Without it, PushPredicateThroughNonJoin
+    * moves the filters onto the scan and inlines every staged alias: each
+    * written plan of the web_requests fixture carried `parseJson` 30 times.
+    * Every consumer of the staged frame must read it above this node. */
+  def split(batch: DataFrame, schema: StructType,
+            opts: IngestOptions): (Observation, DataFrame, DataFrame) = {
+    val obs = Observation()
+    val staged = apply(batch, schema, opts).observe(obs,
+      count(lit(1)).as("messages"),
+      count(when(col("decode_failed"), lit(1))).as("deser_failed"),
+      count(when(!col("decode_failed") && size(col("errs")) > 0, lit(1))).as("transform_failed"),
+      coalesce(sum(octet_length(col("value").cast(BinaryType))), lit(0L)).as("bytes"))
     val okRows = staged.filter(!col("decode_failed") && size(col("errs")) === 0)
       .select(col("msg.*"))
     val dead = staged.filter(col("decode_failed") || size(col("errs")) > 0)
@@ -167,7 +181,7 @@ object PipelineStages {
         when(col("decode_failed"), lit("deserialization failed"))
           .otherwise(concat_ws("; ", col("errs"))).as("error"),
         current_timestamp().as("timestamp"))
-    (okRows, dead)
+    (obs, okRows, dead)
   }
 }
 
@@ -230,37 +244,30 @@ object IngestPipeline {
     * (/root/reference/src/writer.rs:370-387). */
   def processBatch(batch: DataFrame, batchId: Long, table: DeltaTable,
                    dlq: DeadLetterSink, opts: IngestOptions): Unit = {
-    val schema = table.schema // current snapshot's schema, not start-time's
-    val staged0 = PipelineStages(batch, schema, opts)
-    // M1 counters ride the write job as observed aggregates (zero extra
-    // jobs): the observation node sits above the staged frame, BEFORE the
-    // ok/dead split filters, so it sees every message once.
-    val obs = org.apache.spark.sql.Observation()
-    val staged = if (opts.metricsSink.isDefined)
-      staged0.observe(obs,
-        count(lit(1)).as("messages"),
-        count(when(col("decode_failed"), lit(1))).as("deser_failed"),
-        count(when(!col("decode_failed") && size(col("errs")) > 0, lit(1))).as("transform_failed"),
-        coalesce(sum(octet_length(col("value").cast(BinaryType))), lit(0L)).as("bytes"))
-    else staged0
-    val (ok, dead) = PipelineStages.split(staged)
+    // current snapshot's schema, not start-time's. The observation is
+    // attached on every batch, sink or not: it is the node that keeps the
+    // ok and dead filters above the staged frame (see split), and the M1
+    // counters ride the write job as its aggregates (zero extra jobs).
+    val (obs, ok, dead) = PipelineStages.split(batch, table.schema, opts)
     val t0 = System.nanoTime()
     // obs.get blocks until the write job fires it; safe only when the
     // append actually committed (an idempotent skip may run no job)
     def landed(): Unit = opts.metricsSink.foreach(s =>
       IngestMetrics.emitBatch(s, obs.get, (System.nanoTime() - t0) / 1000000L))
-    val committed =
-      try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
-      catch {
-        // the version is durable and the batch landed; only post-commit
-        // work failed, so this is not a failed write
-        case e: PostCommitFailure => landed(); throw e
-        case e: Throwable =>
-          opts.metricsSink.foreach(_.counter(IngestMetrics.DeltaWriteFailed)); throw e
-      }
-    if (committed >= 0) landed()
-    dlq.write(dead, batchId)
-    if (committed >= 0) opts.minBytesPerFile.foreach(table.compact(_): Unit)
+    try {
+      val committed =
+        try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
+        catch {
+          // the version is durable and the batch landed; only post-commit
+          // work failed, so this is not a failed write
+          case e: PostCommitFailure => landed(); throw e
+          case e: Throwable =>
+            opts.metricsSink.foreach(_.counter(IngestMetrics.DeltaWriteFailed)); throw e
+        }
+      if (committed >= 0) landed()
+      dlq.write(dead, batchId)
+      if (committed >= 0) opts.minBytesPerFile.foreach(table.compact(_): Unit)
+    } finally StreamBridge.forget(batch.sparkSession, obs)
   }
 
   /** Flagship batch-mode run (SURVEY §7.3, the reference's canonical
@@ -271,13 +278,13 @@ object IngestPipeline {
     val events = graft.Tables.events(spark, sfDir)
     // A real Kafka topic spreads messages across partitions, and Spark's
     // Kafka source maps partitions → tasks; the single small parquet file
-    // behind this simulation collapses to ONE input split. Worse, the
-    // ok/dead split filter (which embeds the whole decode+coerce tree)
-    // pushes below any repartition right onto that scan, serializing the
-    // message path on one core (measured 5.4 s vs 1.2 s at sf0.1). The
-    // localCheckpoint below is the "this is a source" lineage barrier: it
-    // materializes the messages across one partition per core, exactly the
-    // shape a Kafka micro-batch arrives in.
+    // behind this simulation collapses to ONE input split. Read as is, it
+    // runs the staged projection (decode+transform+coerce) in one task,
+    // serializing the message path on one core (measured 5.4 s vs 1.2 s
+    // at sf0.1). The localCheckpoint below is the "this is a source"
+    // lineage barrier: it materializes the messages across one partition
+    // per core, exactly the shape a Kafka micro-batch arrives in, so the
+    // scan that builds them is not part of the ingest jobs.
     val kafkaParallelism = spark.sparkContext.defaultParallelism
     val kafkaShaped0 = events.select(
       to_json(struct(

@@ -52,6 +52,19 @@ object StreamBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Unregister an Observation whose frame may never run. Spark's
+    * ObservationManager forgets one only when a job computing it
+    * succeeds, so one whose writes were all skipped (an idempotent
+    * replay) would stay registered with the session for its lifetime.
+    * A no-op once a job has fired it. */
+  def forget(spark: SparkSession, obs: org.apache.spark.sql.Observation): Unit = {
+    val f = classOf[org.apache.spark.sql.classic.ObservationManager]
+      .getDeclaredField("observations")
+    f.setAccessible(true)
+    f.get(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].observationManager)
+      .asInstanceOf[java.util.Map[_, _]].values.remove(obs): Unit
+  }
+
   /** An empty STREAMING batch of `schema` (a trigger that found no new
     * data must still return a streaming-tagged frame). */
   def emptyStreaming(spark: SparkSession, schema: StructType): DataFrame = {
