@@ -299,26 +299,34 @@ object DeletionVectors {
     val uuid = java.util.UUID.randomUUID()
     val encoded = encodeUuid(uuid)
     val rel = relativeFileName(encoded)
-    val out = fs.create(new Path(tablePath, rel), false)
+    val file = new Path(tablePath, rel)
+    val out = fs.create(file, false)
     val descs = scala.collection.mutable.ArrayBuffer.empty[Actions.DeletionVectorDescriptor]
     try {
-      out.writeByte(FileFormatVersion.toInt)
-      var offset = 1
-      bitmaps.foreach { b =>
-        val crc = new CRC32()
-        crc.update(b)
-        out.writeInt(b.length)
-        out.write(b)
-        out.writeInt(crc.getValue.toInt)
-        descs += Actions.DeletionVectorDescriptor(
-          storageType = "u",
-          pathOrInlineDv = encoded,
-          offset = Some(offset),
-          sizeInBytes = b.length,
-          cardinality = deserializedCardinality(b))
-        offset += 4 + b.length + 4
-      }
-    } finally out.close()
+      try {
+        out.writeByte(FileFormatVersion.toInt)
+        var offset = 1
+        bitmaps.foreach { b =>
+          val crc = new CRC32()
+          crc.update(b)
+          out.writeInt(b.length)
+          out.write(b)
+          out.writeInt(crc.getValue.toInt)
+          descs += Actions.DeletionVectorDescriptor(
+            storageType = "u",
+            pathOrInlineDv = encoded,
+            offset = Some(offset),
+            sizeInBytes = b.length,
+            cardinality = deserializedCardinality(b))
+          offset += 4 + b.length + 4
+        }
+      } finally out.close()
+    } catch { case e: Throwable =>
+      // a partly written file is never referenced: remove it, best effort
+      try fs.delete(file, false)
+      catch { case scala.util.control.NonFatal(_) => () }
+      throw e
+    }
     descs.toSeq
   }
 

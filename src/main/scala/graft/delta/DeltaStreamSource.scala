@@ -178,11 +178,14 @@ final class DeltaStreamProvider extends StreamSourceProvider
   * changelog straight into the table. The condition sees the BATCH row
   * (bare column names — marker columns outside the table schema are
   * fine, they never write); delete rows for absent keys are no-ops, not
-  * inserts. One clause-merge commit per batch
-  * ([[DeltaTable.mergeClauses]]) keeps the txn exactly-once contract;
-  * on a DV-enabled table the merge runs MERGE-ON-READ
-  * ([[DeltaTable.mergeClausesWithDv]]) — streaming CDC apply with zero
-  * file rewrites, the 100 TB shape. */
+  * inserts.
+  *
+  * Either way each batch is one clause-merge commit
+  * ([[DeltaTable.mergeClauses]]), which keeps the txn exactly-once
+  * contract; on a DV-enabled table the merge runs MERGE-ON-READ
+  * ([[DeltaTable.mergeClausesWithDv]]) — streaming upsert and CDC apply
+  * with zero file rewrites, the 100 TB shape. A plain upsert batch
+  * carrying a column the table lacks refuses, like [[DeltaTable.merge]]. */
 final class DeltaStreamSink(spark: SparkSession, path: String,
                             partitionColumns: Seq[String], appId: String,
                             mergeKeys: Seq[String] = Nil,
@@ -219,11 +222,13 @@ final class DeltaStreamSink(spark: SparkSession, path: String,
       val deduped = batch
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
-      // the txn rides the merge commit itself — one commit per batch,
-      // and a crash-replayed batch returns -1 without re-merging
-      deleteWhen match {
+      // one clause list — the upsert pair, or the CDC-apply triple — and
+      // one merge; the txn rides the merge commit itself — one commit per
+      // batch, and a crash-replayed batch returns -1 without re-merging
+      val clauses = deleteWhen match {
         case None =>
-          t.merge(deduped, mergeKeys, txnAppId = Some(appId), txnVersion = batchId)
+          t.requireKnownColumns(deduped)
+          DeltaTable.UpsertClauses
         case Some(condSql) =>
           // bare column names in the user's condition mean the BATCH row
           import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -232,17 +237,17 @@ final class DeltaStreamSink(spark: SparkSession, path: String,
               case a: UnresolvedAttribute if a.nameParts.size == 1 =>
                 UnresolvedAttribute(Seq("s", a.nameParts.head))
             }.sql
-          val clauses = Seq(
+          Seq(
             DeltaTable.WhenMatchedDelete(Some(cond)),
             DeltaTable.WhenMatchedUpdate(),
             DeltaTable.WhenNotMatchedInsert(condition = Some(s"NOT ($cond)")))
-          if (t.dvEnabled)
-            t.mergeClausesWithDv(deduped, mergeKeys, clauses,
-              txnAppId = Some(appId), txnVersion = batchId)
-          else
-            t.mergeClauses(deduped, mergeKeys, clauses,
-              txnAppId = Some(appId), txnVersion = batchId)
       }
+      if (t.dvEnabled)
+        t.mergeClausesWithDv(deduped, mergeKeys, clauses,
+          txnAppId = Some(appId), txnVersion = batchId)
+      else
+        t.mergeClauses(deduped, mergeKeys, clauses,
+          txnAppId = Some(appId), txnVersion = batchId)
     }
     ()
   }

@@ -503,6 +503,11 @@ object DeltaTable {
     * full-sync/retention shape: drop target rows the source no longer
     * carries. */
   final case class WhenNotMatchedBySourceDelete(condition: Option[String] = None) extends MergeClause
+  /** The upsert pair behind [[DeltaTable.merge]] and the streaming
+    * upsert sink: `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+    * INSERT *`. */
+  private[delta] val UpsertClauses: Seq[MergeClause] =
+    Seq(WhenMatchedUpdate(), WhenNotMatchedInsert())
 
   /** Clustered-table clustering-column domain (Delta writer feature
     * `clusteredTable`): the clustering columns live in the
@@ -2771,130 +2776,48 @@ final class DeltaTable(spark: SparkSession, val path: String) {
           "machine-assigned ids")
     }
 
-  /** Copy-on-write MERGE (upsert, the delta-rs merge shape for a
-    * unique-key source: matched target rows take the source's values for
-    * every column the source PROVIDES and keep their own values for the
-    * rest — delta-rs when-matched-update semantics, so a projected
-    * source never null-overwrites unnamed target columns; unmatched
-    * source rows insert (absent columns null-fill, the schema-evolution
-    * read contract); unmatched target rows are untouched). Only data
-    * files that actually CONTAIN a matched key are rewritten — the
-    * row→file mapping comes from `input_file_name()`, so an upsert
-    * touching one partition's worth of keys rewrites that partition's
-    * files, not the table.
+  /** Copy-on-write upsert MERGE: [[mergeClauses]] with
+    * [[DeltaTable.UpsertClauses]] (`WHEN MATCHED THEN UPDATE SET *
+    * WHEN NOT MATCHED THEN INSERT *`). Matched target rows take the
+    * source's values for every column the source PROVIDES and keep their
+    * own for the rest (delta-rs when-matched-update semantics, so a
+    * projected source never null-overwrites unnamed target columns);
+    * unmatched source rows insert (absent columns null-fill, the
+    * schema-evolution read contract); unmatched target rows are
+    * untouched. Only data files that hold a matched row are rewritten.
     *
-    * Atomicity/concurrency: one commit carrying the rewritten survivors,
-    * the new data, and the removes; the [[DeltaLog.commit]] `check`
-    * re-verifies on every retry that all files this merge was based on
-    * are still live AND that no concurrent commit added files (a
-    * concurrent append could carry a matched key this merge never
-    * scanned — committing over it would leave duplicate keys). A lost
-    * race throws `ConcurrentModificationException`.
-    *
-    * Contract: source keys unique (two source rows with one key would
-    * both insert). Returns the committed version. */
+    * Unlike the clause merge, a source column the table lacks refuses
+    * ([[requireKnownColumns]]). A source key matching a target row more
+    * than once refuses (Delta's multiple-source-rows-matched error);
+    * duplicate keys that match nothing both insert. The txn rides the
+    * merge commit: a replayed (appId, version) batch returns -1. Returns
+    * the committed version, or -1 when nothing matched and nothing
+    * inserts (no commit). */
   def merge(source: DataFrame, keyCols: Seq[String],
             txnAppId: Option[String] = None, txnVersion: Long = -1L): Long = {
-    // merge rewrites matched rows unconditionally, so even an insert-only
-    // outcome goes through a file rewrite here — blocked wholesale
-    // (Delta proper permits provably insert-only merges; documented
-    // divergence in exchange for the stricter guarantee)
-    requireNotAppendOnly("MERGE")
-    requireIdentityProvided(source, "MERGE")
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val sch = schema
-    val parts = partitionColumns
-    keyCols.foreach(k => require(sch.fieldNames.contains(k), s"unknown key column '$k'"))
-    // source columns resolve CASE-INSENSITIVELY (Spark's default
-    // resolution) — a case-mismatched column must update, not silently
-    // null-fill past the unknown-column check (review finding)
-    val srcByLower = source.columns.map(c => c.toLowerCase -> c).toMap
-    keyCols.foreach(k => require(srcByLower.contains(k.toLowerCase),
-      s"source is missing key column '$k'"))
-    // a source column the table doesn't have is almost always a typo'd
-    // SET column — silently dropping it would null-overwrite the intended
-    // target column on every matched row; refuse loudly instead
-    val tableCols = sch.fieldNames.map(_.toLowerCase).toSet
+    requireKnownColumns(source)
+    mergeClauses(source, keyCols, DeltaTable.UpsertClauses, txnAppId, txnVersion)
+  }
+
+  /** The upsert merges' typo guard: a source column the table lacks is
+    * almost always a misspelled SET column, and dropping it would leave
+    * the intended target column unchanged on every matched row — refuse
+    * it. (The clause merges keep such columns as condition-only markers.)
+    * Case-insensitive, like Spark's column resolution. */
+  private[delta] def requireKnownColumns(source: DataFrame): Unit = {
+    val tableCols = schema.fieldNames.map(_.toLowerCase).toSet
     val unknown = source.columns.filter(c => !tableCols.contains(c.toLowerCase))
     require(unknown.isEmpty,
       s"source columns ${unknown.mkString(", ")} do not exist in the table schema " +
         "(project them away, or append with mergeSchema to widen first)")
-    val snap = snapshot
-    val aligned = source.select(sch.fields.map(f =>
-      srcByLower.get(f.name.toLowerCase).map(col).getOrElse(lit(null))
-        .cast(f.dataType).as(f.name)).toSeq: _*)
-    val srcKeys = aligned.select(keyCols.map(col): _*).distinct()
-    // stats-index pre-restriction: only files whose per-key ranges admit
-    // a source key can hold a match (skipForKeys) — a file with a
-    // matching key always survives, so insert detection below (anti-join
-    // against the AFFECTED files' keys) stays exact
-    val affected = filesMatching(skipForKeys(snap, srcKeys, keyCols),
-      _.join(srcKeys, keyCols, "left_semi"))
-    val tgt = materializingRowIds(snap.copy(files = affected))
-    // unmatched rows of the affected files are carried unchanged
-    // (row-tracking: including their materialized identity)
-    val survivors = tgt.join(srcKeys, keyCols, "left_anti")
-    // matched rows update ONLY the columns the source provides; the rest
-    // keep the target's values (a source projected to a column subset
-    // must not null-overwrite what it didn't name)
-    val pfx = "__merge_src_"
-    val updCols = sch.fieldNames.toSeq
-      .filterNot(keyCols.contains).filter(n => srcByLower.contains(n.toLowerCase))
-    val srcRen = aligned.select((keyCols.map(col) ++
-      updCols.map(n => col(n).as(pfx + n))): _*)
-    // matched rows KEEP their row id (a merge update never re-identifies
-    // a row) and null the commit version to this merge's; inserts carry
-    // null identity — the commit stamps them a fresh base-row-id block
-    val rtMatched: Seq[org.apache.spark.sql.Column] =
-      if (!rowTrackingEnabled) Nil
-      else Seq(col(DeltaTable.MaterializedRowIdCol),
-        lit(null).cast("long").as(DeltaTable.MaterializedRcvCol))
-    val matched = tgt.join(srcRen, keyCols, "inner")
-      .select((sch.fieldNames.toSeq.map(n =>
-        (if (updCols.contains(n)) col(pfx + n) else col(n)).as(n)) ++ rtMatched): _*)
-    // source rows matching no live key insert as-is (absent columns null)
-    val inserts0 = aligned.join(
-      tgt.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val inserts =
-      if (!rowTrackingEnabled) inserts0
-      else inserts0
-        .withColumn(DeltaTable.MaterializedRowIdCol, lit(null).cast("long"))
-        .withColumn(DeltaTable.MaterializedRcvCol, lit(null).cast("long"))
-    // merge additionally refuses CONCURRENT ADDS (strictest/serializable
-    // behavior): a file appended after our key scan could contain a
-    // matched key this merge never saw — committing over it would leave
-    // duplicate keys, silently violating the upsert contract
-    val basePaths = snap.files.map(_.path).toSet
-    val cdf = if (!cdfEnabled) None else {
-      val preimage = tgt.join(srcKeys, keyCols, "left_semi")
-        .select(sch.fieldNames.toSeq.map(col): _*)
-      Some(preimage.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-        .unionByName(matched
-          .drop(DeltaTable.MaterializedRowIdCol, DeltaTable.MaterializedRcvCol)
-          .withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage")))
-        .unionByName(inserts
-          .drop(DeltaTable.MaterializedRowIdCol, DeltaTable.MaterializedRcvCol)
-          .withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
-    }
-    commitRewrite(affected,
-      survivors.unionByName(withConstraintChecks(matched.unionByName(inserts))), "MERGE",
-      Map("predicateKeys" -> keyCols.mkString(",")),
-      extraCheck = s => s.files.map(_.path).forall(basePaths.contains),
-      conflictHint = "a concurrent commit added or rewrote files during this merge",
-      changes = cdf,
-      // exactly-once upsert (the streaming sink's contract): a replayed
-      // (appId, version) batch skips as -1 instead of re-merging — the
-      // txn rides the SAME commit as the rewrite, no marker commit, no
-      // crash window
-      txn = txnAppId.filter(_ => txnVersion >= 0).map(_ -> txnVersion))
   }
 
-  /** Shared clause machinery of [[mergeClauses]] (copy-on-write) and
-    * [[mergeClausesWithDv]] (merge-on-read): validation, clause-group
-    * splitting, source alignment, `t.`/`s.` SQL expression resolution
-    * over the joined frame (target columns plain, source columns
-    * `__merge_src_`-prefixed), the first-satisfied-clause action chain,
-    * and the per-column CASE builders for updates and inserts. */
+  /** The clause machinery of every MERGE ([[mergeBy]]): validation,
+    * clause-group splitting, source alignment, `t.`/`s.` SQL expression
+    * resolution over the joined frame (target columns plain, source
+    * columns `__merge_src_`-prefixed), the first-satisfied-clause action
+    * chain, and the per-column CASE builders for updates and inserts —
+    * handed to [[dml]] as a [[Claim]] plus the insert rows. */
   private final class ClauseEngine(source: DataFrame, keyCols: Seq[String],
                                    clauses: Seq[DeltaTable.MergeClause],
                                    effSchema: StructType,
@@ -3102,10 +3025,30 @@ final class DeltaTable(spark: SparkSession, val path: String) {
             "deduplicate the source on the key columns first")
       }
     }
+
+    /** The target-side decisions for [[dml]]: each target row joins the
+      * source by key and the first satisfied clause claims it. */
+    def claim: Claim = new Claim(
+      _.join(srcRen, keyCols, "left_outer").withColumn("__act", act),
+      updated = Some(updIdx).filter(_.nonEmpty).map(inSet),
+      deleted = Some(delIdx).filter(_.nonEmpty).map(inSet),
+      newValue = updatedValue,
+      oldValue = targetValue)
+
+    /** Source rows whose key no row of the candidate files holds, through
+      * the insert clauses (a row no clause claims drops); None without
+      * insert clauses. Exact despite stats pruning: a target key equal to
+      * a source key lives in a file whose stats admit it, i.e. a
+      * candidate file. */
+    def inserts(candKeys: DataFrame): Option[DataFrame] =
+      if (insertCs.isEmpty) None
+      else Some(insActed(aligned.join(candKeys.distinct(), keyCols, "left_anti"))
+        .filter(col("__act") =!= 0)
+        .select(sch.fieldNames.toSeq.map(insertValue): _*))
   }
 
   /** General MERGE with the FULL clause surface (the Delta/ANSI
-    * statement; [[merge]] is the fixed upsert special case):
+    * statement; [[merge]] is its upsert special case):
     * `WHEN MATCHED [AND c] THEN UPDATE SET …|DELETE`,
     * `WHEN NOT MATCHED [AND c] THEN INSERT …`, and
     * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET …|DELETE` —
@@ -3126,16 +3069,24 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * Expressions are SQL text over `t.<col>` / `s.<col>` (bare names =
     * target, except in INSERT clauses where only the source is in
     * scope). By-source clause expressions see ONLY target columns (no
-    * source row matched, by definition).
+    * source row matched, by definition). Source columns outside the
+    * table schema are condition-only markers; with `mergeSchema`
+    * (Delta's autoMerge for MERGE) they instead widen the schema in the
+    * same commit, carried rows reading the new columns as NULL.
     *
-    * Scale shape, same as [[merge]]: only files containing a CLAIMED
-    * row rewrite; matched-key candidates pre-restrict through the
-    * add.stats index ([[skipForKeys]]). A by-source clause adds its
-    * rows via a row-level scan (its condition can hold anywhere, so no
-    * key-range pre-restriction is sound — an unconditional by-source
-    * DELETE legitimately touches every file holding unmatched rows).
-    * Insert detection anti-joins the affected files only — exact,
-    * because every file holding a matched key is in the affected set.
+    * Scale shape: only files containing a CLAIMED row rewrite;
+    * matched-key candidates pre-restrict through the add.stats index
+    * ([[skipForKeys]]). A by-source clause makes every file a candidate
+    * (its condition can hold anywhere, so no key-range pre-restriction
+    * is sound — an unconditional by-source DELETE legitimately touches
+    * every file holding unmatched rows). Insert detection anti-joins the
+    * candidate files' keys.
+    *
+    * Concurrency: concurrent ADDS refuse (a file appended after the key
+    * scan could hold a matched key this merge never saw — committing
+    * over it would leave duplicate keys); a lost race throws
+    * `ConcurrentModificationException`. The txn rides the commit for
+    * exactly-once streaming applies.
     *
     * Row tracking: updated rows KEEP their row id and fall to this
     * commit's version; carried rows keep id and version; inserts get
@@ -3146,143 +3097,9 @@ final class DeltaTable(spark: SparkSession, val path: String) {
                    clauses: Seq[DeltaTable.MergeClause],
                    txnAppId: Option[String] = None,
                    txnVersion: Long = -1L,
-                   mergeSchema: Boolean = false): Long = {
-    import DeltaTable._
-    requireNotAppendOnly("MERGE")
-    val snap = snapshot
-    def txnApplied(s: Snapshot): Boolean = txnAppId.exists(app =>
-      txnVersion >= 0 && s.txns.getOrElse(app, -1L) >= txnVersion)
-    if (txnApplied(snap)) return -1L
-    // mergeSchema (Delta's autoMerge for MERGE): source columns outside
-    // the table WIDEN the schema — the metaData update rides the SAME
-    // commit as the rewrite, carried rows read the new columns as NULL.
-    // Without it, extra source columns stay condition-only markers.
-    val evolution = if (!mergeSchema) Nil else evolvedFieldsFor(snap, source.schema)
-    val effSchema = StructType(schema.fields ++ evolution)
-    val eng = new ClauseEngine(source, keyCols, clauses, effSchema,
-      schema.fieldNames.toSet)
-    import eng._
+                   mergeSchema: Boolean = false): Long =
+    mergeBy(mask = false, source, keyCols, clauses, txnAppId, txnVersion, mergeSchema)
 
-    // ---- affected files: matched-key holders (stats-pre-restricted)
-    // plus, when by-source clauses exist, every file holding an
-    // unmatched row some by-source condition claims ----
-    val affected: Seq[AddFile] = bySrcHit match {
-      case None =>
-        filesMatching(skipForKeys(snap, srcKeys, keyCols),
-          _.join(srcKeys, keyCols, "left_semi"))
-      case Some(hit) =>
-        filesMatching(snap, { df =>
-          val marked = df.join(srcKeys.withColumn("__sk", lit(1)), keyCols, "left_outer")
-          marked.filter(col("__sk").isNotNull || hit)
-        })
-    }
-    if (affected.isEmpty && insertCs.isEmpty) return -1L
-
-    val tgtM = materializingRowIds(snap.copy(files = affected))
-    guardDuplicates(tgtM.select(keyCols.map(col): _*))
-    val joined = tgtM.join(srcRen, keyCols, "left_outer")
-    val acted = joined.withColumn("__act", act)
-
-    val rtCarried: Seq[org.apache.spark.sql.Column] =
-      if (!rowTrackingEnabled) Nil
-      else Seq(col(MaterializedRowIdCol), col(MaterializedRcvCol))
-    val rtUpdated: Seq[org.apache.spark.sql.Column] =
-      if (!rowTrackingEnabled) Nil
-      else Seq(col(MaterializedRowIdCol),
-        lit(null).cast("long").as(MaterializedRcvCol))
-    val carried = acted.filter(col("__act") === 0)
-      .select(sch.fieldNames.toSeq.map(n => targetValue(n).as(n)) ++ rtCarried: _*)
-    val updated = acted.filter(inSet(updIdx))
-      .select(sch.fieldNames.toSeq.map(updatedValue) ++ rtUpdated: _*)
-
-    // ---- inserts: source rows matching no affected-file key; first
-    // satisfied insert clause claims, unclaimed rows drop ----
-    val antiSrc = aligned.join(
-      tgtM.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val ins = insActed(antiSrc)
-    val inserts0 = ins.filter(col("__act") =!= 0)
-      .select(sch.fieldNames.toSeq.map(insertValue): _*)
-    val inserts =
-      if (!rowTrackingEnabled) inserts0
-      else inserts0
-        .withColumn(MaterializedRowIdCol, lit(null).cast("long"))
-        .withColumn(MaterializedRcvCol, lit(null).cast("long"))
-    if (affected.isEmpty && inserts0.isEmpty) return -1L
-
-    val basePaths = snap.files.map(_.path).toSet
-    val cdf = if (!cdfEnabled) None else {
-      val plain = sch.fieldNames.toSeq
-      val pre = acted.filter(inSet(updIdx))
-        .select(plain.map(n => targetValue(n).as(n)): _*)
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-      val post = acted.filter(inSet(updIdx))
-        .select(plain.map(updatedValue): _*)
-        .withColumn(ChangeTypeCol, lit("update_postimage"))
-      val dels = acted.filter(inSet(delIdx))
-        .select(plain.map(n => targetValue(n).as(n)): _*)
-        .withColumn(ChangeTypeCol, lit("delete"))
-      val insCdf = inserts0.withColumn(ChangeTypeCol, lit("insert"))
-      Some(pre.unionByName(post).unionByName(dels).unionByName(insCdf))
-    }
-    // an evolving merge carries its metaData (+ any NTZ feature raise)
-    // in the same commit, and must not clobber a schema or config
-    // change that landed while it staged
-    val metaActions: Seq[Action] =
-      if (evolution.isEmpty) Nil
-      else {
-        val meta = snap.metadata.getOrElse(
-          throw new IllegalStateException(s"no table at $path"))
-        val ntz =
-          if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
-            !snap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
-            Seq(Action(protocol = Some(raisedProtocol(snap, 3, 7,
-              Seq("timestampNtz"), Seq("timestampNtz")))))
-          else Nil
-        ntz :+ Action(metaData = Some(meta.copy(
-          schemaString = effSchema.json,
-          configuration =
-            if (!columnMappingEnabled) meta.configuration
-            else meta.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
-              effSchema.fields.flatMap(f =>
-                if (f.metadata.contains(DeltaTable.ColMapIdKey))
-                  Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
-                else None).max.toString))))
-      }
-    commitRewrite(affected,
-      carried.unionByName(withConstraintChecks(updated.unionByName(inserts))),
-      "MERGE",
-      Map("predicateKeys" -> keyCols.mkString(","),
-        "clauses" -> clauses.map(_.getClass.getSimpleName).mkString(",")),
-      extraCheck = s => s.files.map(_.path).forall(basePaths.contains) &&
-        (evolution.isEmpty ||
-          (s.metadata.map(_.schemaString) == snap.metadata.map(_.schemaString) &&
-            s.metadata.map(_.configuration) == snap.metadata.map(_.configuration))),
-      conflictHint = "a concurrent commit added or rewrote files during this merge",
-      changes = cdf,
-      txn = txnAppId.filter(_ => txnVersion >= 0).map(_ -> txnVersion),
-      writeSchema = effSchema,
-      extraActions = metaActions)
-  }
-
-  /** Merge-on-read MERGE with the FULL clause surface — the 100 TB
-    * CDC-apply shape: every CLAIMED target row (matched update/delete
-    * AND by-source update/delete) masks OUT of its file by deletion
-    * vector, and ONE new file carries the updated rows plus the
-    * claimed inserts — zero data-file rewrites. A conditional delete of
-    * 0.1% of a 100 TB table commits bitmaps proportional to the deleted
-    * rows; the copy-on-write [[mergeClauses]] would rewrite every
-    * affected file.
-    *
-    * Clause semantics, expression language, ordering, the duplicate-
-    * source-key refusal, row tracking (updated rows keep their ids), and
-    * CDF capture are IDENTICAL to [[mergeClauses]] — one ClauseEngine
-    * drives both. Carried rows differ in mechanism only: copy-on-write
-    * rewrites them into fresh files; here they simply stay, untouched,
-    * in files whose DVs grew. Concurrency contract matches
-    * [[mergeWithDv]]: concurrent ADDS refuse (an appended file could
-    * hold a matched key this merge never saw), affected files must keep
-    * their exact DV descriptor, txn rides the commit for exactly-once
-    * streaming applies. */
   /** APPLY CHANGES (the DLT-style CDC applier, SCD TYPE 1): fold a
     * change feed — key columns, a monotone `sequenceCol`, an optional
     * delete marker — into the table. WITHIN a batch only each key's
@@ -3345,115 +3162,180 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       mergeClauses(latest, keyCols, clauses, txnAppId, txnVersion)
   }
 
+  /** Merge-on-read MERGE with the FULL clause surface — the 100 TB
+    * CDC-apply shape: every CLAIMED target row (matched update/delete
+    * AND by-source update/delete) masks OUT of its file by deletion
+    * vector, and ONE new file carries the updated rows plus the
+    * claimed inserts — zero data-file rewrites. A conditional delete of
+    * 0.1% of a 100 TB table commits bitmaps proportional to the deleted
+    * rows; the copy-on-write [[mergeClauses]] would rewrite every
+    * affected file.
+    *
+    * Everything but that removal is [[mergeClauses]]' — clause
+    * semantics, expression language, ordering, the duplicate-source-key
+    * refusal, candidate files and insert detection, row tracking
+    * (updated rows keep their ids), CDF capture, the concurrent-adds
+    * refusal and the txn: both run [[mergeBy]]. Carried rows differ in
+    * mechanism only: copy-on-write rewrites them into fresh files; here
+    * they simply stay, untouched, in files whose DVs grew. Affected
+    * files must keep their exact DV descriptor until the commit. No
+    * `mergeSchema`: schema evolution is copy-on-write only. */
   def mergeClausesWithDv(source: DataFrame, keyCols: Seq[String],
                          clauses: Seq[DeltaTable.MergeClause],
                          txnAppId: Option[String] = None,
-                         txnVersion: Long = -1L): Long = {
-    import DeltaTable._
-    requireNotAppendOnly("MERGE (deletion vectors)")
-    val snap = snapshot
-    def txnApplied(s: Snapshot): Boolean = txnAppId.exists(app =>
-      txnVersion >= 0 && s.txns.getOrElse(app, -1L) >= txnVersion)
-    if (txnApplied(snap)) return -1L
-    val eng = new ClauseEngine(source, keyCols, clauses, schema,
-      schema.fieldNames.toSet)
-    import eng._
+                         txnVersion: Long = -1L): Long =
+    mergeBy(mask = true, source, keyCols, clauses, txnAppId, txnVersion)
 
+  /** The MERGE half of the four merge entry points: clause validation
+    * and source alignment ([[ClauseEngine]]), candidate files, the
+    * duplicate-key guard, insert detection and schema evolution, then
+    * [[dml]]. */
+  private def mergeBy(mask: Boolean, source: DataFrame, keyCols: Seq[String],
+                      clauses: Seq[DeltaTable.MergeClause],
+                      txnAppId: Option[String], txnVersion: Long,
+                      mergeSchema: Boolean = false): Long = {
+    requireNotAppendOnly(if (mask) "MERGE (deletion vectors)" else "MERGE")
+    val snap = snapshot
+    val txn = txnAppId.filter(_ => txnVersion >= 0).map(_ -> txnVersion)
+    if (txn.exists { case (app, v) => snap.txns.getOrElse(app, -1L) >= v }) return -1L
+    // mergeSchema: source columns outside the table WIDEN the schema —
+    // the metaData update rides the SAME commit as the rewrite
+    val evolution = if (!mergeSchema) Nil else evolvedFieldsFor(snap, source.schema)
+    val sch = StructType(schema.fields ++ evolution)
+    val eng = new ClauseEngine(source, keyCols, clauses, sch, schema.fieldNames.toSet)
     // matched-key candidates pre-restrict through the stats index; a
     // by-source clause can claim a row in ANY file, so no restriction
-    val cand = if (bySrcCs.isEmpty) skipForKeys(snap, srcKeys, keyCols) else snap
-    guardDuplicates(rawFor(cand).select(keyCols.map(col): _*))
-    // every claimed row masks out of its file (updates are re-added
-    // transformed below; deletes just disappear)
-    val plan = planDvMaskBy(cand, df =>
-      df.join(srcRen, keyCols, "left_outer").withColumn("__act", act)
-        .filter(col("__act") =!= 0))
+    val cand = if (eng.bySrcCs.isEmpty) skipForKeys(snap, eng.srcKeys, keyCols) else snap
+    val candKeys = dfFor(cand).select(keyCols.map(col): _*)
+    eng.guardDuplicates(candKeys)
+    // an evolving merge carries its metaData (+ any NTZ feature raise)
+    // in the same commit, and must not clobber a schema or config
+    // change that landed while it staged
+    val metaActions: Seq[Action] =
+      if (evolution.isEmpty) Nil
+      else {
+        val meta = snap.metadata.getOrElse(
+          throw new IllegalStateException(s"no table at $path"))
+        val ntz =
+          if (evolution.exists(f => DeltaTable.containsNtz(f.dataType)) &&
+            !snap.protocol.exists(_.writerFeatures.exists(_.contains("timestampNtz"))))
+            Seq(Action(protocol = Some(raisedProtocol(snap, 3, 7,
+              Seq("timestampNtz"), Seq("timestampNtz")))))
+          else Nil
+        ntz :+ Action(metaData = Some(meta.copy(
+          schemaString = sch.json,
+          configuration =
+            if (!columnMappingEnabled) meta.configuration
+            else meta.configuration + (DeltaTable.ColumnMappingMaxIdKey ->
+              sch.fields.flatMap(f =>
+                if (f.metadata.contains(DeltaTable.ColMapIdKey))
+                  Some(f.metadata.getLong(DeltaTable.ColMapIdKey))
+                else None).max.toString))))
+      }
+    dml("MERGE", mask, snap, cand, eng.claim, eng.inserts(candKeys),
+      Map("predicateKeys" -> keyCols.mkString(","),
+        "clauses" -> clauses.map(_.getClass.getSimpleName).mkString(",")),
+      txn, strict = true, sch, metaActions,
+      extraCheck = s => evolution.isEmpty ||
+        (s.metadata.map(_.schemaString) == snap.metadata.map(_.schemaString) &&
+          s.metadata.map(_.configuration) == snap.metadata.map(_.configuration)))
+  }
 
-    val rtExtras = if (!rowTrackingEnabled) Nil
-      else Seq(col(MaterializedRowIdCol))
-    val tgtRaw =
-      if (rowTrackingEnabled)
-        rawFor(cand, withRowIds = true)
-          .withColumnRenamed(RowIdCol, MaterializedRowIdCol)
-          .drop(RowCommitVersionCol)
-      else rawFor(cand)
-    val acted = tgtRaw.join(srcRen, keyCols, "left_outer").withColumn("__act", act)
-    val updated = acted.filter(inSet(updIdx))
-      .select(sch.fieldNames.toSeq.map(updatedValue) ++ rtExtras: _*)
-    // exact despite pruning: a target key equal to a source key lives in
-    // a file whose stats admit it, i.e. a candidate file
-    val tgtKeys = rawFor(cand).select(keyCols.map(col): _*).distinct()
-    val ins = insActed(aligned.join(tgtKeys, keyCols, "left_anti"))
-    val inserts0 = ins.filter(col("__act") =!= 0)
-      .select(sch.fieldNames.toSeq.map(insertValue): _*)
-    val inserts = if (!rowTrackingEnabled) inserts0
-      else inserts0.withColumn(MaterializedRowIdCol, lit(null).cast("long"))
-    if (plan.isEmpty && inserts0.isEmpty) return -1L
+  /** One DML statement's row-level decisions over a target frame, for
+    * [[dml]]: `acted` adds `__act` to the target rows (0 = unclaimed: the
+    * row stays as it is); `updated` and `deleted` select the claimed rows
+    * that are re-added transformed and that just leave (None: the
+    * statement has none); `newValue(n)` is column `n` of an updated row,
+    * `oldValue(n)` of a target row (a typed NULL for a column this
+    * statement's schema evolution adds). */
+  private final class Claim(val acted: DataFrame => DataFrame,
+                            val updated: Option[org.apache.spark.sql.Column],
+                            val deleted: Option[org.apache.spark.sql.Column],
+                            val newValue: String => org.apache.spark.sql.Column,
+                            val oldValue: String => org.apache.spark.sql.Column = col)
 
-    val newData = withConstraintChecks(updated.unionByName(inserts))
-    val adds = stageWrite(newData)
-    val cdf = if (!cdfEnabled) None else {
-      val plain = sch.fieldNames.toSeq
-      val actedPlain = rawFor(cand).join(srcRen, keyCols, "left_outer")
-        .withColumn("__act", act)
-      val pre = actedPlain.filter(inSet(updIdx)).select(plain.map(col): _*)
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-      val post = actedPlain.filter(inSet(updIdx)).select(plain.map(updatedValue): _*)
-        .withColumn(ChangeTypeCol, lit("update_postimage"))
-      val dels = actedPlain.filter(inSet(delIdx)).select(plain.map(col): _*)
-        .withColumn(ChangeTypeCol, lit("delete"))
-      Some(pre.unionByName(post).unionByName(dels)
-        .unionByName(inserts0.withColumn(ChangeTypeCol, lit("insert"))))
-    }
+  /** THE body of every MERGE, UPDATE and DELETE (copy-on-write and
+    * merge-on-read alike): from the rows `claim` marks in the candidate
+    * files `cand` (a stats-pruned restriction of `snap`) and the new rows
+    * `inserts`, derive the affected files, the rows to write and the CDF
+    * frames, and commit them as one version through [[commitDml]].
+    * `mask` is the one choice of how claimed rows leave their files:
+    *   - rewrite: every file holding a claimed row is rewritten, its
+    *     unclaimed rows carried ([[filesMatching]]);
+    *   - mask: the claimed rows get a deletion vector ([[planDvMaskBy]])
+    *     and their files stay.
+    * Row tracking: updated rows keep their row id and fall to this
+    * commit's version; carried rows keep both; inserts get fresh ids.
+    * Constraint and generation checks apply to updated and inserted
+    * rows. `strict` (MERGE) refuses to commit over files added after
+    * `snap` — an appended file could hold a matched key this statement
+    * never saw. Returns the committed version, or -1 when nothing is
+    * claimed and nothing inserts (no commit). */
+  private def dml(op: String, mask: Boolean, snap: Snapshot, cand: Snapshot,
+                  claim: Claim, inserts: Option[DataFrame] = None,
+                  params: Map[String, String] = Map.empty,
+                  txn: Option[(String, Long)] = None, strict: Boolean = false,
+                  sch: StructType = schema, extraActions: Seq[Action] = Nil,
+                  extraCheck: Snapshot => Boolean = _ => true): Long = {
+    import DeltaTable._
+    val claimed = (df: DataFrame) => claim.acted(df).filter(col("__act") =!= 0)
+    val masks = if (mask) planDvMaskBy(cand, claimed) else Nil
+    val affected = if (mask) masks.map(_.f) else filesMatching(cand, claimed)
+    if (affected.isEmpty && inserts.forall(_.isEmpty)) return -1L
+    val acted = claim.acted(materializingRowIds(cand.copy(files = affected)))
+    val plain = sch.fieldNames.toSeq
+    val old = (n: String) => claim.oldValue(n).as(n)
+    def rows(which: org.apache.spark.sql.Column,
+             value: String => org.apache.spark.sql.Column,
+             rt: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
+      acted.filter(which).select(plain.map(value) ++ rt: _*)
+    val noId = lit(null).cast("long")
+    def rtCols(id: org.apache.spark.sql.Column,
+               version: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
+      if (!rowTrackingEnabled) Nil
+      else Seq(id.as(MaterializedRowIdCol), version.as(MaterializedRcvCol))
+    val updated = claim.updated.map(rows(_, claim.newValue,
+      rtCols(col(MaterializedRowIdCol), noId)))
+    val fresh = inserts.map(_.select(plain.map(col) ++ rtCols(noId, noId): _*))
+    val changed = (updated ++ fresh).reduceOption(_.unionByName(_)).map(withConstraintChecks)
+    val newData =
+      if (mask) changed
+      else {
+        val carried = rows(col("__act") === 0, old,
+          rtCols(col(MaterializedRowIdCol), col(MaterializedRcvCol)))
+        Some(changed.fold(carried)(c => carried.unionByName(c)))
+      }
+    val cdf = if (!cdfEnabled) None else Some((
+      claim.updated.toSeq.flatMap(u => Seq(
+        rows(u, old).withColumn(ChangeTypeCol, lit("update_preimage")),
+        rows(u, claim.newValue).withColumn(ChangeTypeCol, lit("update_postimage")))) ++
+        claim.deleted.map(d => rows(d, old).withColumn(ChangeTypeCol, lit("delete"))) ++
+        inserts.map(_.withColumn(ChangeTypeCol, lit("insert"))))
+      .reduce(_.unionByName(_)))
     val basePaths = snap.files.map(_.path).toSet
-    val txnActs = txnAppId.filter(_ => txnVersion >= 0)
-      .map(app => Action(txn = Some(Txn(app, txnVersion,
-        Some(System.currentTimeMillis()))))).toSeq
-    plan match {
-      case Some(pl) =>
-        // a zombie replay of an already-recorded (appId, version) batch
-        // must stay a QUIET skip even when it surfaces as a lost race
-        try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
-          cdf, "MERGE", Map("mode" -> "deletionVectors",
-            "predicateKeys" -> keyCols.mkString(","),
-            "clauses" -> clauses.map(_.getClass.getSimpleName).mkString(",")),
-          extraCheck = s => !txnApplied(s) &&
-            s.files.map(_.path).forall(basePaths.contains))
-        catch {
-          case _: java.util.ConcurrentModificationException
-            if txnApplied(snapshot) => -1L
-        }
-      case None => commitInsertOnly(snap, adds, cdf, txnActs, txnApplied)
-    }
+    commitDml(affected, newData, op,
+      if (mask) params + ("mode" -> "deletionVectors") else params,
+      extraCheck = s => (!strict || s.files.forall(f => basePaths(f.path))) && extraCheck(s),
+      conflictHint =
+        if (strict) s"a concurrent commit added or rewrote files during this ${op.toLowerCase}"
+        else if (mask) "an affected file was rewritten or DV'd concurrently"
+        else "a concurrent commit rewrote files this operation was based on",
+      changes = cdf, txn = txn, writeSchema = sch, extraActions = extraActions,
+      masks = masks)
   }
 
   /** Copy-on-write DELETE (delta-rs `delete`): drop every row matching
     * `predicate`; only files actually CONTAINING a match are rewritten
-    * (row→file mapping, like [[merge]]). Returns the committed version,
-    * or -1 when nothing matched (no commit — a no-op delete must not
-    * grow the log); a LOST concurrent-rewrite race throws
+    * (the [[dml]] body). Three-valued logic: rows where the predicate is
+    * NULL survive — standard DELETE removes only TRUE rows — and a
+    * surviving row keeps its row id. Returns the committed version, or
+    * -1 when nothing matched (no commit — a no-op delete must not grow
+    * the log); a LOST concurrent-rewrite race throws
     * `ConcurrentModificationException` — it must never masquerade as a
     * no-op. Rows in files appended concurrently are not retroactively
     * deleted (the delete covers its read snapshot). */
-  def delete(predicate: org.apache.spark.sql.Column): Long = {
-    requireNotAppendOnly("DELETE")
-    val snap = snapshot
-    val affected = filesMatching(skipForDml(snap, predicate), _.filter(predicate))
-    if (affected.isEmpty) return -1L
-    // three-valued logic: rows where the predicate is NULL match neither
-    // `predicate` nor `!predicate` — a bare negation would silently
-    // delete them; standard DELETE removes only TRUE rows. On a
-    // row-tracking table the survivors carry their materialized
-    // (_row_id, _row_commit_version) into the rewritten files — DELETE
-    // never changes a surviving row's identity.
-    val survivors = materializingRowIds(snap.copy(files = affected))
-      .filter(!coalesce(predicate, lit(false)))
-    val cdf = if (!cdfEnabled) None else Some(
-      dfFor(snap.copy(files = affected))
-        .filter(coalesce(predicate, lit(false)))
-        .withColumn(DeltaTable.ChangeTypeCol, lit("delete")))
-    commitRewrite(affected, survivors, "DELETE", changes = cdf)
-  }
+  def delete(predicate: org.apache.spark.sql.Column): Long =
+    dmlWhere("DELETE", mask = false, predicate, set = None)
 
   /** True when `delta.enableDeletionVectors=true` in the table
     * configuration (the delta-rs / Delta gate for [[deleteWithDv]]). */
@@ -3496,23 +3378,8 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * deleted positions. Mass deletes still belong to [[delete]] — a DV
     * covering most of the table is the wrong tool regardless of where
     * the bitmap was built. */
-  def deleteWithDv(predicate: org.apache.spark.sql.Column): Long = {
-    requireNotAppendOnly("DELETE (deletion vectors)")
-    val snap = snapshot
-    // stats-index pre-restriction: the position scan and the CDF
-    // pre-image only open files whose add.stats range admits a match
-    // (matched rows can only live in candidate files)
-    val cand = skipForDml(snap, predicate)
-    val plan = planDvMask(cand, predicate).getOrElse(return -1L)
-    val sch = snap.schema.get
-    val cdf = if (!cdfEnabled) None else Some(
-      rawFor(cand)
-        .filter(coalesce(predicate, lit(false)))
-        .select(sch.fieldNames.toSeq.map(col): _*)
-        .withColumn(DeltaTable.ChangeTypeCol, lit("delete")))
-    commitDvMask(snap, plan, Nil, cdf, "DELETE",
-      Map("mode" -> "deletionVectors"))
-  }
+  def deleteWithDv(predicate: org.apache.spark.sql.Column): Long =
+    dmlWhere("DELETE", mask = true, predicate, set = None)
 
   /** Merge-on-read UPDATE (the DV sibling of [[deleteWithDv]]): matched
     * rows are masked OUT of their files by deletion vectors — zero data
@@ -3528,198 +3395,38 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * write like any write. Wide updates still belong to [[update]] — a
     * DV covering most of the table is the wrong tool regardless. */
   def updateWithDv(predicate: org.apache.spark.sql.Column,
-                   set: Map[String, org.apache.spark.sql.Column]): Long = {
-    requireNotAppendOnly("UPDATE (deletion vectors)")
-    require(set.nonEmpty, "update needs at least one SET column")
-    val sch = schema
-    set.keys.foreach(k => require(sch.fieldNames.contains(k), s"unknown SET column '$k'"))
-    val snap = snapshot
-    // stats-index pre-restriction shared by the mask plan, the matched-
-    // row read, and the CDF frames (matches only live in candidates)
-    val cand = skipForDml(snap, predicate)
-    val plan = planDvMask(cand, predicate).getOrElse(return -1L)
-    // the transformed rows: matched through the DV-applied read, SET
-    // expressions against the OLD values; on a row-tracking table the
-    // row id materializes into the new file and the commit version
-    // falls through to this commit's defaultRowCommitVersion
-    val matchedSrc =
-      (if (rowTrackingEnabled)
-        rawFor(cand, withRowIds = true)
-          .withColumnRenamed(DeltaTable.RowIdCol, DeltaTable.MaterializedRowIdCol)
-          .drop(DeltaTable.RowCommitVersionCol)
-      else rawFor(cand))
-        .filter(coalesce(predicate, lit(false)))
-    val rewritten = matchedSrc.select((sch.fields.map { f =>
-      set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-    }.toSeq ++ (if (rowTrackingEnabled)
-      Seq(col(DeltaTable.MaterializedRowIdCol)) else Nil)): _*)
-    val checked = withConstraintChecks(rewritten)
-    val adds = stageWrite(checked)
-    val cdf = if (!cdfEnabled) None else {
-      val pre = rawFor(cand).filter(coalesce(predicate, lit(false)))
-        .select(sch.fieldNames.toSeq.map(col): _*)
-      val post = pre.select(sch.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-      }.toSeq: _*)
-      Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-        .unionByName(post.withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage"))))
-    }
-    commitDvMask(snap, plan,
-      adds.map(a => Action(add = Some(a))), cdf, "UPDATE",
-      Map("mode" -> "deletionVectors"))
-  }
+                   set: Map[String, org.apache.spark.sql.Column]): Long =
+    dmlWhere("UPDATE", mask = true, predicate, Some(set))
 
-  /** Merge-on-read MERGE (the DV sibling of [[merge]] — the CDC-apply
-    * shape at 100 TB): matched target rows mask OUT by deletion vectors
-    * and ONE new file carries the matched-updated rows (source values
-    * for columns the source provides, target values kept for the rest)
-    * plus the inserts — no data file rewrites at all.
-    *
-    * Same contracts as [[merge]]: unique source keys, unknown source
-    * columns refuse, concurrent ADDS refuse (a file appended after the
-    * key scan could hold a matched key), txn rides the commit for
-    * exactly-once streaming upserts. Row tracking: matched rows keep
-    * their ids, inserts get a fresh block. CDF: preimage/postimage/
-    * insert rows. */
+  /** Merge-on-read upsert MERGE (the DV sibling of [[merge]] — the
+    * CDC-apply shape at 100 TB): [[mergeClausesWithDv]] with
+    * [[DeltaTable.UpsertClauses]] — matched target rows mask OUT by
+    * deletion vectors and ONE new file carries the matched-updated rows
+    * plus the inserts, no data file rewrites at all. Same contracts as
+    * [[merge]], including the unknown-column refusal. */
   def mergeWithDv(source: DataFrame, keyCols: Seq[String],
                   txnAppId: Option[String] = None, txnVersion: Long = -1L): Long = {
-    requireNotAppendOnly("MERGE (deletion vectors)")
-    requireIdentityProvided(source, "MERGE")
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val sch = schema
-    keyCols.foreach(k => require(sch.fieldNames.contains(k), s"unknown key column '$k'"))
-    // source columns resolve CASE-INSENSITIVELY (Spark's default
-    // resolution) — a case-mismatched column must update, not silently
-    // null-fill past the unknown-column check (review finding)
-    val srcByLower = source.columns.map(c => c.toLowerCase -> c).toMap
-    keyCols.foreach(k => require(srcByLower.contains(k.toLowerCase),
-      s"source is missing key column '$k'"))
-    val tableCols = sch.fieldNames.map(_.toLowerCase).toSet
-    val unknown = source.columns.filter(c => !tableCols.contains(c.toLowerCase))
-    require(unknown.isEmpty,
-      s"source columns ${unknown.mkString(", ")} do not exist in the table schema")
-    val snap = snapshot
-    def txnApplied(s: Snapshot): Boolean = txnAppId.exists(app =>
-      txnVersion >= 0 && s.txns.getOrElse(app, -1L) >= txnVersion)
-    if (txnApplied(snap)) return -1L
-    val aligned = source.select(sch.fields.map(f =>
-      srcByLower.get(f.name.toLowerCase).map(col).getOrElse(lit(null))
-        .cast(f.dataType).as(f.name)).toSeq: _*).localCheckpoint(true)
-    val srcKeys = aligned.select(keyCols.map(col): _*).distinct()
-    // per-key source ranges bound the candidate files (skipForKeys); a
-    // file holding a matched key always survives pruning, so the mask
-    // plan, the matched-row read, and the insert anti-join below — all
-    // run over `cand` — stay exact while opening only candidate files
-    val cand = skipForKeys(snap, srcKeys, keyCols)
-    val plan = planDvMaskBy(cand, _.join(srcKeys, keyCols, "left_semi"))
-    val pfx = "__merge_src_"
-    val updCols = sch.fieldNames.toSeq
-      .filterNot(keyCols.contains).filter(n => srcByLower.contains(n.toLowerCase))
-    val srcRen = aligned.select((keyCols.map(col) ++
-      updCols.map(n => col(n).as(pfx + n))): _*)
-    val tgtMatched =
-      (if (rowTrackingEnabled)
-        rawFor(cand, withRowIds = true)
-          .withColumnRenamed(DeltaTable.RowIdCol, DeltaTable.MaterializedRowIdCol)
-          .drop(DeltaTable.RowCommitVersionCol)
-      else rawFor(cand))
-        .join(srcKeys, keyCols, "left_semi")
-    val rtExtras = if (!rowTrackingEnabled) Nil
-      else Seq(col(DeltaTable.MaterializedRowIdCol))
-    val matched = tgtMatched.join(srcRen, keyCols, "inner")
-      .select((sch.fieldNames.toSeq.map(n =>
-        (if (updCols.contains(n)) col(pfx + n) else col(n)).as(n)) ++ rtExtras): _*)
-    // exact despite pruning: a target key equal to a source key lives in
-    // a file whose stats admit it, i.e. a candidate file
-    val tgtKeys = rawFor(cand).select(keyCols.map(col): _*).distinct()
-    val inserts0 = aligned.join(tgtKeys, keyCols, "left_anti")
-    val inserts = if (!rowTrackingEnabled) inserts0
-      else inserts0.withColumn(DeltaTable.MaterializedRowIdCol, lit(null).cast("long"))
-    val newData = withConstraintChecks(matched.unionByName(inserts))
-    val adds = stageWrite(newData)
-    val cdf = if (!cdfEnabled) None else {
-      val pre = rawFor(cand).join(srcKeys, keyCols, "left_semi")
-        .select(sch.fieldNames.toSeq.map(col): _*)
-      Some(pre.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-        .unionByName(matched
-          .drop(DeltaTable.MaterializedRowIdCol)
-          .withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage")))
-        .unionByName(inserts0
-          .withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
-    }
-    val basePaths = snap.files.map(_.path).toSet
-    val txnActs = txnAppId.filter(_ => txnVersion >= 0)
-      .map(app => Action(txn = Some(Txn(app, txnVersion,
-        Some(System.currentTimeMillis()))))).toSeq
-    plan match {
-      case Some(pl) =>
-        // a zombie replay of an already-recorded (appId, version) batch
-        // must stay a QUIET skip even when it surfaces as a lost race
-        try commitDvMask(snap, pl, adds.map(a => Action(add = Some(a))) ++ txnActs,
-          cdf, "MERGE", Map("mode" -> "deletionVectors",
-            "predicateKeys" -> keyCols.mkString(",")),
-          extraCheck = s => !txnApplied(s) &&
-            s.files.map(_.path).forall(basePaths.contains))
-        catch {
-          case _: java.util.ConcurrentModificationException
-            if txnApplied(snapshot) => -1L
-        }
-      case None => commitInsertOnly(snap, adds, cdf, txnActs, txnApplied)
-    }
-  }
-
-  /** The insert-only outcome of a DV merge: no masks, just the new files
-    * + txn. A lost race still throws (a concurrent add may hold a matched
-    * key); only an already-recorded txn batch skips quietly. */
-  private def commitInsertOnly(snap: Snapshot, adds: Seq[AddFile],
-                               cdf: Option[DataFrame], txnActs: Seq[Action],
-                               txnApplied: Snapshot => Boolean): Long = {
-    val cdcActions = cdf.map(stageChangeFiles(_)).getOrElse(Nil)
-    val basePaths = snap.files.map(_.path).toSet
-    val actions = adds.map(a => Action(add = Some(a))) ++ cdcActions ++ txnActs ++
-      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
-        "MERGE", Map("mode" -> "deletionVectors")))))
-    var txnSkip = false
-    val c = commitStaged(snap.version,
-      adds.map(_.path) ++ cdcActions.flatMap(_.cdc).map(_.path), _ => actions,
-      s => {
-        if (txnApplied(s)) { txnSkip = true; false }
-        else s.files.map(_.path).forall(basePaths.contains)
-      })
-    if (c < 0 && !txnSkip)
-      throw new java.util.ConcurrentModificationException(
-        "MERGE (deletion vectors) lost a commit race: a concurrent " +
-          "commit added files during this merge")
-    c
+    requireKnownColumns(source)
+    mergeClausesWithDv(source, keyCols, DeltaTable.UpsertClauses, txnAppId, txnVersion)
   }
 
   private final case class DvPlanned(f: AddFile, bytes: Array[Byte], fullFile: Boolean)
-  private final case class DvPlan(planned: Seq[DvPlanned],
-                                  descFor: Map[String, DeletionVectorDescriptor],
-                                  bigDescs: Seq[DeletionVectorDescriptor])
 
-  /** The shared DV-masking core of [[deleteWithDv]]/[[updateWithDv]]:
-    * positions of rows matching `predicate` aggregate and SERIALIZE to
-    * roaring bitmaps on the EXECUTORS (merged with each file's existing
-    * bitmap, broadcast out); the driver collects only (file, compressed
-    * bitmap, cardinality). Files whose every remaining row matched
-    * degrade to plain removes; the rest get merged descriptors (one
-    * shared DV file for the large bitmaps, inline for the small). None
-    * when nothing matched. */
-  private def planDvMask(snap: Snapshot,
-                         predicate: org.apache.spark.sql.Column): Option[DvPlan] =
-    planDvMaskBy(snap, _.filter(coalesce(predicate, lit(false))))
-
-  /** [[planDvMask]] with an arbitrary MATCHER over the meta-carrying
-    * frame (must preserve `__meta_fname`/`__meta_pos`) — the join-based
-    * shape [[mergeWithDv]] needs, where "matched" is a semi-join on the
-    * source keys rather than a row predicate. */
+  /** The mask half of [[dml]]: positions of the rows `matcher` keeps
+    * (over the meta-carrying frame; it must preserve
+    * `__meta_fname`/`__meta_pos`) aggregate and SERIALIZE to roaring
+    * bitmaps on the EXECUTORS (merged with each file's existing bitmap,
+    * broadcast out); the driver collects only (file, compressed bitmap,
+    * cardinality). Files whose every remaining row matched are marked
+    * `fullFile` (they degrade to plain removes). Nil when nothing
+    * matched. Writes nothing: [[commitDml]] writes the DV file after the
+    * commit's data files are staged ([[maskedReAdds]]). */
   private def planDvMaskBy(snap: Snapshot,
-                           matcher: DataFrame => DataFrame): Option[DvPlan] = {
+                           matcher: DataFrame => DataFrame): Seq[DvPlanned] = {
     require(dvEnabled,
       s"${DeltaTable.DvConfigKey} is not 'true' on this table — enable it " +
         "in the table configuration (create(..., configuration)) first")
-    if (snap.files.isEmpty) return None
+    if (snap.files.isEmpty) return Nil
     // existing bitmaps ride to the executors by broadcast so the merge
     // with this operation's fresh positions happens where the positions are
     val oldBitmaps: Map[String, Array[Byte]] =
@@ -3743,7 +3450,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       .select(col("__fname"), col("s._1").as("bytes"), col("s._2").as("card"))
       .collect()
       .map(r => r.getString(0) -> (r.getAs[Array[Byte]](1), r.getLong(2))).toMap
-    if (matched.isEmpty) return None
+    if (matched.isEmpty) return Nil
     val byKey = snap.files.map(f => fileKey(snap, f) -> f).toMap
     require(byKey.size == snap.files.size,
       "internal: file keys must be unique across the snapshot")
@@ -3754,62 +3461,27 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     def numRecords(f: AddFile): Option[Long] =
       f.stats.map(s => Actions.mapper.readTree(s).path("numRecords").asLong(-1L))
         .filter(_ >= 0L)
-    val planned = affected.map { f =>
+    affected.map { f =>
       val (bytes, card) = matched(fileKey(snap, f))
       DvPlanned(f, bytes, numRecords(f).contains(card))
     }
-    // batch every file-backed DV of this commit into ONE DV file, inline
-    // the small ones
-    val withBytes = planned.filterNot(_.fullFile).map(p => p -> p.bytes)
-    val (small, big) = withBytes.partition(_._2.length <= DeletionVectors.InlineMaxBytes)
-    val bigDescs =
-      if (big.isEmpty) Nil
-      else DeletionVectors.writeDvFile(fs, path, big.map(_._2))
-    val descFor: Map[String, DeletionVectorDescriptor] =
-      (small.map { case (p, b) =>
-        p.f.path -> DeletionVectors.inlineDescriptor(b)
-      } ++ big.map(_._1.f.path).zip(bigDescs)).toMap
-    Some(DvPlan(planned, descFor, bigDescs))
   }
 
-  /** Commit a [[planDvMask]] result plus any extra adds/change files:
-    * removes precede the DV re-adds (ReplayState replays in order,
-    * keyed by path); the lost-update guard requires every affected file
-    * live WITH the exact descriptor the mask merged from. A lost race
-    * discards the new data, change and DV files and throws. */
-  private def commitDvMask(snap: Snapshot, plan: DvPlan, extraAdds: Seq[Action],
-                           cdf: Option[DataFrame], operation: String,
-                           params: Map[String, String],
-                           extraCheck: Snapshot => Boolean = _ => true): Long = {
-    val cdcActions = cdf.map(stageChangeFiles(_)).getOrElse(Nil)
-    val expected: Map[String, Option[DeletionVectorDescriptor]] =
-      plan.planned.map(p => p.f.path -> p.f.deletionVector).toMap
-    val now = System.currentTimeMillis()
-    val rest =
-      plan.planned.map(p => Action(remove = Some(removeOf(p.f, now)))) ++
-        plan.planned.filterNot(_.fullFile).map(p =>
-          Action(add = Some(p.f.copy(dataChange = true,
-            deletionVector = Some(plan.descFor(p.f.path)))))) ++
-        extraAdds ++
-        cdcActions ++
-        Seq(Action(commitInfo = Some(CommitInfo(now, operation, params))))
-    val created = extraAdds.flatMap(_.add).map(_.path) ++
-      cdcActions.flatMap(_.cdc).map(_.path) ++
-      plan.bigDescs.map(d => DeletionVectors.relativeFileName(d.pathOrInlineDv)).distinct
-    // the PROTOCOL regenerates per attempt: a fixed action built from the
-    // base snapshot would clobber a feature a concurrent commit raised
-    // while this one retried (the widenColumnType invariant)
-    val committed = commitStaged(snap.version, created,
-      att => Action(protocol = Some(protocolWithDv(att))) +: rest,
-      s => {
-        val live = s.files.map(f => f.path -> f.deletionVector).toMap
-        expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
-      })
-    if (committed < 0)
-      throw new java.util.ConcurrentModificationException(
-        s"$operation (deletion vectors) lost a commit race: an affected file " +
-          "was rewritten or DV'd concurrently")
-    committed
+  /** The re-adds of a masked commit: every partly-masked file with its
+    * merged deletion vector — inline up to
+    * [[DeletionVectors.InlineMaxBytes]], the larger ones batched into ONE
+    * new DV file, whose name is appended to `created` so a failure
+    * before the commit deletes it too. */
+  private def maskedReAdds(masks: Seq[DvPlanned],
+                           created: mutable.Buffer[String]): Seq[AddFile] = {
+    val partial = masks.filterNot(_.fullFile)
+    val big = partial.filter(_.bytes.length > DeletionVectors.InlineMaxBytes)
+    val bigDescs =
+      if (big.isEmpty) Nil else DeletionVectors.writeDvFile(fs, path, big.map(_.bytes))
+    created ++= bigDescs.headOption.map(d => DeletionVectors.relativeFileName(d.pathOrInlineDv))
+    val descFor = big.map(_.f.path).zip(bigDescs).toMap
+    partial.map(p => p.f.copy(dataChange = true, deletionVector = Some(
+      descFor.getOrElse(p.f.path, DeletionVectors.inlineDescriptor(p.bytes)))))
   }
 
   /** The protocol action a feature-requiring commit carries: versions
@@ -3895,44 +3567,29 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * non-matching rows in rewritten files are carried unchanged. Returns
     * the committed version, or -1 when nothing matched. */
   def update(predicate: org.apache.spark.sql.Column,
-             set: Map[String, org.apache.spark.sql.Column]): Long = {
-    requireNotAppendOnly("UPDATE")
-    require(set.nonEmpty, "update needs at least one SET column")
+             set: Map[String, org.apache.spark.sql.Column]): Long =
+    dmlWhere("UPDATE", mask = false, predicate, Some(set))
+
+  /** The UPDATE/DELETE half of [[dml]]: the predicate-TRUE rows of the
+    * files whose stats admit a match ([[skipForDml]]) are claimed — a
+    * NULL predicate claims nothing (three-valued logic) — and UPDATE
+    * (`set` defined) re-adds them transformed. */
+  private def dmlWhere(op: String, mask: Boolean, predicate: org.apache.spark.sql.Column,
+                       set: Option[Map[String, org.apache.spark.sql.Column]]): Long = {
+    requireNotAppendOnly(if (mask) s"$op (deletion vectors)" else op)
     val sch = schema
-    set.keys.foreach(k => require(sch.fieldNames.contains(k), s"unknown SET column '$k'"))
-    val snap = snapshot
-    val affected = filesMatching(skipForDml(snap, predicate), _.filter(predicate))
-    if (affected.isEmpty) return -1L
-    // row tracking: every row keeps its materialized _row_id; UPDATED
-    // rows null their materialized commit version so the read path falls
-    // through to the rewritten file's defaultRowCommitVersion — i.e.
-    // this UPDATE's commit — exactly the protocol's semantics
-    val rtExtras: Seq[org.apache.spark.sql.Column] =
-      if (!rowTrackingEnabled) Nil
-      else Seq(col(DeltaTable.MaterializedRowIdCol),
-        org.apache.spark.sql.functions.when(coalesce(predicate, lit(false)),
-          lit(null).cast("long"))
-          .otherwise(col(DeltaTable.MaterializedRcvCol))
-          .as(DeltaTable.MaterializedRcvCol))
-    val rewritten = materializingRowIds(snap.copy(files = affected))
-      .select((sch.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            org.apache.spark.sql.functions.when(predicate, e.cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq ++ rtExtras): _*)
-    val cdf = if (!cdfEnabled) None else {
-      val changedOld = dfFor(snap.copy(files = affected))
-        .filter(coalesce(predicate, lit(false)))
-      val changedNew = changedOld.select(sch.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-      }.toSeq: _*)
-      Some(changedOld.withColumn(DeltaTable.ChangeTypeCol, lit("update_preimage"))
-        .unionByName(changedNew.withColumn(DeltaTable.ChangeTypeCol, lit("update_postimage"))))
+    set.foreach { s =>
+      require(s.nonEmpty, "update needs at least one SET column")
+      s.keys.foreach(k => require(sch.fieldNames.contains(k), s"unknown SET column '$k'"))
     }
-    commitRewrite(affected, withConstraintChecks(rewritten), "UPDATE", changes = cdf)
+    val snap = snapshot
+    val hit = col("__act") === 1
+    dml(op, mask, snap, skipForDml(snap, predicate), new Claim(
+      _.withColumn("__act", coalesce(predicate, lit(false)).cast("int")),
+      updated = set.map(_ => hit),
+      deleted = if (set.isEmpty) Some(hit) else None,
+      newValue = n => set.flatMap(_.get(n)).map(_.cast(sch(n).dataType))
+        .getOrElse(col(n)).as(n)))
   }
 
   /** Align a DML source frame the way [[append]] does: compute omitted
@@ -3992,7 +3649,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
         .withColumn(DeltaTable.ChangeTypeCol, lit("delete"))
         .unionByName(checked.withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
     val basePaths = snap.files.map(_.path).toSet
-    commitRewrite(affected, survivors.unionByName(checkedRw), "WRITE",
+    commitDml(affected, Some(survivors.unionByName(checkedRw)), "WRITE",
       Map("mode" -> "Overwrite", "predicate" -> predicate.toString),
       extraCheck = s => s.files.map(_.path).forall(basePaths.contains),
       conflictHint = "a concurrent commit added or rewrote files during this overwrite",
@@ -4012,7 +3669,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       dfFor(snap).withColumn(DeltaTable.ChangeTypeCol, lit("delete"))
         .unionByName(checked.withColumn(DeltaTable.ChangeTypeCol, lit("insert"))))
     val basePaths = snap.files.map(_.path).toSet
-    commitRewrite(snap.files, checked, "WRITE", Map("mode" -> "Overwrite"),
+    commitDml(snap.files, Some(checked), "WRITE", Map("mode" -> "Overwrite"),
       extraCheck = s => s.files.map(_.path).forall(basePaths.contains),
       conflictHint = "a concurrent commit added or rewrote files during this overwrite",
       changes = cdf)
@@ -4034,9 +3691,9 @@ final class DeltaTable(spark: SparkSession, val path: String) {
         "(appends and file maintenance only)")
 
   /** Live files containing at least one row surviving `restrict` (a
-    * predicate filter or a key semi-join) — the ONE row→file mapping
-    * shared by [[merge]]/[[delete]]/[[update]] so path normalization can
-    * never diverge between them. Bounded collect: ≤ file count.
+    * claim filter or a predicate) — the rewrite half of [[dml]], also
+    * used by [[overwriteWhere]], so path normalization can never diverge
+    * between them. Bounded collect: ≤ file count.
     *
     * Cost note: the row-level scan runs over the stats-index SURVIVORS
     * only — callers pre-restrict the snapshot through [[skipForDml]] /
@@ -4099,23 +3756,33 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     stage(toPhysicalForWrite(arranged, writeSchema), physicalPartNames(parts))
   }
 
-  /** Stage `newData`, then atomically commit it as adds plus `affected`
-    * as removes — the shared copy-on-write tail of [[merge]], [[delete]]
-    * and [[update]]. A failed commit check is a LOST RACE, not a no-op:
-    * the staged files are cleaned up and ConcurrentModificationException
-    * thrown, so callers can never mistake an unapplied DML for "nothing
-    * matched" (compact stays quiet on races — skipping an optimization
-    * is safe; skipping a DML is not). */
-  private def commitRewrite(affected: Seq[AddFile], newData: DataFrame,
-                            operation: String,
-                            params: Map[String, String] = Map.empty,
-                            extraCheck: Snapshot => Boolean = _ => true,
-                            conflictHint: String =
-                              "a concurrent commit rewrote files this operation was based on",
-                            changes: Option[DataFrame] = None,
-                            txn: Option[(String, Long)] = None,
-                            writeSchema: StructType = schema,
-                            extraActions: Seq[Action] = Nil): Long = {
+  /** THE commit tail of every DML ([[dml]], [[overwriteWhere]],
+    * [[overwrite]]): stage `newData`, then the change rows, then — for a
+    * masked DML — the one DV file for the bitmaps too large to inline,
+    * and commit them in one version that removes the `affected` files;
+    * `masks` re-adds the partly-claimed ones with their merged deletion
+    * vectors (removes precede the re-adds: ReplayState replays in order,
+    * keyed by path) and raises the protocol. A failure before the commit
+    * deletes everything this tail staged; the commit goes through
+    * [[commitStaged]].
+    *
+    * A failed commit check is a LOST RACE, not a no-op: the staged files
+    * are cleaned up and ConcurrentModificationException thrown, so
+    * callers can never mistake an unapplied DML for "nothing matched"
+    * (compact stays quiet on races — skipping an optimization is safe;
+    * skipping a DML is not). Losing to the SAME txn batch is the
+    * idempotent replay and returns -1. */
+  private def commitDml(affected: Seq[AddFile], newData: Option[DataFrame],
+                        operation: String,
+                        params: Map[String, String] = Map.empty,
+                        extraCheck: Snapshot => Boolean = _ => true,
+                        conflictHint: String =
+                          "a concurrent commit rewrote files this operation was based on",
+                        changes: Option[DataFrame] = None,
+                        txn: Option[(String, Long)] = None,
+                        writeSchema: StructType = schema,
+                        extraActions: Seq[Action] = Nil,
+                        masks: Seq[DvPlanned] = Nil): Long = {
     // idempotent-replay pre-check (the append path's txn contract, for
     // DML): a batch the table already recorded skips BEFORE staging;
     // the same predicate re-runs inside the commit check, so a zombie
@@ -4124,28 +3791,42 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       s.txns.getOrElse(app, -1L) >= v }
     val base = snapshot
     if (txnApplied(base)) return -1L
-    val adds = stageWrite(newData, writeSchema)
-    val cdcActions = changes.map(stageChangeFiles(_, writeSchema)).getOrElse(Nil)
+    val created = mutable.ArrayBuffer.empty[String]
+    val (adds, cdcActions, reAdds) =
+      try {
+        val adds = newData.map(stageWrite(_, writeSchema)).getOrElse(Nil)
+        created ++= adds.map(_.path)
+        val cdc = changes.map(stageChangeFiles(_, writeSchema)).getOrElse(Nil)
+        created ++= cdc.flatMap(_.cdc).map(_.path)
+        (adds, cdc, maskedReAdds(masks, created))
+      } catch { case e: Throwable =>
+        discard(created.toSeq.map(new Path(path, _)))
+        throw e
+      }
     // a file is "still ours" only with the same path AND the same DV
     // descriptor — a concurrent DV delete keeps the path live while
-    // changing the logical content this rewrite was computed from
+    // changing the logical content this commit was computed from
     val expected = affected.map(f => f.path -> f.deletionVector).toMap
+    val now = System.currentTimeMillis()
     val actions = extraActions ++
+      affected.map(f => Action(remove = Some(removeOf(f, now)))) ++
+      reAdds.map(a => Action(add = Some(a))) ++
       adds.map(a => Action(add = Some(a))) ++
       cdcActions ++
-      affected.map(f => Action(remove = Some(removeOf(f,
-        System.currentTimeMillis())))) ++
-      txn.map { case (app, v) => Action(txn = Some(Txn(app, v,
-        Some(System.currentTimeMillis())))) }.toSeq ++
-      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), operation, params,
+      txn.map { case (app, v) => Action(txn = Some(Txn(app, v, Some(now)))) }.toSeq ++
+      Seq(Action(commitInfo = Some(CommitInfo(now, operation, params,
         operationMetrics = Some(Map(
           "numAddedFiles" -> adds.size.toString,
-          "numRemovedFiles" -> affected.size.toString,
+          "numRemovedFiles" -> (affected.size - reAdds.size).toString,
           "numAddedChangeFiles" -> cdcActions.size.toString,
           "numAddedBytes" -> adds.map(_.size).sum.toString))))))
     var txnSkip = false
-    val committed = commitStaged(base.version,
-      adds.map(_.path) ++ cdcActions.flatMap(_.cdc).map(_.path), _ => actions,
+    // a masked commit's PROTOCOL regenerates per attempt: a fixed action
+    // built from the base snapshot would clobber a feature a concurrent
+    // commit raised while this one retried (the widenColumnType invariant)
+    val committed = commitStaged(base.version, created.toSeq,
+      att => if (masks.isEmpty) actions
+             else Action(protocol = Some(protocolWithDv(att))) +: actions,
       s => {
         if (txnApplied(s)) { txnSkip = true; false }
         else {
@@ -4153,8 +3834,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
           expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
         }
       })
-    // losing to the SAME txn batch is the documented idempotent replay;
-    // losing to a concurrent rewrite is a race
     if (committed < 0 && !txnSkip)
       throw new java.util.ConcurrentModificationException(
         s"$operation lost a commit race: $conflictHint")

@@ -457,8 +457,9 @@ case class GenerateManifestCommand(path: String, mode: String)
   * MERGE-ON-READ ([[DeltaTable.deleteWithDv]]) — delta-spark's
   * behavior: the table property is SQL's only lever to pick the DV
   * path, and enabling it declares exactly that intent. Semantics are
-  * identical either way (the DV engines are oracle-pinned against
-  * their copy-on-write twins); only the file economics differ. */
+  * identical either way: one DML body claims the rows for both, and
+  * only how the claimed rows leave their files (rewrite or deletion
+  * vector) differs. */
 case class DeltaDeleteCommand(path: String, condSql: String)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = CmdSchema.attrs("version" -> LongType)

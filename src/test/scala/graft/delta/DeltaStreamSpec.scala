@@ -488,6 +488,21 @@ class DeltaStreamSpec extends SparkSpec {
     assert(out.toDF.filter(col("id") === 4L).head().getString(1) === "four!")
   }
 
+  test("sink mergeKeys on a DV table: the upsert masks by DV and rewrites no original file") {
+    val outDir = tmpDir("dsink-updv-out") + "/t"
+    val out = DeltaTable.forPath(spark, outDir).create(schema,
+      configuration = Map(DeltaTable.DvConfigKey -> "true"))
+    out.append(rows(0 until 8))
+    val before = out.snapshot.files.map(_.path).toSet
+    new DeltaStreamSink(spark, outDir, Nil, "upsert-dv-test", Seq("id"))
+      .addBatch(0L, Seq((4L, "four!"), (20L, "twenty")).toDF("id", "name"))
+    assert(before.subsetOf(out.snapshot.files.map(_.path).toSet),
+      "a DV-table upsert batch must not rewrite any original file")
+    assert(out.snapshot.files.exists(_.deletionVector.isDefined))
+    val got = out.toDF.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size === 9 && got(4L) === "four!" && got(20L) === "twenty")
+  }
+
   test("readChangeFeed: the stream replays exactly the batch change feed; DML needs no ignore*") {
     val t = DeltaTable.forPath(spark, tmpDir("dstream-cdf")).create(schema,
       configuration = Map(DeltaTable.CdfConfigKey -> "true"))

@@ -116,4 +116,56 @@ class MergeClausesDvSpec extends SparkSpec {
       Seq("id"), Seq(WhenMatchedUpdate())) === -1L)
     assert(t.log.latestVersion() === v0)
   }
+
+  test("parity with copy-on-write for every DML shape: rows, row ids and CDF agree") {
+    def twin(name: String, dv: Boolean): DeltaTable = {
+      val t = DeltaTable.forPath(spark, tmpDir(name)).create(schema, configuration = Map(
+        DeltaTable.CdfConfigKey -> "true", DeltaTable.RowTrackingConfigKey -> "true") ++
+        (if (dv) Map(DeltaTable.DvConfigKey -> "true") else Map.empty))
+      // one file, so both twins number the same rows 0..9
+      t.append((0L until 10L).map(i => (i, i * 10, "base")).toDF("id", "v", "tag").coalesce(1))
+      t
+    }
+    val upsert = Seq((2L, 22L, "U"), (20L, 200L, "I")).toDF("id", "v", "tag")
+    val src = Seq((1L, 11L, "D"), (2L, 22L, "U"), (3L, 33L, "K"), (20L, 200L, "I"),
+      (21L, 210L, "X")).toDF("id", "v", "tag")
+    val allFive = Seq(
+      WhenMatchedDelete(condition = Some("s.tag = 'D'")),
+      WhenMatchedUpdate(set = Map("v" -> "s.v", "tag" -> "'upd'"), condition = Some("s.tag = 'U'")),
+      WhenNotMatchedInsert(condition = Some("s.tag = 'I'")),
+      WhenNotMatchedBySourceDelete(condition = Some("t.id = 7")),
+      WhenNotMatchedBySourceUpdate(set = Map("tag" -> "'stale'"), condition = Some("t.id >= 8")))
+    val shapes: Seq[(String, (DeltaTable, Boolean) => Long)] = Seq(
+      "upsert merge" -> ((t, dv) =>
+        if (dv) t.mergeWithDv(upsert, Seq("id")) else t.merge(upsert, Seq("id"))),
+      "five-clause merge" -> ((t, dv) =>
+        if (dv) t.mergeClausesWithDv(src, Seq("id"), allFive)
+        else t.mergeClauses(src, Seq("id"), allFive)),
+      "update" -> ((t, dv) => {
+        val (p, set) = (col("id") % 3 === 0, Map("v" -> (col("v") + 1)))
+        if (dv) t.updateWithDv(p, set) else t.update(p, set)
+      }),
+      "delete" -> ((t, dv) =>
+        if (dv) t.deleteWithDv(col("id") % 4 === 1) else t.delete(col("id") % 4 === 1)))
+    // an inserted row's id depends on its position in the new file, which
+    // differs between the two layouts: compare it as "fresh"
+    def state(t: DeltaTable): Seq[(Long, Long, String, Long, Long)] =
+      t.toDFWithRowIds.select(col("id"), col("v"), col("tag"), col(DeltaTable.RowIdCol),
+        col(DeltaTable.RowCommitVersionCol)).as[(Long, Long, String, Long, Long)].collect()
+        .map { case (id, v, tag, rid, rcv) => (id, v, tag, if (rid < 10L) rid else -1L, rcv) }
+        .sorted.toSeq
+    def changes(t: DeltaTable, v: Long): Seq[(Long, Long, String, String)] =
+      t.changes(v, v).select(col("id"), col("v"), col("tag"), col(DeltaTable.ChangeTypeCol))
+        .as[(Long, Long, String, String)].collect().sorted.toSeq
+    shapes.foreach { case (name, run) =>
+      val key = name.replace(' ', '-')
+      val (cow, mor) = (twin(s"mcdv-par-$key", dv = false), twin(s"mcdv-par-$key-dv", dv = true))
+      val (vc, vm) = (run(cow, false), run(mor, true))
+      assert(vc > 0L && vc === vm, s"$name: versions")
+      assert(mor.snapshot.files.exists(_.deletionVector.isDefined), s"$name: no mask")
+      assert(state(cow) === state(mor), s"$name: rows and row ids")
+      assert(changes(cow, vc) === changes(mor, vm), s"$name: change feed")
+      assert(changes(cow, vc).nonEmpty, s"$name: empty change feed")
+    }
+  }
 }
