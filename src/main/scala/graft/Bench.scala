@@ -384,7 +384,7 @@ object Bench {
         // measures the claim that makes it worth having — daily feature
         // maintenance costs ∝ the day's change batch, never the
         // accumulated edge set. Round-19 findings that shaped this leg
-        // (measured with tools/AdjProbe on a quiet host):
+        // (measured with a one-off profiling probe on a quiet host):
         //  - the fold's cost is FLAT in |E| (~4.5 s of fixed job
         //    structure + batch-proportional probes) while the recompute
         //    is linear in |E| — break-even sits near |E| ≈ 1M edges, so
@@ -412,10 +412,9 @@ object Bench {
         //  - graph_recompute: the from-scratch twin over the post graph.
         locally {
           val rep = sys.env.getOrElse("SPARK_GRAFT_BENCH_GRAPH_REP", "16").toInt
-          // fixture shared with tools/AdjProbe — ONE definition, so the
-          // probe always measures the leg it explains (and the replica
-          // id-offset bug class stays fixed in one place)
-          val regime = tools.RegimeGraph(spark, sfDir, rep)
+          // ONE definition of the fixture, so the replica id-offset bug
+          // class stays fixed in one place
+          val regime = RegimeGraph(spark, sfDir, rep)
           val pairs = regime.pairs
           val isChange = regime.isChange
           val ins = pairs.where(isChange).localCheckpoint()

@@ -43,7 +43,7 @@ object GraftSession {
       // bench interleaves 36 × 4 iterations). The default 100-entry LRU
       // thrashes at that working set, so every iteration re-pays janino
       // compilation AND fresh-class JIT warmup for every query — measured
-      // round 20 (tools/G4Probe): one full 36-query pass 66.2 s → 49.5 s,
+      // round 20: one full 36-query pass 66.2 s → 49.5 s,
       // graph_pagerank in-bench 6.9 s → 3.2 s, with identical results.
       // This caches compiled CODE keyed on generated source (Spark's own
       // mechanism, default-on), never data or results; entries are weakly

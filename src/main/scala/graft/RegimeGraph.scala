@@ -1,20 +1,19 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The triangle-IVM regime fixture shared by the bench maintenance leg
-  * (`graft.Bench`) and the profiling probe ([[AdjProbe]]): the sf
-  * part-adjacency graph (consecutive lineitems of one order share an
-  * edge between their parts) replicated `rep`× under DISJOINT id
+/** The triangle-IVM regime fixture of the bench maintenance leg
+  * (`graft.Bench`): the sf part-adjacency graph (consecutive lineitems
+  * of one order share an edge between their parts) replicated `rep`×
+  * under DISJOINT id
   * spaces — the ×N move that puts the graph in the |E| regime the fold
   * exists for without inventing a synthetic distribution — plus the
   * batch-sized daily-change split (1/4096 of copy 0's edges; a daily
   * batch does not scale with the accumulated graph).
   *
-  * One definition so the probe always measures the leg it explains —
-  * the two copies previously drifted one constant apart and that
-  * constant was a bug: the id offset must exceed l_partkey's range
+  * Two copies of it once drifted one constant apart, and that constant
+  * was a bug: the id offset must exceed l_partkey's range
   * (200,000 × SF), and the old `1 << 20` overflowed at SF ≥ 10,
   * colliding copy id-spaces into duplicate edges that trip
   * triangleDelta's |sign| > 1 guard. 2^32 covers any SF this harness

@@ -22,6 +22,9 @@ import org.apache.spark.sql.types._
   * errors re-parses the message once per field unless the filter sits
   * above a node the optimizer cannot push it through (ingest's
   * `PipelineStages.split` observation: one parse per message).
+  * Transform outputs reach the same pass as VARIANT values set at their
+  * target paths (the reference transforms, then coerces: src/lib.rs:827-832),
+  * so this is the only module that knows how a value becomes a table type.
   */
 object Coercions {
 
@@ -47,8 +50,10 @@ object Coercions {
     concat(lit(path + ": "), msg)
 
   /** Coerce a VARIANT value `v` (the field at `path`, already extracted) to
-    * Delta/Spark type `dt`. */
-  def coerceField(v: Column, dt: DataType, path: String): Coerced = dt match {
+    * Delta/Spark type `dt`; a non-null value `set` holds for a path
+    * (`a.b.c`) beneath replaces the message's own field there. */
+  def coerceField(v: Column, dt: DataType, path: String,
+                  set: Map[String, Column] = Map.empty): Coerced = dt match {
     case StringType =>
       // C1: string passes through; anything else → compact JSON text.
       // try_variant_get(.., string) renders scalars exactly like serde_json
@@ -72,20 +77,24 @@ object Coercions {
 
     case st: StructType =>
       val fields = st.fields.map { f =>
-        val child = try_variant_get(v, "$." + f.name, "variant")
-        f.name -> coerceField(child, f.dataType, s"$path.${f.name}")
+        val p = s"$path.${f.name}"
+        f.name -> coerceField(fieldOf(v, f.name, p, set), f.dataType, p, set)
       }
       val present = v.isNotNull && !is_variant_null(v)
+      // a value set beneath a missing struct builds it (the reference's
+      // set_value creates intermediate objects, transforms.rs:323-371)
+      val built = set.collect { case (p, r) if p.startsWith(path + ".") => r.isNotNull }
+        .foldLeft(present)(_ || _)
       // a scalar/array where the schema wants a struct must DEAD-LETTER:
       // every child get would be null, silently passing a struct of nulls
       // (the array branch below already errors symmetrically)
       val isObject = schema_of_variant(v).startsWith("OBJECT")
-      val value = when(!present, lit(null).cast(st))
+      val value = when(!built, lit(null).cast(st))
         .otherwise(struct(fields.map { case (n, c) => c.value.as(n) }.toSeq: _*))
       val errors = fields.map(_._2.error)
       val error = when(present && !isObject,
           err(path, concat(lit("cannot coerce to struct: "), to_json(v))))
-        .otherwise(when(present, coalesce(errors.toSeq: _*)))
+        .otherwise(when(built, coalesce(errors.toSeq: _*)))
       Coerced(value, error)
 
     case ArrayType(et, _) =>
@@ -109,12 +118,18 @@ object Coercions {
       Coerced(value, error)
   }
 
+  /** Field `name` of the VARIANT object `v`, unless `set` holds a non-null
+    * value for its `path` (null-result-not-set). */
+  private def fieldOf(v: Column, name: String, path: String, set: Map[String, Column]): Column =
+    coalesce(set.getOrElse(path, lit(null)), try_variant_get(v, "$." + name, "variant"))
+
   /** Coerce a whole message: VARIANT root → (typed struct, array of field
-    * errors). Empty error array ⇒ clean row. */
-  def coerceMessage(v: Column, schema: StructType): (Column, Column) = {
+    * errors). Empty error array ⇒ clean row. `set`: transform outputs by
+    * target path, SQL-null where a transform yielded null. */
+  def coerceMessage(v: Column, schema: StructType,
+                    set: Map[String, Column] = Map.empty): (Column, Column) = {
     val fields = schema.fields.map { f =>
-      val child = try_variant_get(v, "$." + f.name, "variant")
-      f.name -> coerceField(child, f.dataType, f.name)
+      f.name -> coerceField(fieldOf(v, f.name, f.name, set), f.dataType, f.name, set)
     }
     val value = struct(fields.map { case (n, c) => c.value.as(n) }.toSeq: _*)
     val errors = array_compact(array(fields.map(_._2.error).toSeq: _*))

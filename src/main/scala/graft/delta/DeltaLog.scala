@@ -1132,10 +1132,11 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * against it ([[validateChecksum]]) to catch log corruption (a
     * truncated JSON, a lost add line, a bad backfill) the moment it
     * happens instead of as silently wrong query results. Write failures
-    * are non-fatal — the commit is already durable and the next commit
-    * writes the next checksum. */
+    * are a logged warning — the commit is already durable and the next
+    * commit writes the next checksum — and leave no temp file behind. */
   private def writeChecksum(version: Long, snap: Snapshot,
-                            actions: Seq[Action]): Unit =
+                            actions: Seq[Action]): Unit = {
+    val tmp = new Path(logPath, f".crc-tmp-${java.util.UUID.randomUUID()}")
     try {
       val live = liveAfter(snap, actions)
       val crc = VersionChecksum(
@@ -1150,13 +1151,18 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
       // TRUNCATED crc (a parse error would read as corruption on a
       // healthy table); a lost rename race just means the winner's
       // identical-content file stands
-      val tmp = new Path(logPath, f".crc-tmp-${java.util.UUID.randomUUID()}")
       val out = fs.create(tmp, true)
       try out.write(mapper.writeValueAsString(crc).getBytes(StandardCharsets.UTF_8))
       finally out.close()
       if (!fs.rename(tmp, checksumFile(version))) fs.delete(tmp, false)
       ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      DeltaLog.logger.warn(s"checksum of version $version of $tablePath not written; " +
+        "the commit stands", e)
+      try fs.delete(tmp, false)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
 
   /** Cross-check a snapshot's replayed state against its commit's
     * `.crc` checksum. Missing checksum (pre-feature history, a writer

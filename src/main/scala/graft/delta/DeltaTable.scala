@@ -5627,21 +5627,24 @@ final class DeltaTable(spark: SparkSession, val path: String) {
 
   /** [[compact]]'s greedy packing as a seam (driver-side, exact
     * `add.size` metadata): deterministic (partition, path) order so a
-    * replay packs identically. */
+    * replay packs identically. A bin of one file is dropped, since
+    * rewriting it changes nothing, unless the file has a deletion vector
+    * (the rewrite purges its deleted rows). */
   private[delta] def compactBins(snap: Snapshot, small: Seq[AddFile],
                                  target: Long): Map[String, Int] = {
-    val m = scala.collection.mutable.HashMap.empty[String, Int]
-    var bin = -1
+    import scala.collection.mutable.ArrayBuffer
+    val bins = ArrayBuffer.empty[ArrayBuffer[AddFile]]
     small.groupBy(_.partitionValues).toSeq
       .sortBy(_._1.toSeq.sorted.mkString("|")).foreach { case (_, fs) =>
         var used = Long.MaxValue // forces a fresh bin per partition
         fs.sortBy(_.path).foreach { f =>
-          if (used > target - f.size) { bin += 1; used = 0L }
+          if (used > target - f.size) { bins += ArrayBuffer.empty; used = 0L }
           used += f.size
-          m(fileKey(snap, f)) = bin
+          bins.last += f
         }
       }
-    m.toMap
+    bins.filter(b => b.size > 1 || b.exists(_.deletionVector.isDefined)).zipWithIndex
+      .flatMap { case (b, i) => b.map(f => fileKey(snap, f) -> i) }.toMap
   }
 
   /** Small-file compaction (the reference's min_bytes_per_file lever, B3,
@@ -5652,22 +5655,22 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * Output sizing: files greedily pack into bins of
     * `max(minBytes, delta.targetFileSize)` bytes per PARTITION (exact
     * `add.size` values, driver-side — the file list is log metadata).
-    * The max keeps compaction CONVERGENT: with one input per bin
-    * excepted, outputs land at or above `minBytes`, so a re-run never
-    * re-selects what a pass just wrote. Rows route to their bin by
-    * source file name (UUID-unique within a table) and one
-    * range-partition task writes ≈ one bin — a 100 TB streaming table's
-    * small-file debt compacts into target-size files with one shuffle of
-    * ONLY the small bytes, instead of funneling through the single
-    * output task a coalesce(1) would schedule. */
+    * The max keeps compaction CONVERGENT, and a bin of one file is not
+    * rewritten (a partition's lone small file stays as it is), so a
+    * re-run never rewrites a file to itself. Returns -1 when no bin is
+    * left. Rows route to their bin by source file name (UUID-unique
+    * within a table) and one range-partition task writes ≈ one bin — a
+    * 100 TB streaming table's small-file debt compacts into target-size
+    * files with one shuffle of ONLY the small bytes, instead of
+    * funneling through the single output task a coalesce(1) would
+    * schedule. */
   def compact(minBytes: Long = 128L * 1024 * 1024,
               where: Option[org.apache.spark.sql.Column] = None): Long = {
     val snap = snapshot
     // `where` = partition-scoped OPTIMIZE (the `OPTIMIZE t WHERE day = x`
     // shape): at 100 TB you compact yesterday's partition, not the table
     val small0 = snap.files.filter(_.size < minBytes)
-    val small = where.fold(small0)(p => filesInPartitions(small0, p))
-    if (small.size < 2) return -1L
+    val candidates = where.fold(small0)(p => filesInPartitions(small0, p))
     val parts = partitionColumns
     val target = {
       val prop = snap.metadata.flatMap(_.configuration.get(DeltaTable.TargetFileSizeKey))
@@ -5679,7 +5682,9 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     // are the [[fileKey]] suffix (partition dirs + name) — a BASENAME
     // key would collide across partition dirs (one job reuses its
     // part-file name in each) and silently merge two partitions' bins
-    val binOf = compactBins(snap, small, target)
+    val binOf = compactBins(snap, candidates, target)
+    if (binOf.isEmpty) return -1L
+    val small = candidates.filter(f => binOf.contains(fileKey(snap, f)))
     val totalBins = binOf.values.max + 1
     // dfFor handles the declared-schema read (old files null-fill evolved
     // columns) — an inferred read crashes after schema evolution

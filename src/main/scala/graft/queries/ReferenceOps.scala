@@ -179,9 +179,9 @@ object ReferenceOps extends QueryModule {
         Tables.events(s, d)
           .select(col("event_id"), parse_json(json).as("v"))
           .select(col("event_id"),
-            JmesPath.toColumnOverVariant(JmesPath.parse("a[1].x"), col("v"))
+            JmesPath.lowerOverVariant(JmesPath.parse("a[1].x"), col("v")).value
               .cast("long").as("x1"),
-            JmesPath.toColumnOverVariant(JmesPath.parse("a[0] | x"), col("v"))
+            JmesPath.lowerOverVariant(JmesPath.parse("a[0] | x"), col("v")).value
               .cast("long").as("x0"))
           .orderBy(col("event_id"))
       },

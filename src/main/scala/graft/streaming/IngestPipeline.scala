@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import graft.coercions.Coercions
 import graft.delta.{DeltaTable, PostCommitFailure}
 import graft.serialization.Decoders
-import graft.transforms.{JmesPath, KafkaMeta, Transformer}
+import graft.transforms.{JmesPath, KafkaMeta}
 
 /** Message wire format (reference MessageFormat × SchemaSource,
   * /root/reference/src/lib.rs:213-240). */
@@ -55,8 +55,9 @@ final case class IngestOptions(
 
 /** The reference's whole per-message path (SURVEY §3.2) as one declarative
   * column pipeline: decode (D1–D7) → transforms (T1–T8) → coercions
-  * (C1–C3) → ok/dead-letter split (E1–E3). Stateless, so it applies
-  * identically to a batch DataFrame or each streaming micro-batch.
+  * (C1–C3, transform outputs included) → ok/dead-letter split (E1–E3).
+  * Stateless, so it applies identically to a batch DataFrame or each
+  * streaming micro-batch.
   */
 object PipelineStages {
 
@@ -78,7 +79,10 @@ object PipelineStages {
     case MessageFormat.AvroRegistry(src) => Decoders.avroRegistry(value.cast(BinaryType), src)
   }
 
-  /** Apply the full message path. Input df must carry `value` plus (when
+  /** Apply the full message path in the reference's order (src/lib.rs:
+    * 827-832): decode, evaluate each transform over the raw message,
+    * then coerce the message and the transform outputs in one pass
+    * ([[Coercions.coerceMessage]]). Input df must carry `value` plus (when
     * kafka meta transforms are used) the Kafka source columns. Returns df
     * with: `msg` (typed struct per schema), `errs` (array<string>),
     * `decode_failed` (boolean), `_json` (decoded text).
@@ -92,64 +96,37 @@ object PipelineStages {
     val v = try_parse_json(col("_json"))
     val withVar = withJson.withColumn("_v", v)
 
-    // coercion of the raw message to the table schema
-    val (msg, errs) = Coercions.coerceMessage(col("_v"), schema)
-    val coerced = withVar.withColumn("msg", msg).withColumn("errs", errs)
-
-    // transforms (pre-coercion sources: raw variant + kafka meta), outputs
-    // written into the typed msg struct at their target paths
-    val transformed = opts.transforms.foldLeft(coerced) { case (acc, (target, source)) =>
+    // transforms read the raw message (or a Kafka column); a later spec
+    // for the same target wins where it is non-null. A real Kafka
+    // source's `timestamp` is TimestampType; the ms-long harness shape
+    // takes the numeric path — resolve from the frame
+    val tsType = df.schema.find(_.name == KafkaMeta.TimestampCol).map(_.dataType)
+    val outs = opts.transforms.map { case (target, source) =>
+      requireTarget(schema, target)
       val src = source.trim
-      val raw: Column =
-        if (KafkaMeta.all.contains(src))
-          // a real Kafka source's `timestamp` is TimestampType; the ms-long
-          // harness shape takes the numeric path — resolve from the frame
-          KafkaMeta.column(src, acc.schema.fields
-            .find(_.name == KafkaMeta.TimestampCol).map(_.dataType))
-        else JmesPath.toColumnOverVariant(JmesPath.parse(src), col("_v"))
-      val targetType = typeAt(schema, target)
-      val coercedOut = coerceScalar(acc, raw, targetType)
-      val existing = fieldAt(col("msg"), target)
-      // null-result-not-set: keep the coerced original on null transform
-      acc.withColumn("msg", col("msg").withField(target, coalesce(coercedOut, existing)))
+      target -> (if (KafkaMeta.all.contains(src)) JmesPath.Lowered(KafkaMeta.column(src, tsType))
+                 else JmesPath.lowerOverVariant(JmesPath.parse(src), col("_v")))
     }
+    val set = outs.foldLeft(Map.empty[String, Column]) { case (m, (t, out)) =>
+      m.updated(t, coalesce(out.value.cast(VariantType), m.getOrElse(t, lit(null)))) }
+    val (msg, errs) = Coercions.coerceMessage(col("_v"), schema, set)
+    // E3: a function that failed on its arguments dead-letters the row
+    val failed = outs.map { case (t, out) => when(out.failed, lit(s"$t: transform failed")) }
 
-    transformed.withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
+    withVar.withColumn("msg", msg)
+      .withColumn("errs",
+        if (failed.isEmpty) errs else concat(array_compact(array(failed: _*)), errs))
+      .withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
   }
 
-  private def fieldAt(root: Column, path: String): Column =
-    path.split('.').foldLeft(root)((c, f) => c.getField(f))
-
-  private def typeAt(schema: StructType, path: String): DataType = {
+  /** A transform target must name a field of the table schema, through
+    * structs only. */
+  private def requireTarget(schema: StructType, path: String): Unit =
     path.split('.').foldLeft(Option(schema: DataType)) {
       case (Some(st: StructType), name) => st.fields.find(_.name == name).map(_.dataType)
       case _ => None
     }.getOrElse(throw new IllegalArgumentException(
       s"transform target '$path' not in table schema ${schema.simpleString}"))
-  }
-
-  /** Coerce one transform output to its target schema type, following the
-    * reference coercion rules for post-transform values. Needs the actual
-    * expression type, probed from the plan (cheap: analysis only). */
-  private def coerceScalar(df: DataFrame, c: Column, target: DataType): Column = {
-    val actual = df.select(c.as("probe")).schema.head.dataType
-    (actual, target) match {
-      case (a, t) if a == t => c
-      case (VariantType, StringType) =>
-        when(c.isNull || is_variant_null(c), lit(null).cast(StringType))
-          .otherwise(coalesce(try_variant_get(c, "$", "string"), to_json(c)))
-      case (VariantType, TimestampType) =>
-        val asStr = try_variant_get(c, "$", "string")
-        val asLong = try_variant_get(c, "$", "long")
-        when(schema_of_variant(c) === "STRING", Coercions.rfc3339ToTimestamp(asStr))
-          .otherwise(timestamp_micros(asLong))
-      case (VariantType, t) => try_variant_get(c, "$", t.sql)
-      case (StringType, TimestampType) => Coercions.rfc3339ToTimestamp(c)
-      case (LongType | IntegerType, TimestampType) => timestamp_micros(c.cast(LongType))
-      case (_, StringType) => c.cast(StringType)
-      case (_, t) => c.cast(t)
-    }
-  }
 
   /** Stage a batch and split it into (observation, ok, deadLetters): ok rows
     * have clean decode and no coercion errors; dead rows carry the

@@ -205,15 +205,32 @@ object JmesPath {
       case Idx(i) => s"[$i]"
     }.mkString
 
+  /** A transform lowered over the raw message: its value, and `failed`,
+    * true when a function got only non-null arguments yet returned null
+    * (a bad argument, such as `"abc"` for an epoch: the reference's E3
+    * transform failure). */
+  final case class Lowered(value: Column, failed: Column = lit(false))
+
   /** Lower an AST over the *raw* message VARIANT (pre-coercion values, the
     * reference evaluates JMESPath against the undecoded JSON tree). Path
-    * results stay VARIANT; function arguments cast as each function needs. */
-  def toColumnOverVariant(ast: Ast, v: Column): Column = ast match {
-    case Path(segs) => try_variant_get(v, variantPath(segs), "variant")
-    case Pipe(l, r) => toColumnOverVariant(r, toColumnOverVariant(l, v))
-    case NumLit(value) => if (value == value.floor && !value.isInfinite) lit(value.toLong) else lit(value)
-    case StrLit(value) => lit(value)
-    case Func(name, args) => function(name, args.map(toColumnOverVariant(_, v)), args)
+    * results stay VARIANT, a JSON null reading as SQL null like a missing
+    * key; function arguments try-cast as each function needs. */
+  def lowerOverVariant(ast: Ast, v: Column): Lowered = ast match {
+    case Path(segs) =>
+      val x = try_variant_get(v, variantPath(segs), "variant")
+      Lowered(when(!is_variant_null(x), x))
+    case Pipe(l, r) =>
+      val left = lowerOverVariant(l, v)
+      val right = lowerOverVariant(r, left.value)
+      Lowered(right.value, left.failed || right.failed)
+    case Func(name, args) =>
+      val in = args.map(lowerOverVariant(_, v))
+      val out = function(name, in.map(_.value), args)
+      // to_number's null for a non-number is JMESPath's answer, not a failure
+      val bad = if (name == "to_number") lit(false)
+        else in.foldLeft(out.isNull)((b, a) => b && a.value.isNotNull)
+      Lowered(out, in.foldLeft(bad)((b, a) => b || a.failed))
+    case literal => Lowered(toColumn(literal))
   }
 
   private def function(name: String, cols: Seq[Column], asts: Seq[Ast]): Column = name match {
@@ -231,19 +248,19 @@ object JmesPath {
       })
     case "epoch_seconds_to_iso8601" =>
       require2(name, cols, 1)
-      TimeFormat.iso8601FromEpoch(cols(0).cast("long"), "s")
+      TimeFormat.iso8601FromEpoch(cols(0).try_cast("long"), "s")
     case "epoch_millis_to_iso8601" =>
       require2(name, cols, 1)
-      TimeFormat.iso8601FromEpoch(cols(0).cast("long"), "ms")
+      TimeFormat.iso8601FromEpoch(cols(0).try_cast("long"), "ms")
     case "epoch_micros_to_iso8601" =>
       require2(name, cols, 1)
-      TimeFormat.iso8601FromEpoch(cols(0).cast("long"), "us")
+      TimeFormat.iso8601FromEpoch(cols(0).try_cast("long"), "us")
     case "epoch_millis_to_micro" =>
       require2(name, cols, 1)
-      (cols(0).cast("long") * lit(1000L)).as("micros")
+      try_multiply(cols(0).try_cast("long"), lit(1000L)).as("micros")
     case "to_number" =>
       require2(name, cols, 1)
-      cols(0).cast("double")
+      cols(0).try_cast("double")
     case other =>
       throw TransformCompileError(s"unsupported JMESPath function: $other")
   }
@@ -261,9 +278,10 @@ object JmesPath {
 object TimeFormat {
   /** epoch in `unit` (s|ms|us) → ISO-8601 string, chrono-Debug style. */
   def iso8601FromEpoch(v: Column, unit: String): Column = {
+    // an out-of-range epoch reads as null, not an overflow error
     val micros = unit match {
-      case "s" => v * lit(1000000L)
-      case "ms" => v * lit(1000L)
+      case "s" => try_multiply(v, lit(1000000L))
+      case "ms" => try_multiply(v, lit(1000L))
       case "us" => v
     }
     val ts = timestamp_micros(micros)
@@ -372,44 +390,39 @@ final class Transformer(specs: Seq[(String, String)]) extends Serializable {
   /** Set `rest` under `base`, CREATING missing intermediate structs (the
     * reference's set_value builds intermediate objects on the way down,
     * transforms.rs:323-371 — withField alone throws on a missing
-    * intermediate). An existing non-struct intermediate is a spec error. */
-  private def setNested(base: Column, dt: org.apache.spark.sql.types.DataType,
-                        rest: List[String], value: Column, target: String): Column =
+    * intermediate and leaves a null one null). An existing non-struct
+    * intermediate is a spec error. */
+  private def setNested(base0: Column, dt: org.apache.spark.sql.types.DataType,
+                        rest: List[String], value: Column, target: String): Column = {
+    import org.apache.spark.sql.types.StructType
+    val st = dt match {
+      case st: StructType => st
+      case _ => throw TransformCompileError(
+        s"transform target '$target': parent of '${rest.head}' is not a struct")
+    }
+    // a null struct on this row takes its fields when a value lands in it
+    val base = when(base0.isNull && value.isNotNull,
+      struct(st.fields.map(f => lit(null).cast(f.dataType).as(f.name)).toSeq: _*))
+      .otherwise(base0)
     rest match {
-      case leaf :: Nil =>
-        if (!dt.isInstanceOf[org.apache.spark.sql.types.StructType])
-          throw TransformCompileError(
-            s"transform target '$target': parent of '$leaf' is not a struct")
-        base.withField(leaf, value)
+      case leaf :: Nil => base.withField(leaf, value)
       case head :: tail =>
-        dt match {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.fields.find(_.name == head) match {
-              case Some(f) if f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-                base.withField(head,
-                  setNested(base.getField(head), f.dataType, tail, value, target))
-              case Some(_) =>
-                throw TransformCompileError(
-                  s"transform target '$target': '$head' exists but is not a struct")
-              case None =>
-                // build the missing intermediate chain as fresh structs
-                val fresh = tail.foldRight(value) { (seg, inner) =>
-                  org.apache.spark.sql.functions.struct(inner.as(seg))
-                }
-                // fresh is the struct FOR head's value when tail nonEmpty…
-                // foldRight wraps once per tail segment; the value for
-                // `head` is a struct containing the chain
-                base.withField(head, tail match {
-                  case Nil => value
-                  case _ => fresh
-                })
-            }
-          case _ =>
+        st.fields.find(_.name == head) match {
+          case Some(f) if f.dataType.isInstanceOf[StructType] =>
+            base.withField(head, setNested(base.getField(head), f.dataType, tail, value, target))
+          case Some(_) =>
             throw TransformCompileError(
-              s"transform target '$target': intermediate '$head' is not a struct")
+              s"transform target '$target': '$head' exists but is not a struct")
+          case None =>
+            // build the missing intermediate chain as fresh structs: one
+            // wrap per tail segment gives the struct for `head`
+            base.withField(head, tail.foldRight(value) { (seg, inner) =>
+              org.apache.spark.sql.functions.struct(inner.as(seg))
+            })
         }
       case Nil => value
     }
+  }
 
   private def hasNestedField(df: DataFrame, parts: Array[String]): Boolean = {
     import org.apache.spark.sql.types._

@@ -165,9 +165,14 @@ class ColumnMappingSpec extends SparkSpec {
     assert(t.delete(col("id") < 4L) > 0)
     assert(t.toDF.count() === 36L)
     // compaction preserves the physical layout (the delete removed one
-    // row from each partition: ids 0..3 are p0..p3)
+    // row from each partition: ids 0..3 are p0..p3; a second append gives
+    // every partition the two files a compaction bin needs)
+    t.append((40 until 44).map(i => (i.toLong, i * 1.5, s"p${i % 4}"))
+      .toDF("id", "amount", "note"))
     assert(t.compact(minBytes = 1L << 30) > 0)
-    assert(t.toDF.filter(col("note") === "p2").count() === 9L)
+    assert(t.toDF.filter(col("note") === "p2").count() === 10L)
+    val compacted = DeltaTable.forPath(spark, t.path).snapshot.files
+    assert(compacted.size === 4 && compacted.forall(_.path.startsWith("col-")))
   }
 
   test("partition predicates on mapped tables: OPTIMIZE WHERE and pruned CDF match") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** A version that `write` published is durable: what fails after it — a
-  * post-commit hook, a checkpoint — must neither delete the files the
+  * post-commit hook, a checkpoint, a `.crc` — must neither delete the files the
   * version references nor turn a replay of its txn batch into anything
   * but a skip. */
 class CommitOutcomeSpec extends SparkSpec {
@@ -63,5 +63,20 @@ class CommitOutcomeSpec extends SparkSpec {
     assertIntact(dir, local, version = 2L, batchId = 2L, ids = (0L until 20L))
     assert(t.append(batch(10, 10), Some("app"), 2L) === -1L)
     assertIntact(dir, local, version = 2L, batchId = 2L, ids = (0L until 20L))
+  }
+
+  test("a failing .crc rename keeps the commit and leaves no temp file") {
+    val local = tmpDir("crc-fail")
+    val dir = FaultyFileSystem.uriOf(local)
+    val t = DeltaTable.forPath(spark, dir).create(schema, Seq("date"))
+    FaultyFileSystem.failMatching((op, p) => op == "rename" && p.getName.startsWith(".crc-tmp-"))
+    val v =
+      try t.append(batch(0, 10), Some("app"), 1L)
+      finally FaultyFileSystem.reset()
+    assert(v === 1L)
+    val log = new java.io.File(local, "_delta_log").list().toSeq
+    assert(!log.exists(_.startsWith(".crc-tmp-")), log.sorted.mkString(", "))
+    assert(!log.contains("00000000000000000001.crc"))
+    assertIntact(dir, local, version = 1L, batchId = 1L, ids = (0L until 10L))
   }
 }

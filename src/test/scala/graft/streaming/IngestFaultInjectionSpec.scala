@@ -35,7 +35,10 @@ class IngestFaultInjectionSpec extends SparkSpec {
       else s"""{"id": "x$i", "date": "2021-11-01"}"""
     (i.toLong, body)
   }
-  private val goodIds = (0 until 24).filter(good).map(_.toLong)
+  // each date starts with one small file, so the batch's file per date
+  // makes a two-file bin for compaction to rewrite
+  private val seeds = Seq(100L -> "2021-11-01", 101L -> "2021-11-02")
+  private val goodIds = (0 until 24).filter(good).map(_.toLong) ++ seeds.map(_._1)
   private val deadBodies = messages.collect { case (i, b) if !good(i.toInt) => b }
 
   private final case class Run(table: String, dlq: String, local: Seq[String], ckpt: String)
@@ -45,10 +48,11 @@ class IngestFaultInjectionSpec extends SparkSpec {
     val d = tmpDir("fault-dlq")
     val run = Run(FaultyFileSystem.uriOf(t), FaultyFileSystem.uriOf(d), Seq(t, d),
       tmpDir("fault-ckpt"))
-    // a checkpoint at the compaction commit puts the checkpoint writer
-    // inside the enumerated batch
-    DeltaTable.forPath(spark, run.table).create(schema, Seq("date"),
+    // a checkpoint at the compaction commit (version 4, after the two
+    // seed appends) puts the checkpoint writer inside the enumerated batch
+    val table = DeltaTable.forPath(spark, run.table).create(schema, Seq("date"),
       configuration = Map(DeltaTable.CheckpointIntervalKey -> "2"))
+    seeds.foreach(s => table.append(Seq(s).toDF("id", "date")))
     DeltaTable.forPath(spark, run.dlq).create(PipelineStages.DeadLetterSchema)
     run
   }
@@ -74,7 +78,7 @@ class IngestFaultInjectionSpec extends SparkSpec {
     val table = DeltaTable.forPath(spark, run.table)
     val dlq = DeltaTable.forPath(spark, run.dlq)
     val ids = table.toDF.select("id").as[Long].collect().sorted.toSeq
-    assert(ids === goodIds, s"$label: table rows")
+    assert(ids === goodIds.sorted, s"$label: table rows")
     val dead = dlq.toDF.select(coalesce(col("json_string"),
       unbase64(col("base64_bytes")).cast("string"))).as[String].collect().sorted.toSeq
     assert(dead === deadBodies.sorted, s"$label: dead letters")
@@ -103,6 +107,11 @@ class IngestFaultInjectionSpec extends SparkSpec {
     assert(drain(dry).isEmpty)
     val points = FaultyFileSystem.count
     assertExactlyOnce(dry, "fault-free")
+    // the enumerated batch holds a compaction commit and a log checkpoint
+    assert(DeltaTable.forPath(spark, dry.table).log.history(Some(1)).head._2
+      .exists(_.operation === "OPTIMIZE"))
+    assert(new java.io.File(dry.local.head,
+      "_delta_log/00000000000000000004.checkpoint.parquet").exists())
     assert(points > 20L, s"only $points injection points")
     var faulted = 0
     (1L to points).foreach { k =>

@@ -12,9 +12,10 @@ import graft.SparkSpec
 import graft.delta.DeltaTable
 
 /** The frames one micro-batch writes: the staged message path (decode →
-  * transforms → coercions) must run once per message per write job, and
-  * a replayed batch must neither run a job nor leave its observation
-  * registered with the session. */
+  * transforms → coercions) must run once per message per write job, a
+  * replayed batch must neither run a job nor leave its observation
+  * registered with the session, and transform outputs land, keep the
+  * message's own value when null, or dead-letter the row alone. */
 class ProcessBatchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -91,6 +92,108 @@ class ProcessBatchSpec extends SparkSpec {
     assert(sink.counters.toMap === counters)
     assert(sink.timers.size === timers)
     assert(registeredObservations() === before)
+  }
+
+  /** Ingest `values` (offsets 0, 1, …) with `transforms` into a fresh
+    * web_requests table and Delta DLQ; (good rows by uuid, dead letters). */
+  private def ingest(values: Seq[String], transforms: Seq[(String, String)],
+                     sink: MetricsSink = new RecordingMetricsSink)
+      : (Map[String, org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+    val table = DeltaTable.forPath(spark, tmpDir("stage-table")).create(schema)
+    val dlqTable = DeltaTable.forPath(spark, tmpDir("stage-dlq"))
+      .create(PipelineStages.DeadLetterSchema)
+    val opts = IngestOptions(appId = "stage", transforms = transforms,
+      metricsSink = Some(sink))
+    val batch = values.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("offset", "value")
+      .select(col("value").cast(BinaryType).as("value"), lit(3).as("partition"),
+        col("offset"), lit("web_requests").as("topic"),
+        lit(1636668718000L).as("timestamp"), lit(0).as("timestampType"))
+    IngestPipeline.processBatch(batch, 0L, table,
+      new DeltaDeadLetterSink(dlqTable, opts.appId, Nil), opts)
+    (table.toDF.collect().map(r => r.getAs[String]("uuid") -> r).toMap,
+      dlqTable.toDF.collect().toSeq)
+  }
+
+  test("meta.kafka is filled on every good row, with or without a meta object") {
+    val noMeta = """{"method": "GET", "status": 200, "uuid": "bare"}"""
+    val (rows, dead) = ingest(Seq(message(0, "200"), noMeta), transforms)
+    assert(dead.isEmpty, dead.mkString("; "))
+    Seq("u0" -> 0L, "bare" -> 1L).foreach { case (uuid, offset) =>
+      val kafka = rows(uuid).getAs[org.apache.spark.sql.Row]("meta")
+        .getAs[org.apache.spark.sql.Row]("kafka")
+      assert(kafka != null, s"$uuid: meta.kafka is null")
+      assert((kafka.getAs[Long]("offset"), kafka.getAs[String]("topic"),
+        kafka.getAs[Int]("partition")) === ((offset, "web_requests", 3)), uuid)
+    }
+    assert(rows("u0").getAs[String]("date") === "2021-03-24")
+    assert(rows("u0").getAs[org.apache.spark.sql.Row]("meta")
+      .getAs[org.apache.spark.sql.Row]("producer").getString(0) ===
+      "2021-03-24T15:06:17.321710+00:00")
+    assert(rows("bare").isNullAt(rows("bare").fieldIndex("date")))
+  }
+
+  test("a null or JSON-null transform result keeps the message's own value") {
+    val keeps = Seq(
+      "status" -> "to_number(code)", // JMESPath: null for a non-number
+      "url" -> "alt_url",
+      "session_id" -> "kafka.topic")
+    val (rows, dead) = ingest(Seq(
+      """{"uuid": "a", "status": 200, "code": "abc", "url": "own", "alt_url": null}""",
+      """{"uuid": "b", "status": 200, "url": "own"}""",
+      """{"uuid": "c", "status": 200, "code": "404", "url": "own", "alt_url": "alt"}"""),
+      keeps)
+    assert(dead.isEmpty, dead.mkString("; "))
+    def of(uuid: String) = (rows(uuid).getAs[Int]("status"), rows(uuid).getAs[String]("url"))
+    assert(of("a") === ((200, "own")))
+    assert(of("b") === ((200, "own")))
+    assert(of("c") === ((404, "alt")))
+    assert(rows.values.forall(_.getAs[String]("session_id") == "web_requests"))
+  }
+
+  test("a transform output its column cannot hold dead-letters that row only") {
+    val sink = new RecordingMetricsSink
+    val (rows, dead) = ingest(Seq(
+      """{"uuid": "bad", "method": "GET", "status": 200}""",
+      """{"uuid": "ok", "status": 201}"""),
+      Seq("status" -> "substr(method, `0`, `3`)"), sink)
+    assert(rows.keySet === Set("ok"))
+    assert(rows("ok").getAs[Int]("status") === 201)
+    assert(dead.map(_.getAs[String]("error")) === Seq("status: cannot coerce to int: \"GET\""))
+    assert(sink.counters(IngestMetrics.MessageTransformFailed) === 1L)
+  }
+
+  test("a bad function argument dead-letters as a transform failure") {
+    val sink = new RecordingMetricsSink
+    val (rows, dead) = ingest(Seq(
+      """{"uuid": "bad", "ms": "abc"}""",
+      """{"uuid": "ok", "ms": 1636668718123}""",
+      """{"uuid": "none"}"""),
+      Seq("url" -> "epoch_millis_to_iso8601(ms)"), sink)
+    assert(rows.keySet === Set("ok", "none"))
+    assert(rows("ok").getAs[String]("url") === "2021-11-11T22:11:58.123Z")
+    assert(rows("none").isNullAt(rows("none").fieldIndex("url")))
+    assert(dead.map(_.getAs[String]("error")) === Seq("url: transform failed"))
+    assert(dead.head.getAs[String]("json_string").contains("abc"))
+    assert(sink.counters(IngestMetrics.MessageTransformFailed) === 1L)
+  }
+
+  test("a batch's compaction leaves untouched one-file partitions alone") {
+    val table = DeltaTable.forPath(spark, tmpDir("lone-files")).create(schema, Seq("date"))
+    def rows(uuid: String, date: String) = Seq((uuid, date)).toDF("uuid", "date")
+      .select(schema.fieldNames.map(n => if (n == "uuid" || n == "date") col(n)
+        else lit(null).cast(schema(n).dataType).as(n)).toSeq: _*)
+    Seq("2021-03-20", "2021-03-21", "2021-03-22", "2021-03-24")
+      .foreach(d => table.append(rows(s"seed-$d", d)))
+    def filesOf(date: String) =
+      table.snapshot.files.filter(_.partitionValues("date") == date).map(_.path).toSet
+    val untouched = Seq("2021-03-20", "2021-03-21", "2021-03-22").map(d => d -> filesOf(d))
+    IngestPipeline.processBatch(batch, 0L, table, NoopDeadLetterSink,
+      IngestOptions(appId = "lone", transforms = transforms, minBytesPerFile = Some(1L << 20)))
+    untouched.foreach { case (d, files) => assert(filesOf(d) === files, d) }
+    // the batch's own partition held two small files: they are compacted
+    assert(filesOf("2021-03-24").size === 1)
+    assert(table.toDF.count() === 6L)
+    assert(table.log.history(Some(1)).head._2.exists(_.operation === "OPTIMIZE"))
   }
 
   /** Observations the session still waits to fire (Spark drops one only

@@ -106,7 +106,7 @@ class TransformsSpec extends SparkSpec {
     val v = Seq("""{"items": [{"id": 7}, {"id": 9}]}""").toDF("j")
       .select(parse_json(col("j")).as("v"))
     val got = v.select(
-      JmesPath.toColumnOverVariant(JmesPath.parse("items[1].id"), col("v"))
+      JmesPath.lowerOverVariant(JmesPath.parse("items[1].id"), col("v")).value
         .cast("long").as("x")).head()
     assert(got.getAs[Long]("x") === 9L)
   }
@@ -121,7 +121,7 @@ class TransformsSpec extends SparkSpec {
     val v = Seq("""{"meta": {"mod": "2024-05-06T07:08:09Z"}}""").toDF("j")
       .select(parse_json(col("j")).as("v"))
     val got = v.select(
-      JmesPath.toColumnOverVariant(JmesPath.parse("meta | mod"), col("v"))
+      JmesPath.lowerOverVariant(JmesPath.parse("meta | mod"), col("v")).value
         .cast("string").as("m")).head()
     assert(got.getAs[String]("m") === "2024-05-06T07:08:09Z")
   }
@@ -148,13 +148,15 @@ class TransformsSpec extends SparkSpec {
   }
 
   test("nested transform targets create missing intermediate structs") {
-    val df = Seq((1L, "v")).toDF("id", "src")
-      .withColumn("meta", struct(col("id").as("inner_id")))
+    // row 2's meta is a null struct
+    val df = Seq((1L, "v"), (2L, "w")).toDF("id", "src")
+      .withColumn("meta", when(col("id") === 1L, struct(col("id").as("inner_id"))))
     // meta.geo does not exist: the reference's set_value creates the
     // intermediate object on the way down
-    val out = Transformer(Seq("meta.geo.lat" -> "src"))(df)
-    assert(out.select("meta.geo.lat").head().getString(0) === "v")
+    val out = Transformer(Seq("meta.geo.lat" -> "src"))(df).orderBy("id")
+    assert(out.select("meta.geo.lat").as[String].collect().toSeq === Seq("v", "w"))
     assert(out.select("meta.inner_id").head().getLong(0) === 1L)
+    assert(out.select("meta.inner_id").collect()(1).isNullAt(0))
     // an existing NON-struct intermediate is a clear spec error
     assertThrows[TransformCompileError](
       Transformer(Seq("meta.inner_id.x" -> "src"))(df))
