@@ -6,9 +6,39 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   */
 object Bench {
+  /** The core count (`SPARK_GRAFT_CPUS` default) round files are measured at. */
+  val DefaultCpus = 32
+
+  /** Whether the run `json` may create or replace the round file, which
+    * holds `prev` (None: no file yet). Only a run at [[DefaultCpus]] may:
+    * a run at another core count is a different measurement, never a
+    * better one (round 20 found an 8-core run squatting on the round file
+    * — at sf0.1 fewer cores read faster). It replaces `prev` unless
+    * `prev` is comparable — the same headline query set at the same core
+    * count — and ranks better by (tainted, total): an untainted run
+    * always beats a tainted one, and a file without the tainted field, or
+    * one that does not parse, loses to any run this code writes. Every
+    * run still lands in bench_history.jsonl, so nothing is hidden. */
+  def writesRoundFile(prev: Option[String], json: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.JsonNode
+    def cpus(j: JsonNode): Int = j.path("calib_mt_threads").asInt(-1)
+    def queryKeys(j: JsonNode): Set[String] = j.path("queries").fieldNames().asScala.toSet
+    def rank(j: JsonNode): (Int, Double) = {
+      val t = j.path("tainted")
+      (if (!t.isBoolean) 2 else if (t.asBoolean) 1 else 0,
+        j.path("value").asDouble(Double.MaxValue))
+    }
+    val run = graft.delta.Actions.mapper.readTree(json)
+    cpus(run) == DefaultCpus && prev
+      .flatMap(p => scala.util.Try(graft.delta.Actions.mapper.readTree(p)).toOption.flatMap(Option(_)))
+      .forall(old => !(queryKeys(old) == queryKeys(run) && cpus(old) == cpus(run) &&
+        Ordering.Tuple2[Int, Double].lt(rank(old), rank(run))))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus.toString)
     val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
@@ -610,64 +640,14 @@ object Bench {
     // round signals — never let one overwrite the round file
     if (!sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) try {
       val roundFile = f"bench_out_r$round%02d.json"
-      // The round snapshot prefers the BEST UNTAINTED run (round-17
-      // judge task): rank (tainted, total) lexicographically — an
-      // untainted run always beats a tainted one; within a taint class
-      // the lower total wins. Every run still lands in bench_history, so
-      // nothing is hidden; only the round's headline file is curated. A
-      // pre-taint-schema or unparseable existing file loses to any run
-      // this code writes.
-      def rank(j: String): (Int, Double) = {
-        // missing tainted field = pre-taint-schema file: rank WORSE than
-        // any tainted current run (2, not 1), so a schema-less file can
-        // never outrank a run this code writes, per the contract below
-        val t = "\"tainted\":(true|false)".r.findFirstMatchIn(j)
-          .map(m => if (m.group(1) == "true") 1 else 0).getOrElse(2)
-        val v = "\"value\":([0-9.eE+-]+)".r.findFirstMatchIn(j)
-          .map(_.group(1).toDouble).getOrElse(Double.MaxValue)
-        (t, v)
-      }
-      // totals compare ONLY like-for-like: a run whose headline QUERY SET
-      // differs from the current one (mid-round code added a row) is not
-      // comparable and always yields to the current surface — otherwise a
-      // shorter old run's smaller total would win the snapshot forever.
-      // CONTRACT for both regex parsers here: the "queries" object holds
-      // ONLY numeric scalars (m(...) above emits "name":1.23 pairs) and
-      // this file's own writer is the only producer — a nested value
-      // inside "queries" would truncate the matched span at its inner
-      // '}' and silently corrupt the keep-best comparison. If "queries"
-      // ever grows structure, replace these with a real JSON reader.
-      def queryKeys(j: String): Set[String] =
-        "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(j)
-          .map(m => "\"([^\"]+)\":".r.findAllMatchIn(m.group(1))
-            .map(_.group(1)).toSet)
-          .getOrElse(Set.empty)
-      // ... and only at the same CORE COUNT: the driver's low-core scaling
-      // run writes through this same code path (round-20 found an 8-core
-      // 46.7 s run squatting on the round file, outranking every honest
-      // 32-core run — at sf0.1 fewer cores read FASTER, so the keep-best
-      // rank inverted). A run at a different SPARK_GRAFT_CPUS is a
-      // different measurement, never a better one.
-      def cpusOf(j: String): Int =
-        "\"calib_mt_threads\":(\\d+)".r.findFirstMatchIn(j)
-          .map(_.group(1).toInt).getOrElse(-1)
       val path = java.nio.file.Paths.get(roundFile)
-      val keepExisting = java.nio.file.Files.exists(path) && {
-        val prev = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-        val comparable = queryKeys(prev) == queryKeys(json) &&
-          cpusOf(prev) == cpusOf(json)
-        val better = comparable &&
-          Ordering.Tuple2[Int, Double].lt(rank(prev), rank(json))
-        if (better) System.err.println(
-          s"[bench] round file $roundFile keeps its better run " +
-            s"(rank ${rank(prev)} beats ${rank(json)})")
-        else if (!comparable && java.nio.file.Files.size(path) > 0)
-          System.err.println(
-            s"[bench] round file $roundFile replaced: headline set changed")
-        better
-      }
-      if (!keepExisting)
+      val prev =
+        if (!java.nio.file.Files.exists(path)) None
+        else Some(new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
+      if (writesRoundFile(prev, json))
         java.nio.file.Files.write(path, (json + "\n").getBytes("UTF-8"))
+      else System.err.println(s"[bench] round file $roundFile kept: this run is at " +
+        "another core count, or the file holds a better comparable run")
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_history.jsonl"),
         (json + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,

@@ -92,7 +92,7 @@ object IngestCli {
       |  -o, --auto_offset_reset POLICY  earliest | latest [earliest] (env KAFKA_AUTO_OFFSET_RESET)
       |  -l, --allowed_latency SECONDS   Max consume→write latency [300] (env ALLOWED_LATENCY)
       |  -m, --max_messages_per_batch N  Row cap per batch [5000] (env MAX_MESSAGES_PER_BATCH)
-      |  -b, --min_bytes_per_file N      Target min file size; smaller files auto-compact [134217728] (env MIN_BYTES_PER_FILE)
+      |  -b, --min_bytes_per_file N      Target min file size; smaller files in the partitions a batch wrote auto-compact [134217728] (env MIN_BYTES_PER_FILE)
       |  -t, --transform 'P: SOURCE'     Repeatable; SOURCE = JMESPath expr or kafka.offset/partition/topic/timestamp (env TRANSFORMS)
       |      --dlq_table_location PATH   Delta table for unprocessable entities (env DLQ_TABLE_LOCATION)
       |      --dlq_transform 'P: SOURCE' Repeatable; transforms for DLQ rows (env DLQ_TRANSFORMS)

@@ -261,17 +261,18 @@ object DeltaTable {
     * hour-partitioned table fans to 10⁴–10⁵ dirs per level; even a
     * 32-thread driver pool serializes round-trips there, while executors
     * list at cluster rate and ship back metadata tuples). Files stream
-    * to `onFile` on the caller's thread between levels. A serial
+    * to `onFile` and directories below the root to `skipDir` on the
+    * caller's thread between levels. A serial
     * recursive walk turns a million-file tree into a multi-hour driver
     * metadata crawl — this is the ONE walk shape (vacuum's candidate
     * listing and COPY INTO's source listing both ride it). */
   private[delta] def parallelWalk(spark: SparkSession,
                                   conf: org.apache.hadoop.conf.Configuration,
-                                  root: Path, skipDir: Path => Boolean)
+                                  root: Path, skipDir: WalkEntry => Boolean)
                                  (onFile: WalkEntry => Unit): Unit = {
     val fs = root.getFileSystem(conf)
     lastWalkListMode = "driver-pool"
-    var level: Seq[Path] = Seq(root).filterNot(skipDir)
+    var level: Seq[Path] = Seq(root)
     while (level.nonEmpty) {
       val entries: Seq[WalkEntry] =
         if (level.size < distributedStatsThreshold)
@@ -293,7 +294,7 @@ object DeltaTable {
         }
       val next = scala.collection.mutable.ArrayBuffer.empty[Path]
       entries.foreach { e =>
-        if (e.isDir) { val p = new Path(e.path); if (!skipDir(p)) next += p }
+        if (e.isDir) { if (!skipDir(e)) next += new Path(e.path) }
         else onFile(e)
       }
       level = next.toSeq
@@ -346,7 +347,7 @@ object DeltaTable {
     if (rels.size < distributedStatsThreshold) {
       lastVacuumDeleteMode = "driver-pool"
       val fs = root.getFileSystem(conf)
-      parMap(rels)(p => if (fs.delete(new Path(root, p), false)) 1 else 0).sum
+      parMap(rels)(p => if (fs.delete(new Path(root, p), isStagingDir(p))) 1 else 0).sum
     } else {
       lastVacuumDeleteMode = "spark-job"
       val bcConf = broadcastConf(spark, conf)
@@ -354,9 +355,14 @@ object DeltaTable {
       val slices = math.min(rels.size, 512)
       spark.sparkContext.parallelize(rels, slices).mapPartitions { it =>
         val (r, f) = fsFromBroadcast(bcConf, rootStr)
-        Iterator.single(it.count(p => f.delete(new Path(r, p), false)))
+        Iterator.single(it.count(p => f.delete(new Path(r, p), isStagingDir(p))))
       }.sum().toInt
     }
+
+  /** A table-relative path naming a staging dir of [[DeltaTable.stage]]
+    * (they sit at the table root). VACUUM deletes one whole. */
+  private[delta] def isStagingDir(rel: String): Boolean =
+    rel.startsWith("_staging-") && !rel.contains('/')
 
   /** Delete table-relative garbage paths held in a DISTRIBUTED dataset
     * (the inventory anti-join result — at inventory scale the garbage
@@ -380,7 +386,7 @@ object DeltaTable {
         val batch = scala.collection.mutable.ArrayBuffer.empty[String]
         def flush(): Unit = if (batch.nonEmpty) {
           deleted += parMap(batch.toSeq)(p =>
-            if (fs.delete(new Path(root, p), false)) 1 else 0).sum
+            if (fs.delete(new Path(root, p), isStagingDir(p))) 1 else 0).sum
           batch.clear()
         }
         val it = cached.toLocalIterator()
@@ -393,7 +399,7 @@ object DeltaTable {
         val rootStr = root.toString
         cached.rdd.mapPartitions { it =>
           val (r, f) = fsFromBroadcast(bcConf, rootStr)
-          Iterator.single(it.count(p => f.delete(new Path(r, p), false)))
+          Iterator.single(it.count(p => f.delete(new Path(r, p), isStagingDir(p))))
         }.sum().toInt
       }
     } finally { cached.unpersist(); () }
@@ -1938,10 +1944,14 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * Exactly-once under races: besides the cheap pre-check below, the same
     * txn predicate re-runs inside [[DeltaLog.commit]] against the winning
     * snapshot on every retry — so a zombie query and its restart can't both
-    * land the same (appId, version) batch (round-1 advice #2). */
+    * land the same (appId, version) batch (round-1 advice #2).
+    *
+    * `compactBelow`: once the append lands, compact the files below this
+    * size in the partitions it wrote ([[autoCompact]]). */
   def append(df: DataFrame, txnAppId: Option[String] = None,
              txnVersion: Long = -1L, operation: String = "WRITE",
-             mergeSchema: Boolean = false): Long = {
+             mergeSchema: Boolean = false,
+             compactBelow: Option[Long] = None): Long = {
     def txnNotYetApplied(snap: Snapshot): Boolean = txnAppId.forall { app =>
       txnVersion < 0 || snap.txns.getOrElse(app, -1L) < txnVersion
     }
@@ -2157,9 +2167,9 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       // otherwise: lost the race to a concurrent writer of the same
       // txn batch — the documented idempotent-replay skip
     }
-    // auto-compaction is post-commit work: the append has landed
+    // compaction is post-commit work: the append has landed
     if (committed >= 0)
-      try maybeAutoCompact()
+      try autoCompact(adds, compactBelow)
       catch { case scala.util.control.NonFatal(e) => throw new PostCommitFailure(committed, e) }
     committed
   }
@@ -2234,15 +2244,14 @@ final class DeltaTable(spark: SparkSession, val path: String) {
           // and a serial driver listFiles loop there is the same
           // multi-hour-crawl failure the vacuum walk fixed. Hidden files
           // AND hidden directories skip (Spark's file-index rule —
-          // `_temporary`, `.spark-staging`); the user-named root itself
-          // is exempt from the hidden check.
-          val srcQ = srcFs.makeQualified(srcPath)
+          // `_temporary`, `.spark-staging`); the walk never asks about
+          // the user-named root itself.
           def hidden(p: Path): Boolean = {
             val n = p.getName; n.startsWith("_") || n.startsWith(".")
           }
           val buf = mutable.ArrayBuffer.empty[Path]
           DeltaTable.parallelWalk(spark, spark.sessionState.newHadoopConf(),
-            srcPath, d => !(srcFs.makeQualified(d) == srcQ) && hidden(d)) { st =>
+            srcPath, d => hidden(new Path(d.path))) { st =>
             val p = new Path(st.path)
             if (!hidden(p)) buf += p
           }
@@ -2603,22 +2612,27 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     ()
   }
 
-  /** Post-append auto-compaction (`delta.autoOptimize.autoCompact`,
-    * Delta's table property): when the live small-file count reaches the
-    * `minNumFiles` threshold, fold them through [[compact]] — the knob
-    * that keeps a streaming sink's per-trigger files from accreting into
-    * the classic small-files failure without an external OPTIMIZE cron.
-    * dataChange=false like any OPTIMIZE (invisible to streams and CDF);
-    * quiet on concurrency races (skipping an optimization is safe). */
-  private def maybeAutoCompact(): Unit = {
-    val conf = snapshot.metadata.map(_.configuration).getOrElse(Map.empty)
-    if (!conf.get(DeltaTable.AutoCompactConfigKey).contains("true")) return
-    val minFiles = conf.get(DeltaTable.AutoCompactMinFilesKey)
-      .map(_.toInt).getOrElse(50)
-    val target = 128L * 1024 * 1024
-    if (snapshot.files.count(_.size < target) >= minFiles)
-      compact(target)
-    ()
+  /** Post-commit compaction of an append: the one place a writer's
+    * small files are folded. It looks only at the partitions the commit
+    * wrote (the partition values of its `adds`), as delta-spark's auto
+    * compaction does, and runs [[compact]] over their files below
+    * `minBytes` once there are at least `minFiles` of them. `compactBelow`
+    * (ingest's `minBytesPerFile`) gives `(minBytes, 2)`; otherwise the
+    * `delta.autoOptimize.autoCompact` property gives
+    * `(128 MiB, delta.autoOptimize.minNumFiles)`. The caller turns a
+    * failure into [[PostCommitFailure]]: the append has landed. */
+  private def autoCompact(adds: Seq[AddFile], compactBelow: Option[Long]): Unit = {
+    val snap = snapshot
+    val conf = snap.metadata.map(_.configuration).getOrElse(Map.empty)
+    val trigger = compactBelow.map(_ -> 2).orElse(
+      if (!conf.get(DeltaTable.AutoCompactConfigKey).contains("true")) None
+      else Some(DeltaTable.DefaultTargetFileSize ->
+        conf.get(DeltaTable.AutoCompactMinFilesKey).map(_.toInt).getOrElse(50)))
+    trigger.foreach { case (minBytes, minFiles) =>
+      val written = adds.map(_.partitionValues).toSet
+      val small = snap.files.filter(f => f.size < minBytes && written(f.partitionValues))
+      if (small.size >= minFiles) compact(snap, small, minBytes): Unit
+    }
   }
 
   /** The table's stats-collection width for footer reads ( -1 ⇒ all). */
@@ -2703,12 +2717,23 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     } finally discard(Seq(staging))
   }
 
+  /** The guard of every commit that rewrites or re-describes `inputs`:
+    * each is still live with the same deletion-vector descriptor. The
+    * path alone is not enough — a concurrent DV delete keeps a path live
+    * while changing the logical content the commit was computed from. */
+  private def stillLive(inputs: Seq[AddFile]): Snapshot => Boolean = {
+    val expected = inputs.map(f => f.path -> f.deletionVector).toMap
+    s => {
+      val live = s.files.iterator.map(f => f.path -> f.deletionVector).toMap
+      expected.forall { case (p, dv) => live.get(p).contains(dv) }
+    }
+  }
+
   /** The one place files a commit would have referenced — and staging
     * dirs — are deleted. Best effort with one retry: it runs on paths
     * where another outcome (a lost race, the original error) must
-    * surface, and a leftover is only garbage — unreferenced data files
-    * wait for VACUUM; a `_staging-*` dir, which VACUUM never collects,
-    * is why a transient failure gets the second attempt. */
+    * surface, and a leftover is only garbage that VACUUM collects once
+    * it is past the retention window (a `_staging-*` dir included). */
   private def discard(paths: Seq[Path]): Unit = paths.foreach { p =>
     def attempt(): Boolean =
       try { fs.delete(p, true); true }
@@ -3547,18 +3572,8 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     if (dvd.isEmpty) return -1L
     // DV-applied read; on a row-tracking table the surviving rows carry
     // their materialized identity into the purged files
-    val df = materializingRowIds(snap.copy(files = dvd))
-    val adds = stage(toPhysicalForWrite(df, schema), physicalPartNames(partitionColumns))
-    val expected = dvd.map(f => f.path -> f.deletionVector).toMap
-    val actions = dvd.map(f => Action(remove = Some(removeOf(f,
-      System.currentTimeMillis(), dataChange = false)))) ++
-      adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
-      Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(),
-        "OPTIMIZE", Map("operation" -> "purgeDeletionVectors")))))
-    commitStaged(snap.version, adds.map(_.path), _ => actions, s => {
-      val live = s.files.map(f => f.path -> f.deletionVector).toMap
-      expected.forall { case (p, dv) => live.get(p).contains(dv) }
-    })
+    rewrite(snap, dvd, materializingRowIds(snap.copy(files = dvd)),
+      Map("operation" -> "purgeDeletionVectors"))
   }
 
   /** Copy-on-write UPDATE (delta-rs `update`): for rows matching
@@ -3803,10 +3818,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
         discard(created.toSeq.map(new Path(path, _)))
         throw e
       }
-    // a file is "still ours" only with the same path AND the same DV
-    // descriptor — a concurrent DV delete keeps the path live while
-    // changing the logical content this commit was computed from
-    val expected = affected.map(f => f.path -> f.deletionVector).toMap
+    val ours = stillLive(affected)
     val now = System.currentTimeMillis()
     val actions = extraActions ++
       affected.map(f => Action(remove = Some(removeOf(f, now)))) ++
@@ -3829,10 +3841,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
              else Action(protocol = Some(protocolWithDv(att))) +: actions,
       s => {
         if (txnApplied(s)) { txnSkip = true; false }
-        else {
-          val live = s.files.map(f => f.path -> f.deletionVector).toMap
-          expected.forall { case (p, dv) => live.get(p).contains(dv) } && extraCheck(s)
-        }
+        else ours(s) && extraCheck(s)
       })
     if (committed < 0 && !txnSkip)
       throw new java.util.ConcurrentModificationException(
@@ -4475,17 +4484,13 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     val reAdds = targets.flatMap(f => statsOf(f.path).map(s =>
       Action(add = Some(f.copy(stats = Some(s), dataChange = false)))))
     if (reAdds.isEmpty) return -1L // every footer read failed: nothing to say
-    val expected = targets.map(f => f.path -> f.deletionVector).toMap
     log.commit(
       reAdds :+ Action(commitInfo = Some(
         CommitInfo(System.currentTimeMillis(), "COMPUTE STATS"))),
-      // a re-add must describe the file a concurrent writer left live —
-      // same path AND same DV descriptor (stats are physical-file facts,
-      // DV-independent, but a vanished file must not resurrect)
-      check = s => {
-        val live = s.files.map(f => f.path -> f.deletionVector).toMap
-        expected.forall { case (p, dv) => live.get(p).contains(dv) }
-      })
+      // a re-add must describe the file a concurrent writer left live
+      // (stats are physical-file facts, DV-independent, but a vanished
+      // file must not resurrect)
+      check = stillLive(targets))
   }
 
   /** DML candidate pre-restriction through the `add.stats` index: the
@@ -4912,8 +4917,10 @@ final class DeltaTable(spark: SparkSession, val path: String) {
   /** Garbage-collect data files no longer referenced by the CURRENT
     * snapshot and older than `retentionMs` (delta VACUUM analog; pairs
     * with [[toDF(version:Long)*]] — vacuumed history is no longer
-    * time-travelable, like Delta proper). Staging dirs and the log are
-    * never touched. Returns the number of files deleted.
+    * time-travelable, like Delta proper). The log is never touched; a
+    * `_staging-*` dir older than the cutoff (left by a writer whose
+    * clean-up failed) is deleted whole and counts as one file. Returns
+    * the number of files deleted.
     *
     * Scale: the referenced-set is path strings only (no footers), and
     * deletion is metadata-rate; for object stores this would batch
@@ -4957,7 +4964,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       snap.files.map(_.path), wantExisting = false).toSet
     val missing = snap.files.filter(f => missingRels(f.path)).sortBy(_.path)
     if (missing.isEmpty || dryRun) return missing.map(_.path)
-    val expected = missing.map(f => f.path -> f.deletionVector).toMap
     val now = System.currentTimeMillis()
     val committed = log.commit(
       missing.map(f => Action(remove = Some(removeOf(f, now)))) ++
@@ -4966,10 +4972,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       // only repair files still referenced EXACTLY as we observed them —
       // a concurrent rewrite already un-referenced the path, and
       // committing our remove over it would tombstone a live re-add
-      check = s => {
-        val live = s.files.map(f => f.path -> f.deletionVector).toMap
-        expected.forall { case (p, dv) => live.get(p).contains(dv) }
-      })
+      check = stillLive(missing))
     if (committed < 0)
       throw new java.util.ConcurrentModificationException(
         "FSCK lost a commit race: a concurrent commit touched the dangling files")
@@ -5084,15 +5087,17 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     val skippedSeg = org.apache.spark.sql.functions.exists(segs, s =>
       s === DeltaTable.ManifestDirName || s === "_delta_log" ||
         s.startsWith("_staging-"))
-    val collectable =
+    val collectable = not(col("isDir")) &&
       (base.endsWith(".parquet") ||
         (base.startsWith("deletion_vector_") && base.endsWith(".bin"))) &&
         not(skippedSeg)
+    // a stale staging dir collects whole, as in the walk
+    val staleStaging = col("isDir") && fsize(segs) === 1 && base.startsWith("_staging-")
     val refDs = referenced.toDF("__rel")
     inventory
-      .filter(not(col("isDir")) && modMs < cutoff)
+      .filter(modMs < cutoff)
       .withColumn("__rel", rel0)
-      .filter(col("__rel").isNotNull && fsize(segs) >= 1 && collectable)
+      .filter(col("__rel").isNotNull && fsize(segs) >= 1 && (collectable || staleStaging))
       .select(col("__rel"))
       .join(refDs, Seq("__rel"), "left_anti")
       .as[String]
@@ -5189,25 +5194,28 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     // partitioned table's listing into a multi-hour metadata crawl — the
     // same failure mode the FSCK comment names.
     val candidates = scala.collection.mutable.ArrayBuffer.empty[String]
-    def skipDir(dir: Path): Boolean = {
-      val name = dir.getName
+    def relOf(p: Path): String = fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
+    def collect(rel: String): Unit = { onCandidate(rel); candidates += rel }
+    // a stale staging dir (its writer's delete failed twice) collects
+    // whole; a fresh one may belong to a live writer
+    def skipDir(dir: DeltaTable.WalkEntry): Boolean = {
+      val p = new Path(dir.path)
+      val name = p.getName
+      val rel = relOf(p)
+      if (dir.modificationTime < cutoff && DeltaTable.isStagingDir(rel)) collect(rel)
       name == "_delta_log" || name.startsWith("_staging-") ||
         name == DeltaTable.ManifestDirName
     }
     DeltaTable.parallelWalk(spark, spark.sessionState.newHadoopConf(),
       root, skipDir) { st =>
       val p = new Path(st.path)
-      val rel = fs.makeQualified(p).toString
-        .stripPrefix(rootQ).stripPrefix("/")
+      val rel = relOf(p)
       val n = p.getName
       val collectable =
         (n.endsWith(".parquet") && !referenced.contains(rel)) ||
           (n.startsWith("deletion_vector_") && n.endsWith(".bin") &&
             !referencedDv.contains(rel))
-      if (collectable && st.modificationTime < cutoff) {
-        onCandidate(rel)
-        candidates += rel
-      }
+      if (collectable && st.modificationTime < cutoff) collect(rel)
     }
     if (dryRun || candidates.isEmpty) return 0
     // threshold-routed delete: bounded driver pool for routine sweeps,
@@ -5548,9 +5556,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       // accumulated small files COMPACTS while it clusters, and a file
       // larger than the target splits — the old file count is not a
       // layout goal
-      val target = tableConf.get(DeltaTable.TargetFileSizeKey)
-        .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
-        .getOrElse(DeltaTable.DefaultTargetFileSize)
+      val target = targetFileSize(snap0)
       val total = snap.files.map(_.size).sum
       math.max(1L, (total + target - 1) / target).toInt
     }
@@ -5577,31 +5583,12 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       .repartitionByRange(n, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .drop("__zv")
-    val adds = stage(toPhysicalForWrite(sorted, schema), physicalPartNames(parts))
     // one fresh cube id per run: every output file of this rewrite is
     // one cluster unit for later incremental candidate selection
-    val cubeTags = Some(Map(
+    rewrite(snap0, snap.files, sorted, tags = Some(Map(
       DeltaTable.ZCubeIdTag -> java.util.UUID.randomUUID().toString,
       DeltaTable.ZCubeColsTag -> colsJson,
-      DeltaTable.ZCubeCurveTag -> curve))
-    val expected = snap.files.map(f => f.path -> f.deletionVector).toMap
-    val actions =
-      adds.map(a => Action(add = Some(a.copy(dataChange = false, tags = cubeTags)))) ++
-        snap.files.map(f => Action(remove = Some(removeOf(f,
-          System.currentTimeMillis(), dataChange = false)))) ++
-        Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
-          operationMetrics = Some(Map(
-            "numAddedFiles" -> adds.size.toString,
-            "numRemovedFiles" -> snap.files.size.toString,
-            "numAddedBytes" -> adds.map(_.size).sum.toString,
-            "numRemovedBytes" -> snap.files.map(_.size).sum.toString))))))
-    // path-AND-descriptor guard: a concurrent DV delete keeps paths live
-    // while changing logical content — clobbering it would resurrect its
-    // deleted rows
-    commitStaged(snap0.version, adds.map(_.path), _ => actions, s => {
-      val live = s.files.map(f => f.path -> f.deletionVector).toMap
-      expected.forall { case (p, dv) => live.get(p).contains(dv) }
-    })
+      DeltaTable.ZCubeCurveTag -> curve)))
   }
 
   /** The bin-routing frame [[compact]] shuffles: each row tagged with
@@ -5669,47 +5656,56 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     val snap = snapshot
     // `where` = partition-scoped OPTIMIZE (the `OPTIMIZE t WHERE day = x`
     // shape): at 100 TB you compact yesterday's partition, not the table
-    val small0 = snap.files.filter(_.size < minBytes)
-    val candidates = where.fold(small0)(p => filesInPartitions(small0, p))
-    val parts = partitionColumns
-    val target = {
-      val prop = snap.metadata.flatMap(_.configuration.get(DeltaTable.TargetFileSizeKey))
-        .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
-        .getOrElse(DeltaTable.DefaultTargetFileSize)
-      math.max(minBytes, prop)
-    }
+    val small = snap.files.filter(_.size < minBytes)
+    compact(snap, where.fold(small)(p => filesInPartitions(small, p)), minBytes)
+  }
+
+  /** [[compact]] over the given small files of `snap`; [[autoCompact]]
+    * calls it too. Keep the name: `ingestbench`'s trace attributes
+    * compaction to a `DeltaTable` stack frame named `compact`. */
+  private def compact(snap: Snapshot, candidates: Seq[AddFile], minBytes: Long): Long = {
     // greedy per-partition packing over the exact add.size list; keys
     // are the [[fileKey]] suffix (partition dirs + name) — a BASENAME
     // key would collide across partition dirs (one job reuses its
     // part-file name in each) and silently merge two partitions' bins
-    val binOf = compactBins(snap, candidates, target)
+    val binOf = compactBins(snap, candidates, math.max(minBytes, targetFileSize(snap)))
     if (binOf.isEmpty) return -1L
     val small = candidates.filter(f => binOf.contains(fileKey(snap, f)))
-    val totalBins = binOf.values.max + 1
     // dfFor handles the declared-schema read (old files null-fill evolved
     // columns) — an inferred read crashes after schema evolution
     val df0 = materializingRowIds(snap.copy(files = small))
-    val df = binRoutedFrame(snap, df0, binOf, totalBins)
-    val adds = stage(toPhysicalForWrite(df, schema), physicalPartNames(parts))
-    val expected = small.map(f => f.path -> f.deletionVector).toMap
+    rewrite(snap, small, binRoutedFrame(snap, df0, binOf, binOf.values.max + 1))
+  }
+
+  /** The `delta.targetFileSize` property of `snap`, or 128 MiB. */
+  private def targetFileSize(snap: Snapshot): Long =
+    snap.metadata.flatMap(_.configuration.get(DeltaTable.TargetFileSizeKey))
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
+      .getOrElse(DeltaTable.DefaultTargetFileSize)
+
+  /** The one OPTIMIZE commit tail ([[compact]], [[optimizeByKey]],
+    * [[purgeDeletionVectors]]): stage `frame`, the caller's arrangement
+    * of the rows of `inputs`, and swap `inputs` for the staged files with
+    * dataChange=false (the logical content is unchanged, so streams and
+    * CDF see nothing). The commit is guarded by [[stillLive]]: if any
+    * input was removed or re-masked concurrently (a compaction, vacuum
+    * or DV delete got there first), committing would duplicate or
+    * resurrect rows, so it returns -1 instead — quiet, since skipping an
+    * optimization is safe. */
+  private def rewrite(snap: Snapshot, inputs: Seq[AddFile], frame: DataFrame,
+                      params: Map[String, String] = Map.empty,
+                      tags: Option[Map[String, String]] = None): Long = {
+    val adds = stage(toPhysicalForWrite(frame, schema), physicalPartNames(partitionColumns))
+    val now = System.currentTimeMillis()
     val actions =
-      adds.map(a => Action(add = Some(a.copy(dataChange = false)))) ++
-        small.map(f => Action(remove = Some(removeOf(f,
-          System.currentTimeMillis(), dataChange = false)))) ++
-        Seq(Action(commitInfo = Some(CommitInfo(System.currentTimeMillis(), "OPTIMIZE",
+      adds.map(a => Action(add = Some(a.copy(dataChange = false, tags = tags)))) ++
+        inputs.map(f => Action(remove = Some(removeOf(f, now, dataChange = false)))) ++
+        Seq(Action(commitInfo = Some(CommitInfo(now, "OPTIMIZE", params,
           operationMetrics = Some(Map(
             "numAddedFiles" -> adds.size.toString,
-            "numRemovedFiles" -> small.size.toString,
+            "numRemovedFiles" -> inputs.size.toString,
             "numAddedBytes" -> adds.map(_.size).sum.toString,
-            "numRemovedBytes" -> small.map(_.size).sum.toString))))))
-    // concurrency guard: if ANY of the files this rewrite is based on is
-    // no longer live — or now carries a different DV descriptor (a
-    // concurrent compaction, vacuum, or DV delete got there first) —
-    // committing our adds would duplicate or resurrect rows; abort
-    // instead (the retry re-runs this check on the new snapshot)
-    commitStaged(snap.version, adds.map(_.path), _ => actions, s => {
-      val live = s.files.map(f => f.path -> f.deletionVector).toMap
-      expected.forall { case (p, dv) => live.get(p).contains(dv) }
-    })
+            "numRemovedBytes" -> inputs.map(_.size).sum.toString))))))
+    commitStaged(snap.version, adds.map(_.path), _ => actions, stillLive(inputs))
   }
 }

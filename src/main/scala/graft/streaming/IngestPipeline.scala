@@ -47,10 +47,11 @@ final case class IngestOptions(
     /** M1/M2: statsd-style sink fed per batch + per progress event */
     metricsSink: Option[MetricsSink] = None,
     /** B3 (`--min_bytes_per_file`, reference default 128 MiB): when set,
-      * files smaller than this are auto-compacted after each batch — the
-      * Spark analog of the reference's accumulate-until-min-bytes file
-      * flush (a micro-batch sink can't hold one file open across
-      * triggers, SURVEY §7.7). */
+      * files smaller than this in the partitions a batch wrote are
+      * auto-compacted once the batch commits (`DeltaTable.append`'s
+      * `compactBelow`) — the Spark analog of the reference's
+      * accumulate-until-min-bytes file flush (a micro-batch sink can't
+      * hold one file open across triggers, SURVEY §7.7). */
     minBytesPerFile: Option[Long] = None)
 
 /** The reference's whole per-message path (SURVEY §3.2) as one declarative
@@ -233,7 +234,8 @@ object IngestPipeline {
       IngestMetrics.emitBatch(s, obs.get, (System.nanoTime() - t0) / 1000000L))
     try {
       val committed =
-        try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
+        try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE",
+          compactBelow = opts.minBytesPerFile)
         catch {
           // the version is durable and the batch landed; only post-commit
           // work failed, so this is not a failed write
@@ -243,7 +245,6 @@ object IngestPipeline {
         }
       if (committed >= 0) landed()
       dlq.write(dead, batchId)
-      if (committed >= 0) opts.minBytesPerFile.foreach(table.compact(_): Unit)
     } finally StreamBridge.forget(batch.sparkSession, obs)
   }
 

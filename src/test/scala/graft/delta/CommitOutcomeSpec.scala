@@ -79,4 +79,26 @@ class CommitOutcomeSpec extends SparkSpec {
     assert(!log.contains("00000000000000000001.crc"))
     assertIntact(dir, local, version = 1L, batchId = 1L, ids = (0L until 10L))
   }
+
+  test("VACUUM collects a staging dir whose delete failed twice, once it is stale") {
+    val local = tmpDir("staging-left")
+    val dir = FaultyFileSystem.uriOf(local)
+    val t = DeltaTable.forPath(spark, dir).create(schema, Seq("date"))
+    FaultyFileSystem.failMatching((op, p) => op == "delete" && p.getName.startsWith("_staging-"))
+    val v =
+      try t.append(batch(0, 10), Some("app"), 1L)
+      finally FaultyFileSystem.reset()
+    assert(v === 1L)
+    def stagingDirs() = new java.io.File(local).list().toSeq.filter(_.startsWith("_staging-"))
+    val left = stagingDirs()
+    assert(left.size === 1, "both delete attempts failed")
+    val stale = new java.io.File(local, left.head)
+    assert(stale.setLastModified(System.currentTimeMillis() - 3600L * 1000))
+    val fresh = new java.io.File(local, "_staging-fresh")
+    assert(fresh.mkdir())
+    assert(t.vacuumDryRun(retentionMs = 60L * 1000) === Seq(left.head))
+    assert(t.vacuum(retentionMs = 60L * 1000) === 1)
+    assert(stagingDirs() === Seq("_staging-fresh"))
+    assertIntact(dir, local, version = 1L, batchId = 1L, ids = (0L until 10L))
+  }
 }

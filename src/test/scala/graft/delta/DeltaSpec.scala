@@ -1078,6 +1078,22 @@ class DeltaSpec extends SparkSpec {
     val u = DeltaTable.forPath(spark, tmpDir("delta-noac")).create(schema)
     (0 until 5).foreach(i => u.append(sampleDf(i to i).coalesce(1)))
     assert(u.snapshot.files.size === 5)
+    // partitioned: only the partitions an append wrote count and compact
+    val p = DeltaTable.forPath(spark, tmpDir("delta-ac-part")).create(schema, Seq("date"))
+    def dated(i: Int, date: String) = sampleDf(i to i).withColumn("date", lit(date))
+    (0 until 4).foreach(i => p.append(dated(i, "2021-01-01")))
+    p.setProperties(Map(
+      DeltaTable.AutoCompactConfigKey -> "true",
+      DeltaTable.AutoCompactMinFilesKey -> "3"))
+    val held = p.snapshot.files.map(_.path).toSet
+    (4 until 6).foreach(i => p.append(dated(i, "2021-01-02")))
+    assert(held.subsetOf(p.snapshot.files.map(_.path).toSet),
+      "appends into 2021-01-02 must not compact 2021-01-01's four small files")
+    assert(p.snapshot.files.size === 6)
+    p.append(dated(6, "2021-01-02")) // the third small file of 2021-01-02
+    assert(p.snapshot.files.size === 5)
+    assert(held.subsetOf(p.snapshot.files.map(_.path).toSet))
+    assert(p.toDF.count() === 7L)
   }
 
   test("appendOnly: removal DML refuses; appends and compaction still work") {

@@ -182,17 +182,20 @@ class ProcessBatchSpec extends SparkSpec {
     def rows(uuid: String, date: String) = Seq((uuid, date)).toDF("uuid", "date")
       .select(schema.fieldNames.map(n => if (n == "uuid" || n == "date") col(n)
         else lit(null).cast(schema(n).dataType).as(n)).toSeq: _*)
-    Seq("2021-03-20", "2021-03-21", "2021-03-22", "2021-03-24")
-      .foreach(d => table.append(rows(s"seed-$d", d)))
+    // 2021-03-19 holds two small files, but the batch does not write it
+    Seq("2021-03-19", "2021-03-19", "2021-03-20", "2021-03-21", "2021-03-22", "2021-03-24")
+      .zipWithIndex.foreach { case (d, i) => table.append(rows(s"seed-$i", d)) }
     def filesOf(date: String) =
       table.snapshot.files.filter(_.partitionValues("date") == date).map(_.path).toSet
-    val untouched = Seq("2021-03-20", "2021-03-21", "2021-03-22").map(d => d -> filesOf(d))
+    val untouched = Seq("2021-03-19", "2021-03-20", "2021-03-21", "2021-03-22")
+      .map(d => d -> filesOf(d))
+    assert(untouched.head._2.size === 2)
     IngestPipeline.processBatch(batch, 0L, table, NoopDeadLetterSink,
       IngestOptions(appId = "lone", transforms = transforms, minBytesPerFile = Some(1L << 20)))
     untouched.foreach { case (d, files) => assert(filesOf(d) === files, d) }
     // the batch's own partition held two small files: they are compacted
     assert(filesOf("2021-03-24").size === 1)
-    assert(table.toDF.count() === 6L)
+    assert(table.toDF.count() === 8L)
     assert(table.log.history(Some(1)).head._2.exists(_.operation === "OPTIMIZE"))
   }
 
