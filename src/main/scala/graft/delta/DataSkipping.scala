@@ -122,23 +122,13 @@ object DataSkipping {
     // table, predicates arrive physically translated and partitionValues
     // key physically — the logical names stay in the set for unmapped
     // tables (identity) and direct callers
-    val partCols = {
-      val logical = snap.metadata.map(_.partitionColumns).getOrElse(Nil)
-      val physOf = snap.schema.map(_.fields.map(f =>
-        f.name -> (if (f.metadata.contains(DeltaTable.ColMapPhysKey))
-          f.metadata.getString(DeltaTable.ColMapPhysKey) else f.name)).toMap)
-        .getOrElse(Map.empty[String, String])
-      (logical ++ logical.flatMap(physOf.get)).toSet
-    }
+    val partCols = (snap.partitionColumns ++ snap.physicalPartitionColumns).toSet
     // types resolve under the LOGICAL name and, on column-mapped tables,
     // the PHYSICAL name too (stats are keyed physically; DeltaTable.scan
     // translates its predicates before calling here)
     val colTypes: Map[String, DataType] =
       snap.schema.map(_.fields.flatMap { f =>
-        val base = Seq(f.name -> f.dataType)
-        if (f.metadata.contains(DeltaTable.ColMapPhysKey))
-          base :+ (f.metadata.getString(DeltaTable.ColMapPhysKey) -> f.dataType)
-        else base
+        Seq(f.name -> f.dataType, snap.physicalNames(f.name) -> f.dataType)
       }.toMap).getOrElse(Map.empty)
     snap.files.filter { f =>
       // checkpoint-provided PRE-PARSED stats win (the typed struct a

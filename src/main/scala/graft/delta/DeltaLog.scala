@@ -401,10 +401,54 @@ final case class Snapshot(
     // per-app `txn.lastUpdated` (absent = never expires) — feeds
     // delta.setTransactionRetentionDuration's checkpoint-time expiry
     txnTimes: Map[String, Long] = Map.empty) {
-  def schema(implicit d: DummyImplicit): Option[org.apache.spark.sql.types.StructType] =
-    metadata.map(m =>
-      org.apache.spark.sql.types.DataType.fromJson(m.schemaString)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  // Table state derived from `metadata`, parsed once per snapshot: every
+  // reader of a schema-level fact or a table property asks the snapshot
+  // its operation read, so one operation sees one table version.
+
+  /** The table schema (None before the table exists). */
+  lazy val schema: Option[StructType] =
+    metadata.map(m => DataType.fromJson(m.schemaString).asInstanceOf[StructType])
+  private def fields: Seq[StructField] = schema.fold(Seq.empty[StructField])(_.fields.toSeq)
+  lazy val partitionColumns: Seq[String] = metadata.fold(Seq.empty[String])(_.partitionColumns)
+  lazy val configuration: Map[String, String] =
+    metadata.fold(Map.empty[String, String])(_.configuration)
+  /** True when table property `key` is set to "true". */
+  def enabled(key: String): Boolean = configuration.get(key).contains("true")
+  /** `delta.columnMapping.mode`: `none`, `name` or `id`. */
+  def columnMappingMode: String = configuration.getOrElse(DeltaTable.ColumnMappingModeKey, "none")
+  def columnMappingEnabled: Boolean = columnMappingMode == "name" || columnMappingMode == "id"
+  /** Logical → physical column name (identity without mapping metadata). */
+  lazy val physicalNames: Map[String, String] =
+    fields.map(f => f.name -> DeltaTable.physicalName(f)).toMap
+  /** Partition columns by physical name: Hive directory names and
+    * `add.partitionValues` keys on a mapped table. */
+  lazy val physicalPartitionColumns: Seq[String] =
+    partitionColumns.map(p => physicalNames.getOrElse(p, p))
+  /** Read-side physical schema. In `id` mode each field also carries
+    * `parquet.field.id` (its Delta stable id), so Spark's parquet reader
+    * matches columns by field id, the protocol's id-mode contract. */
+  lazy val physicalSchema: StructType = StructType(fields.map { f =>
+    val renamed = f.copy(name = DeltaTable.physicalName(f))
+    if (columnMappingMode == "id" && f.metadata.contains(DeltaTable.ColMapIdKey))
+      renamed.copy(metadata = new MetadataBuilder().withMetadata(renamed.metadata)
+        .putLong("parquet.field.id", f.metadata.getLong(DeltaTable.ColMapIdKey)).build())
+    else renamed
+  })
+  /** DEFAULT expressions by column: the SQL a write evaluates for a
+    * column its rows omit. */
+  lazy val columnDefaults: Map[String, String] = fieldStrings(DeltaTable.CurrentDefaultKey)
+  /** Generation expressions by column. */
+  lazy val generatedColumns: Map[String, String] = fieldStrings(DeltaTable.GenerationExprKey)
+  /** CHECK constraints by name (`delta.constraints.<name>` properties). */
+  lazy val checkConstraints: Map[String, String] = configuration.collect {
+    case (k, v) if k.startsWith(DeltaTable.ConstraintPrefix) =>
+      k.stripPrefix(DeltaTable.ConstraintPrefix) -> v
+  }
+  lazy val identityFields: Seq[StructField] =
+    fields.filter(_.metadata.contains(DeltaTable.IdentityStartKey))
+  private def fieldStrings(key: String): Map[String, String] =
+    fields.collect { case f if f.metadata.contains(key) => f.name -> f.metadata.getString(key) }
+      .toMap
 }
 
 /** Per-commit state summary persisted as `<version>.crc` next to the
@@ -911,18 +955,20 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * O(history²) over a query's life. The cache applies only the versions
     * committed since the last call. Cross-process writers are still seen:
     * the version listing is re-read every call. */
-  private var cached: Option[(Long, ReplayState)] = None
+  private var cached: Option[(Snapshot, ReplayState)] = None
 
   /** Reconstruct table state: cached state + new JSON commits; on a cold
     * cache, the newest parquet checkpoint (via `_last_checkpoint`) plus
     * the JSON tail; full JSON replay when no SparkSession/checkpoint is
-    * available. */
+    * available. With no new commit the cached snapshot itself returns:
+    * no file-list copy, and its derived state stays parsed. */
   def snapshot(): Snapshot = synchronized {
     val latest = latestVersion()
     if (latest < 0) return Snapshot(-1L, None, Nil, Map.empty)
 
     var (fromVersion, state) = cached match {
-      case Some((v, st)) if v <= latest => (v, st)
+      case Some((s, _)) if s.version == latest => return s
+      case Some((s, st)) if s.version < latest => (s.version, st)
       case _ => (-1L, new ReplayState())
     }
     if (fromVersion < 0) {
@@ -930,9 +976,10 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
       requireReplayStart(fromVersion)
     }
     replayRange(state, fromVersion, latest)
-    cached = Some((latest, state))
-    Snapshot(latest, state.metadata, state.adds.values.toSeq, state.txns.toMap,
+    val snap = Snapshot(latest, state.metadata, state.adds.values.toSeq, state.txns.toMap,
       state.protocol, state.domains.toMap, state.txnTimes.toMap)
+    cached = Some((snap, state))
+    snap
   }
 
   /** After cleanupMetadata, JSON below the surviving checkpoint is gone; a
@@ -960,9 +1007,6 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     Snapshot(version, state.metadata, state.adds.values.toSeq, state.txns.toMap,
       state.protocol, state.domains.toMap, state.txnTimes.toMap)
   }
-
-  /** Last committed `txn` version for an app id (idempotence check). */
-  def txnVersion(appId: String): Option[Long] = snapshot().txns.get(appId)
 
   /** Atomic single-version commit: put-if-absent of the version file
     * through the scheme's [[LogStore]] — hard-link publish on `file://`,
@@ -1061,8 +1105,7 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
       // mtime-mangling backfills. Recomputed per retry attempt against
       // the actual winning predecessor.
       val stamped =
-        if (!snap.metadata.exists(
-          _.configuration.get(DeltaTable.IctConfigKey).contains("true"))) actions
+        if (!snap.enabled(DeltaTable.IctConfigKey)) actions
         else {
           val prev =
             if (snap.version < 0) 0L
@@ -1260,8 +1303,7 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
   private def liveTxns(snap: Snapshot): Seq[(String, Long)] = {
     // lenient for the same post-commit reason as maybeExpireLog: an
     // unparseable retention keeps every txn (never expires = safe side)
-    val retention = snap.metadata
-      .flatMap(_.configuration.get(DeltaTable.TxnRetentionKey))
+    val retention = snap.configuration.get(DeltaTable.TxnRetentionKey)
       .flatMap(DeltaTable.parseIntervalMsLenient)
     val cutoff = retention.map(System.currentTimeMillis() - _)
     snap.txns.toSeq.sortBy(_._1).filter { case (app, _) =>
@@ -1283,18 +1325,16 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     import org.apache.spark.sql.functions.{col, element_at, from_json, struct}
     val schemaOpt = snap.schema
     if (schemaOpt.isEmpty) return df
-    def physName(f: StructField): String =
-      if (f.metadata.contains(DeltaTable.ColMapPhysKey))
-        f.metadata.getString(DeltaTable.ColMapPhysKey) else f.name
-    val parts = snap.metadata.map(_.partitionColumns).getOrElse(Nil)
+    val physName = snap.physicalNames
+    val parts = snap.partitionColumns
     val byLogical = schemaOpt.get.fields.map(f => f.name -> f).toMap
     val dataFields = schemaOpt.get.fields.filterNot(f => parts.contains(f.name))
-      .map(f => StructField(physName(f), f.dataType))
+      .map(f => StructField(physName(f.name), f.dataType))
     val statsSchema = Actions.statsParsedSchema(StructType(dataFields))
     var add = col("add").withField("stats_parsed",
       from_json(col("add.stats"), statsSchema, Actions.StatsJsonOptions))
     val pvFields = parts.flatMap(byLogical.get).map { f =>
-      val pn = physName(f)
+      val pn = physName(f.name)
       element_at(col("add.partitionValues"), pn).cast(f.dataType).as(pn)
     }
     if (pvFields.nonEmpty)
@@ -1331,11 +1371,11 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     // conformance: a checkpoint REWRITES table state — on a table with
     // unknown features it would silently drop the action types those
     // features add (this replay only knows the spec's action set)
-    DeltaLog.requireWriteSupported(snapshot().protocol)
     // the checkpoint must contain exactly version's state: snapshot()
     // would capture any commit a concurrent writer lands between our
     // commit and this call, poisoning later snapshotAt(version) reads
     val snap = snapshotAt(version)
+    DeltaLog.requireWriteSupported(snap.protocol)
     val nonFile: Seq[Action] =
       // the REPLAYED protocol, not a fresh default: a checkpoint after a
       // feature upgrade (e.g. deletionVectors → (3,7)) must not
@@ -1350,7 +1390,7 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     // V2 checkpoints (table config delta.checkpointPolicy=v2): file
     // actions go to sidecar parquet(s) under _sidecars/, the UUID-named
     // top-level JSON carries the rest + checkpointMetadata + pointers
-    if (snap.metadata.exists(_.configuration.get("delta.checkpointPolicy").contains("v2"))) {
+    if (snap.configuration.get(DeltaTable.CheckpointPolicyKey).contains("v2")) {
       writeV2Checkpoint(ss, version, snap, nonFile)
       return
     }

@@ -117,7 +117,7 @@ final class DeltaStreamProvider extends StreamSourceProvider
     val cdf = parameters.collectFirst {
       case (k, v) if k.equalsIgnoreCase("readChangeFeed") => v.toBoolean }
       .getOrElse(false)
-    (shortName(), if (cdf) t.cdfSchema else t.schema)
+    (shortName(), if (cdf) DeltaTable.cdfSchema(t.schema) else t.schema)
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -226,9 +226,7 @@ final class DeltaStreamSink(spark: SparkSession, path: String,
       // one merge; the txn rides the merge commit itself — one commit per
       // batch, and a crash-replayed batch returns -1 without re-merging
       val clauses = deleteWhen match {
-        case None =>
-          t.requireKnownColumns(deduped)
-          DeltaTable.UpsertClauses
+        case None => DeltaTable.UpsertClauses
         case Some(condSql) =>
           // bare column names in the user's condition mean the BATCH row
           import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -372,7 +370,7 @@ final class DeltaStreamSource(spark: SparkSession, path: String,
       "ignoreDeletes/ignoreChanges do not apply")
 
   override val schema: StructType =
-    if (readChangeFeed) table.cdfSchema else table.schema
+    if (readChangeFeed) DeltaTable.cdfSchema(table.schema) else table.schema
   private val schemaJson = table.schema.json
 
   /** Rate-limit baseline: the last (version, index) handed out (or
@@ -381,17 +379,16 @@ final class DeltaStreamSource(spark: SparkSession, path: String,
     * re-seeds this on restart. */
   private var lastSeen: Option[(Long, Long)] = None
 
-  /** The initial snapshot's path-SORTED file list + snapshot (cached per
-    * version): deterministic across restarts, so a checkpointed file
-    * index always means the same files. */
-  private var snapCache: Option[(Long, Seq[AddFile], Snapshot)] = None
-  private def snapAt(v: Long): (Seq[AddFile], Snapshot) = snapCache match {
-    case Some((cv, fs, sn)) if cv == v => (fs, sn)
+  /** The initial snapshot's path-SORTED file list (cached per version):
+    * deterministic across restarts, so a checkpointed file index always
+    * means the same files. */
+  private var snapCache: Option[(Long, Seq[AddFile])] = None
+  private def snapAt(v: Long): Seq[AddFile] = snapCache match {
+    case Some((cv, fs)) if cv == v => fs
     case _ =>
-      val sn = table.log.snapshotAt(v)
-      val fs = sn.files.sortBy(_.path)
-      snapCache = Some((v, fs, sn))
-      (fs, sn)
+      val fs = table.log.snapshotAt(v).files.sortBy(_.path)
+      snapCache = Some((v, fs))
+      fs
   }
 
   private def rank(o: (Long, Long)): (Long, Long) =
@@ -420,10 +417,10 @@ final class DeltaStreamSource(spark: SparkSession, path: String,
     Some(cur match {
       case None =>
         // fresh start: begin the chunked initial snapshot at `latest`
-        val (files, _) = snapAt(latest)
+        val files = snapAt(latest)
         (latest, snapshotChunkEnd(files, 0L))
       case Some((v, i)) if i >= 0 =>
-        val (files, _) = snapAt(v)
+        val files = snapAt(v)
         val n = files.size.toLong
         if (i < n) (v, snapshotChunkEnd(files, i)) // next snapshot chunk
         else if (latest > v) tailFrom(v) // snapshot complete → tail
@@ -497,14 +494,15 @@ final class DeltaStreamSource(spark: SparkSession, path: String,
     val (endV, endI) = parseOffset(end)
     lastSeen = Some(Seq(lastSeen.getOrElse((endV, endI)), (endV, endI))
       .maxBy(rank))
+    // the table's current schema, mapping and partitioning, read once
+    lazy val snap = table.snapshot
     // the initial snapshot streams with deletion vectors APPLIED (the
     // same broadcast-bitmap scan filter as the batch read) — a table
     // maintained by merge-on-read upserts tails downstream directly
     def snapshotChunk(v: Long, from: Long, until: Long): DataFrame = {
-      val (files, sn) = snapAt(v)
+      val files = snapAt(v)
       val hi = if (until < 0) files.size.toLong else math.min(until, files.size.toLong)
-      table.streamingBatchFor(
-        files.slice(from.toInt, hi.toInt), dvSnap = Some(sn))
+      table.streamingBatchFor(snap, files.slice(from.toInt, hi.toInt))
     }
     def stamped(df: DataFrame, v: Long): DataFrame = {
       import org.apache.spark.sql.functions.{lit, timestamp_millis}
@@ -527,18 +525,18 @@ final class DeltaStreamSource(spark: SparkSession, path: String,
         if (endV == sv) chunkOut
         else {
           val tail =
-            if (readChangeFeed) table.changesFrames(sv + 1, endV, streaming = true)
-            else table.streamingBatchFor(addsInRange(sv + 1, endV))
+            if (readChangeFeed) table.changesFrames(snap, sv + 1, endV, streaming = true)
+            else table.streamingBatchFor(snap, addsInRange(sv + 1, endV))
           chunkOut.unionByName(tail)
         }
       // ---- tail mode ----
       case (Some((s, _)), _) =>
         if (s + 1 > endV) empty
-        else if (readChangeFeed) table.changesFrames(s + 1, endV, streaming = true)
-        else table.streamingBatchFor(addsInRange(s + 1, endV))
+        else if (readChangeFeed) table.changesFrames(snap, s + 1, endV, streaming = true)
+        else table.streamingBatchFor(snap, addsInRange(s + 1, endV))
       case (None, Some(startV)) =>
-        if (readChangeFeed) table.changesFrames(startV, endV, streaming = true)
-        else table.streamingBatchFor(addsInRange(startV, endV))
+        if (readChangeFeed) table.changesFrames(snap, startV, endV, streaming = true)
+        else table.streamingBatchFor(snap, addsInRange(startV, endV))
       // ---- first batch of the initial snapshot (endI < 0 = the legacy
       // whole-snapshot offset an old checkpoint may carry) ----
       case (None, None) =>

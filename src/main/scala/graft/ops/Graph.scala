@@ -1686,7 +1686,7 @@ object Graph {
 
   /** The mirror's bucket count, from its table property. */
   def adjacencyBuckets(mirror: graft.delta.DeltaTable): Int =
-    mirror.snapshot.metadata.flatMap(_.configuration.get(AdjacencyBucketsKey))
+    mirror.snapshot.configuration.get(AdjacencyBucketsKey)
       .map(_.toInt)
       .getOrElse(throw new IllegalArgumentException(
         s"${mirror.path} is not an adjacency mirror: missing $AdjacencyBucketsKey " +

@@ -365,7 +365,7 @@ case class DeltaDropConstraintCommand(path: String, name: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val t = DeltaTable.forPath(spark, path)
     val key = DeltaTable.ConstraintPrefix + name.toLowerCase
-    val present = t.snapshot.metadata.exists(_.configuration.contains(key))
+    val present = t.snapshot.configuration.contains(key)
     if (!present && ifExists) Seq(Row(-1L))
     else Seq(Row(t.dropConstraint(name)))
   }
@@ -379,8 +379,7 @@ case class DeltaShowPropertiesCommand(path: String, key: Option[String])
   override val output: Seq[Attribute] = CmdSchema.attrs(
     "key" -> StringType, "value" -> StringType)
   override def run(spark: SparkSession): Seq[Row] = {
-    val conf = DeltaTable.forPath(spark, path).snapshot.metadata
-      .map(_.configuration).getOrElse(Map.empty)
+    val conf = DeltaTable.forPath(spark, path).snapshot.configuration
     key match {
       case Some(k) => Seq(Row(k, conf.getOrElse(k,
         s"Table ${path} does not have property: $k")))

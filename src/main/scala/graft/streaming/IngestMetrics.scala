@@ -68,6 +68,8 @@ object IngestMetrics {
   val DeltaWriteStarted = "delta.write.started"
   val DeltaWriteCompleted = "delta.write.completed"
   val DeltaWriteFailed = "delta.write.failed"
+  /** A batch the table's txn already covers was skipped, not written. */
+  val DeltaWriteReplaySkipped = "delta.write.replay_skipped"
   val DeltaWriteDuration = "delta.write.duration"
   val BufferLagTotal = "buffer.lag.total"
   val BufferLagMax = "buffer.lag.max"

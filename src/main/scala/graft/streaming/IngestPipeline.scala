@@ -32,6 +32,11 @@ object MessageFormat {
   * buffering knobs become trigger/offset-rate options; exactly-once comes
   * from the checkpoint + Delta txn. */
 final case class IngestOptions(
+    /** The Delta `txn` app id (reference `app_id`): each committed batch
+      * records `(appId, batchId)`, and a batch at or below the recorded
+      * id is skipped as a replay. A fresh [[checkpointLocation]] counts
+      * batch ids from 0 again, so it needs a fresh `appId` too — under
+      * the old one its first batches are skipped unwritten. */
     appId: String = "kafka_delta_ingest",
     transforms: Seq[(String, String)] = Nil,
     format: MessageFormat = MessageFormat.Json,
@@ -43,6 +48,8 @@ final case class IngestOptions(
     maxMessagesPerBatch: Long = 5000L,
     /** bounded run: consume to current end then stop (S5) */
     endAtLastOffsets: Boolean = false,
+    /** Structured Streaming checkpoint; a fresh one needs a fresh
+      * [[appId]] (see there). */
     checkpointLocation: Option[String] = None,
     /** M1/M2: statsd-style sink fed per batch + per progress event */
     metricsSink: Option[MetricsSink] = None,
@@ -243,9 +250,24 @@ object IngestPipeline {
           case e: Throwable =>
             opts.metricsSink.foreach(_.counter(IngestMetrics.DeltaWriteFailed)); throw e
         }
-      if (committed >= 0) landed()
+      if (committed >= 0) landed() else replaySkipped(table, batchId, opts)
       dlq.write(dead, batchId)
     } finally StreamBridge.forget(batch.sparkSession, obs)
+  }
+
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** `append` skipped batch `batchId`: the table's txn for `opts.appId`
+    * is already at or past it. Say which case this is, and count it. */
+  private def replaySkipped(table: DeltaTable, batchId: Long, opts: IngestOptions): Unit = {
+    val stored = table.txnVersion(opts.appId).getOrElse(-1L)
+    val why =
+      if (stored == batchId) "a crash replay of a committed batch; its rows are in the table"
+      else s"the streaming checkpoint is behind the table (stored $stored > batch $batchId): " +
+        "this batch's messages were NOT written — a fresh checkpoint needs a fresh app_id"
+    logger.warn(s"app_id '${opts.appId}': batch $batchId skipped, stored txn version " +
+      s"$stored — $why")
+    opts.metricsSink.foreach(_.counter(IngestMetrics.DeltaWriteReplaySkipped))
   }
 
   /** Flagship batch-mode run (SURVEY §7.3, the reference's canonical

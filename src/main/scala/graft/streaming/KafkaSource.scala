@@ -114,8 +114,10 @@ object OffsetGuard {
   final case class InconsistentStoredOffsets(details: String)
       extends RuntimeException(
         s"Stored offsets are lower than seek offsets: $details — " +
-          "seek with a fresh checkpoint location (reference: fresh app_id) " +
-          "if skipping records is intended")
+          "if skipping records is intended, seek with a fresh checkpoint " +
+          "location AND a fresh app_id: the table records each app_id's " +
+          "last batch id, so a fresh checkpoint under the same app_id " +
+          "skips its first batches unwritten")
 
   /** Per-partition next-to-read offsets for `topic` from the NEWEST
     * checkpoint offsets file; None when no checkpoint state exists.

@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * system, where every create, rename and delete first asks
   * [[FaultyFileSystem.hit]] whether to fail with an IOException. The
   * failed operation is not performed. Tasks and the driver share one
-  * JVM in local mode, so Spark's own writes count too. */
+  * JVM in local mode, so Spark's own writes count too. Listings under a
+  * `_delta_log` directory are counted apart ([[FaultyFileSystem.logListings]]);
+  * they never fail. */
 class FaultyFileSystem extends RawLocalFileSystem {
   override def getUri: java.net.URI = FaultyFileSystem.Uri
   override def getScheme: String = FaultyFileSystem.Scheme
@@ -47,7 +49,11 @@ class FaultyFileSystem extends RawLocalFileSystem {
 
   override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
 
-  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
+  // listFiles and listLocatedStatus list through this method too
+  override def listStatus(f: Path): Array[FileStatus] = {
+    if (f.toUri.getPath.contains("/_delta_log")) FaultyFileSystem.listed.incrementAndGet()
+    super.listStatus(f).map(plain)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     FaultyFileSystem.hit("rename", src)
@@ -65,6 +71,7 @@ object FaultyFileSystem {
   val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
 
   private val ops = new AtomicLong(0L)
+  private val listed = new AtomicLong(0L)
   @volatile private var failAt = -1L
   @volatile private var failWhen: (String, Path) => Boolean = (_, _) => false
 
@@ -90,6 +97,9 @@ object FaultyFileSystem {
 
   /** Operations counted since the last [[failNth]]. */
   def count: Long = ops.get
+
+  /** Listings under any `_delta_log` directory since the last call. */
+  def logListings(): Long = listed.getAndSet(0L)
 
   private def hit(op: String, p: Path): Unit = {
     val n = ops.incrementAndGet()

@@ -69,6 +69,9 @@ class KafkaSourceSpec extends SparkSpec {
     val e = intercept[OffsetGuard.InconsistentStoredOffsets](
       OffsetGuard.validate(cfg(Map(0 -> 21L, 1 -> 5L)), Some(ckpt)))
     assert(e.getMessage.contains("[0:stored=20/seek=21]"))
+    // a fresh checkpoint under the same app_id would skip the new
+    // query's first batches: the message must say so
+    assert(e.getMessage.contains("fresh app_id"), e.getMessage)
   }
 
   test("startingOffsets falls back to auto_offset_reset") {

@@ -89,9 +89,17 @@ class ProcessBatchSpec extends SparkSpec {
     assert((table.snapshot.version, dlqTable.snapshot.version) === versions)
     assert(table.toDF.count() === 2L)
     assert(dlqTable.toDF.count() === 2L)
-    assert(sink.counters.toMap === counters)
+    // the batch's counters are not emitted again: only the skip counts
+    assert(sink.counters.toMap === counters + (IngestMetrics.DeltaWriteReplaySkipped -> 1L))
     assert(sink.timers.size === timers)
     assert(registeredObservations() === before)
+
+    // a checkpoint behind the table: batch 0 again after batch 1 committed
+    IngestPipeline.processBatch(batch, 1L, table, dlq, opts)
+    val afterOne = table.snapshot.version
+    IngestPipeline.processBatch(batch, 0L, table, dlq, opts)
+    assert(table.snapshot.version === afterOne)
+    assert(sink.counters(IngestMetrics.DeltaWriteReplaySkipped) === 2L)
   }
 
   /** Ingest `values` (offsets 0, 1, …) with `transforms` into a fresh
