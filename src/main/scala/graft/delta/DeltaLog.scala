@@ -9,7 +9,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -544,6 +544,43 @@ object DeltaLog {
     * [[DeltaLog.versionAt]]'s bounded-read search: generous for NTP drift
     * plus object-store upload lag. */
   val DefaultMaxClockSkewMs: Long = 15L * 60L * 1000L
+
+  /** One COMPLETE checkpoint on disk: the classic single file
+    * (`v.checkpoint.parquet`), a full multi-part set
+    * (`v.checkpoint.<part>.<parts>.parquet`, parts 1..N all present —
+    * PROTOCOL.md classic multi-part form), or a V2 top-level file
+    * (`v.checkpoint.<uuid>.json` whose sidecar pointers are resolved at
+    * load). An incomplete set (a writer died mid-upload) is IGNORED,
+    * never half-read. */
+  private final case class CheckpointSet(version: Long, files: Seq[Path],
+                                         v2: Boolean = false)
+
+  /** One `listStatus` of `_delta_log`, parsed once: everything a read, a
+    * commit's bookkeeping and a cleanup learn from the log's file names.
+    *
+    * @param commits     (version, mtime) of every plain commit JSON, by version
+    * @param checkpoints complete checkpoints, one per version (V2 preferred
+    *                    over classic), by version
+    * @param v2Files     every V2 top-level file, whichever its version carries
+    * @param spans       log-compaction (from, to) spans, sorted
+    * @param retirable   every versioned file with the version it dies with:
+    *                    commits, `.crc`s, checkpoint files of any form
+    *                    (incomplete sets too), compaction spans (by end)
+    * @param temps       staging entries a crashed writer can leave
+    *                    (checkpoint temp dirs, checksum temp files)
+    * @param sidecars    whether `_sidecars/` exists */
+  private final case class LogListing(commits: Vector[(Long, Long)],
+                                      checkpoints: Vector[CheckpointSet],
+                                      v2Files: Vector[Path],
+                                      spans: Vector[(Long, Long)],
+                                      retirable: Vector[(Long, Path)],
+                                      temps: Vector[FileStatus],
+                                      sidecars: Boolean) {
+    def latest: Long = if (commits.isEmpty) -1L else commits.last._1
+    /** The newest complete checkpoint at or below `version`. */
+    def checkpointAtOrBelow(version: Long): Option[CheckpointSet] =
+      checkpoints.takeWhile(_.version <= version).lastOption
+  }
 }
 
 /** @param spark when present, checkpoints are written/read as spec-schema
@@ -553,6 +590,7 @@ object DeltaLog {
 final class DeltaLog(val tablePath: String, conf: Configuration,
                      spark: Option[SparkSession] = None) {
   import Actions._
+  import DeltaLog.{CheckpointSet, LogListing}
 
   private val logPath = new Path(tablePath, "_delta_log")
   private def fs: FileSystem = logPath.getFileSystem(conf)
@@ -563,19 +601,76 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     new Path(logPath, f"$v%020d.checkpoint.parquet")
   private def checkpointPartFile(v: Long, part: Int, parts: Int): Path =
     new Path(logPath, f"$v%020d.checkpoint.$part%010d.$parts%010d.parquet")
+  private def compactedFile(from: Long, to: Long): Path =
+    new Path(logPath, f"$from%020d.$to%020d.compacted.json")
+  private[delta] val sidecarDir = new Path(logPath, "_sidecars")
 
   def exists(): Boolean = fs.exists(logPath)
 
-  def latestVersion(): Long = {
-    if (!fs.exists(logPath)) return -1L
-    val versions = fs.listStatus(logPath).iterator.flatMap { st =>
+  private val SinglePartRx = """(\d{20})\.checkpoint\.parquet""".r
+  private val MultiPartRx = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
+  private val V2Rx = """(\d{20})\.checkpoint\.([0-9a-fA-F-]{36})\.json""".r
+  private val CompactedRx = """(\d{20})\.(\d{20})\.compacted\.json""".r
+  // checkpoint staging dirs: `.ck-` from the part writer, `.ck2-` from
+  // V2 writers that had their own prefix
+  private val CheckpointTempRx = """\.ck2?-.*""".r
+
+  /** The one listing of `_delta_log`. A missing directory lists empty. */
+  private def listLog(): LogListing = {
+    val statuses =
+      try fs.listStatus(logPath)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    def versionOf(name: String, suffix: String): Option[Long] =
+      if (!name.endsWith(suffix)) None
+      else try Some(name.stripSuffix(suffix).toLong)
+      catch { case _: NumberFormatException => None }
+    val commits = Vector.newBuilder[(Long, Long)]
+    val singles = Vector.newBuilder[CheckpointSet]
+    val parts = Vector.newBuilder[(Long, Int, Int, Path)]
+    val v2s = Vector.newBuilder[CheckpointSet]
+    val spans = Vector.newBuilder[(Long, Long)]
+    val retirable = Vector.newBuilder[(Long, Path)]
+    val temps = Vector.newBuilder[FileStatus]
+    var sidecars = false
+    statuses.foreach { st =>
       val n = st.getPath.getName
-      if (n.endsWith(".json") && !n.contains("checkpoint"))
-        try Some(n.stripSuffix(".json").toLong) catch { case _: NumberFormatException => None }
-      else None
+      val p = new Path(logPath, n)
+      n match {
+        case SinglePartRx(v) =>
+          singles += CheckpointSet(v.toLong, Seq(p)); retirable += v.toLong -> p
+        case MultiPartRx(v, part, of) =>
+          parts += ((v.toLong, of.toInt, part.toInt, p)); retirable += v.toLong -> p
+        case V2Rx(v, _) =>
+          v2s += CheckpointSet(v.toLong, Seq(p), v2 = true); retirable += v.toLong -> p
+        // a compaction span dies with its END version: any replay that
+        // could still use it starts at a checkpoint >= cutoff > end
+        case CompactedRx(a, b) =>
+          spans += a.toLong -> b.toLong; retirable += b.toLong -> p
+        case CheckpointTempRx() if st.isDirectory => temps += st
+        case _ if n.startsWith(".crc-tmp-") && !st.isDirectory => temps += st
+        case "_sidecars" => sidecars = true
+        case _ =>
+          if (!n.contains("checkpoint")) versionOf(n, ".json").foreach { v =>
+            commits += v -> st.getModificationTime; retirable += v -> p
+          }
+          // version checksums die with their commit JSON
+          versionOf(n, ".crc").foreach(v => retirable += v -> p)
+      }
     }
-    if (versions.isEmpty) -1L else versions.max
+    val multis = parts.result().groupBy(t => (t._1, t._2)).collect {
+      case ((v, of), found) if found.map(_._3).toSet == (1 to of).toSet =>
+        CheckpointSet(v, found.sortBy(_._3).map(_._4))
+    }
+    val v2Sets = v2s.result()
+    // a version can carry both forms; prefer the V2 (sidecars parallelize)
+    val checkpoints = (singles.result() ++ multis ++ v2Sets)
+      .groupBy(_.version).map { case (_, sets) => sets.find(_.v2).getOrElse(sets.head) }
+      .toVector.sortBy(_.version)
+    LogListing(commits.result().sortBy(_._1), checkpoints, v2Sets.map(_.files.head),
+      spans.result().sorted, retirable.result(), temps.result(), sidecars)
   }
+
+  def latestVersion(): Long = listLog().latest
 
   /** Commit-file reads performed by [[versionAt]] since construction —
     * instrumentation for the bounded-read contract (specs assert it stays
@@ -605,16 +700,8 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
   def versionAt(timestampMs: Long,
                 maxClockSkewMs: Long = DeltaLog.DefaultMaxClockSkewMs): Long = {
     require(maxClockSkewMs >= 0, s"negative maxClockSkewMs: $maxClockSkewMs")
-    if (!fs.exists(logPath))
-      throw new IllegalStateException(s"no _delta_log at $tablePath")
-    val stamped = fs.listStatus(logPath).iterator.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(".json") && !n.contains("checkpoint"))
-        try Some(n.stripSuffix(".json").toLong -> st.getModificationTime)
-        catch { case _: NumberFormatException => None }
-      else None
-    }.toVector.sortBy(_._1)
-    require(stamped.nonEmpty, s"empty _delta_log at $tablePath")
+    val stamped = listLog().commits
+    if (stamped.isEmpty) throw new IllegalStateException(s"no commits in _delta_log at $tablePath")
     val n = stamped.size
     // running-max mtimes: a monotone search structure built from the one
     // listing, no file reads
@@ -695,8 +782,11 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     }
   }
 
-  def readVersion(v: Long): Seq[Action] = {
-    val in = fs.open(versionFile(v))
+  def readVersion(v: Long): Seq[Action] = readActionsJson(versionFile(v))
+
+  /** The one NDJSON reader: commits, compaction spans, V2 top-level files. */
+  private def readActionsJson(file: Path): Seq[Action] = {
+    val in = fs.open(file)
     try {
       val text = new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
       text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
@@ -704,32 +794,23 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     } finally in.close()
   }
 
-  private val CompactedRx = """(\d{20})\.(\d{20})\.compacted\.json""".r
-
-  private def compactedFile(from: Long, to: Long): Path =
-    new Path(logPath, f"$from%020d.$to%020d.compacted.json")
+  /** The one atomic publish: serialize `actions` as NDJSON and put `file`
+    * through the scheme's [[LogStore]] (put-if-absent; `version` names
+    * the contended version in [[VersionAlreadyExists]]). */
+  private def publish(file: Path, actions: Seq[Action], version: Long): Unit = {
+    val sb = new java.lang.StringBuilder()
+    actions.foreach(a => sb.append(mapper.writeValueAsString(a)).append('\n'))
+    LogStore.forScheme(Option(fs.getUri.getScheme).getOrElse("file"))
+      .writeAtomic(fs, file, sb.toString.getBytes(StandardCharsets.UTF_8), version)
+  }
 
   /** Versions whose plain commit JSON still survives on disk, sorted —
     * the tombstone horizon VACUUM LITE can see (metadata cleanup ages
     * history out below the newest checkpoint). One listing, no reads. */
-  private[delta] def survivingCommitVersions(): Seq[Long] = {
-    if (!fs.exists(logPath)) return Nil
-    fs.listStatus(logPath).iterator.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(".json") && !n.contains("checkpoint") && !n.contains("compacted"))
-        try Some(n.stripSuffix(".json").toLong)
-        catch { case _: NumberFormatException => None }
-      else None
-    }.toSeq.sorted
-  }
+  private[delta] def survivingCommitVersions(): Seq[Long] = listLog().commits.map(_._1)
 
   /** All log-compaction files on disk as (from, to) spans, sorted. */
-  private[delta] def compactedSpans(): Seq[(Long, Long)] = {
-    if (!fs.exists(logPath)) return Nil
-    fs.listStatus(logPath).map(_.getPath.getName).collect {
-      case CompactedRx(a, b) => (a.toLong, b.toLong)
-    }.toSeq.sorted
-  }
+  private[delta] def compactedSpans(): Seq[(Long, Long)] = listLog().spans
 
   /** LOG COMPACTION (PROTOCOL.md "Log Compaction Files",
     * `<from>.<to>.compacted.json`): aggregate commits from..to into one
@@ -774,68 +855,45 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
           Action(domainMetadata = Some(DomainMetadata(dom, removed = true)))) ++
         state.adds.values.toSeq.map(f => Action(add = Some(f))) ++
         removedPaths.values.toSeq.map(r => Action(remove = Some(r)))
-    val bytes = {
-      val sb = new java.lang.StringBuilder()
-      actions.foreach(a => sb.append(mapper.writeValueAsString(a)).append('\n'))
-      sb.toString.getBytes(StandardCharsets.UTF_8)
-    }
     val file = compactedFile(from, to)
-    if (!fs.exists(file))
-      LogStore.forScheme(Option(fs.getUri.getScheme).getOrElse("file"))
-        .writeAtomic(fs, file, bytes, from)
+    if (!fs.exists(file)) publish(file, actions, from)
     actions.size
   }
 
-  /** Replay versions (from..to] into `state`, substituting compacted
-    * spans that lie FULLY inside the range — the reader side of log
-    * compaction. Greedy: at each position, take the longest applicable
-    * compacted span, else the single commit JSON. */
-  private def replayRange(state: ReplayState, afterVersion: Long, to: Long): Unit = {
-    if (afterVersion >= to) return
-    // short tails (the cached incremental snapshot's per-commit call)
-    // defer the span listing — one extra FS listing would tax every
-    // streaming trigger to save a handful of JSON reads — but fall back
-    // to it the moment a commit JSON is MISSING (cleanup may have aged
-    // JSONs a surviving span still covers)
-    def listSpans(): Map[Long, Long] =
-      compactedSpans().filter { case (a, b) => a > afterVersion && b <= to }
+  /** Replay versions (after..to] into `state`, substituting the
+    * compacted spans of `listing` that lie FULLY inside the range — the
+    * reader side of log compaction. Greedy: at each position, take the
+    * longest applicable span, else the single commit JSON. A missing
+    * commit JSON (cleanup aged it out after the listing) re-lists once
+    * and retries that version through the fresh spans. */
+  private def replayRange(state: ReplayState, listing: LogListing,
+                          after: Long, to: Long): Unit = {
+    def spansIn(l: LogListing): Map[Long, Long] =
+      l.spans.filter { case (a, b) => a > after && b <= to }
         .groupBy(_._1).map { case (a, ss) => a -> ss.map(_._2).max }
-    var spans: Option[Map[Long, Long]] =
-      if (to - afterVersion < 10) None else Some(listSpans())
-    var v = afterVersion + 1
+    var spans = spansIn(listing)
+    var relisted = false
+    var v = after + 1
     while (v <= to) {
-      spans.getOrElse(Map.empty).get(v) match {
+      spans.get(v) match {
         case Some(end) =>
-          state.apply(readCompacted(v, end))
+          state.apply(readActionsJson(compactedFile(v, end)))
           v = end + 1
         case None =>
           try {
             state.apply(readVersion(v)); v += 1
           } catch {
-            case _: java.io.FileNotFoundException if spans.isEmpty =>
-              spans = Some(listSpans()) // retry v through a covering span
+            case _: java.io.FileNotFoundException if !relisted =>
+              relisted = true
+              spans = spansIn(listLog())
           }
       }
     }
   }
 
-  private def readCompacted(from: Long, to: Long): Seq[Action] =
-    readActionsJson(compactedFile(from, to))
-
-  /** Version recorded in `_last_checkpoint`, if readable. */
-  private def lastCheckpointVersion(): Option[Long] = {
-    val p = new Path(logPath, "_last_checkpoint")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val text = new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-      Some(mapper.readTree(text).get("version").asLong())
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally in.close()
-  }
-
-  /** Mutable log-replay accumulator shared by the cached latest-snapshot
-    * path and time travel. */
+  /** Mutable log-replay accumulator: every replay (the cached latest
+    * snapshot, time travel, log compaction) and every commit's own state
+    * apply actions through [[apply]]. */
   private final class ReplayState(
       var metadata: Option[Metadata] = None,
       val adds: mutable.LinkedHashMap[String, AddFile] = mutable.LinkedHashMap.empty,
@@ -843,6 +901,14 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
       var protocol: Option[Protocol] = None,
       val domains: mutable.LinkedHashMap[String, String] = mutable.LinkedHashMap.empty,
       val txnTimes: mutable.HashMap[String, Long] = mutable.HashMap.empty) {
+    /** The accumulator a replay holds once it has reached `snap`. */
+    def this(snap: Snapshot) = {
+      this(snap.metadata, protocol = snap.protocol)
+      snap.files.foreach(f => adds(f.path) = f)
+      txns ++= snap.txns
+      domains ++= snap.domainMetadata
+      txnTimes ++= snap.txnTimes
+    }
     def apply(actions: Seq[Action]): Unit = actions.foreach { a =>
       a.protocol.foreach(p => protocol = Some(p))
       a.metaData.foreach(m => metadata = Some(m))
@@ -862,150 +928,94 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
         if (d.removed) domains.remove(d.domain)
         else domains(d.domain) = d.configuration)
     }
+    def snapshot(version: Long): Snapshot =
+      Snapshot(version, metadata, adds.values.toSeq, txns.toMap, protocol, domains.toMap,
+        txnTimes.toMap)
   }
-
-  /** One COMPLETE checkpoint on disk: the classic single file
-    * (`v.checkpoint.parquet`), a full multi-part set
-    * (`v.checkpoint.<part>.<parts>.parquet`, parts 1..N all present —
-    * PROTOCOL.md classic multi-part form), or a V2 top-level file
-    * (`v.checkpoint.<uuid>.json` whose sidecar pointers are resolved at
-    * load). An incomplete set (a writer died mid-upload) is IGNORED,
-    * never half-read. */
-  private final case class CheckpointSet(version: Long, files: Seq[Path],
-                                         v2: Boolean = false)
-
-  private val SinglePartRx = """(\d{20})\.checkpoint\.parquet""".r
-  private val MultiPartRx = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
-  private val V2Rx = """(\d{20})\.checkpoint\.([0-9a-fA-F-]{36})\.json""".r
-
-  private[delta] val sidecarDir = new Path(logPath, "_sidecars")
-
-  /** All complete checkpoints present on disk, sorted by version (not
-    * just `_last_checkpoint` — time travel and metadata cleanup need the
-    * older ones too). */
-  private def checkpointSets(): Seq[CheckpointSet] = {
-    if (!fs.exists(logPath)) return Nil
-    val names = fs.listStatus(logPath).map(_.getPath.getName)
-    val singles = names.collect { case SinglePartRx(v) =>
-      CheckpointSet(v.toLong, Seq(new Path(logPath, f"${v.toLong}%020d.checkpoint.parquet"))) }
-    val multis = names.collect { case n @ MultiPartRx(v, part, parts) =>
-      (v.toLong, parts.toInt, part.toInt, n) }
-      .groupBy(t => (t._1, t._2))
-      .collect { case ((v, parts), found) if found.map(_._3).toSet == (1 to parts).toSet =>
-        CheckpointSet(v, found.sortBy(_._3).map(t => new Path(logPath, t._4)).toSeq) }
-    val v2s = names.collect { case n @ V2Rx(v, _) =>
-      CheckpointSet(v.toLong, Seq(new Path(logPath, n)), v2 = true) }
-    // a version can carry both forms; prefer the V2 (sidecars parallelize)
-    (singles ++ multis ++ v2s).toSeq
-      .groupBy(_.version).map { case (_, sets) =>
-        sets.find(_.v2).getOrElse(sets.head) }
-      .toSeq.sortBy(_.version)
-  }
-
-  private def checkpointVersions(): Seq[Long] = checkpointSets().map(_.version)
 
   /** Newest checkpoint version on disk, if any (the natural start of a
     * log-compaction span — spans at or below a checkpoint can never be
     * substituted, because replays seed past them). */
   private[delta] def newestCheckpointVersion(): Option[Long] =
-    checkpointVersions().lastOption
+    listLog().checkpoints.lastOption.map(_.version)
 
-  /** Seed a replay from the newest parquet checkpoint at version ≤ cap.
-    * Returns the checkpoint version applied, or -1. Rows map STRAIGHT to
-    * [[Actions.Action]] — the earlier toJSON→Jackson round-trip doubled
-    * the serialization work per checkpoint row, which at 10⁶-file tables
-    * is the dominant cold-start cost of this (driver-side-log) design. */
-  private def seedFromCheckpoint(state: ReplayState, cap: Long): Long =
-    (spark, checkpointSets().filter(_.version <= cap).lastOption) match {
+  /** A replay accumulator seeded from the newest checkpoint of `listing`
+    * at or below `cap`, with the version it holds (-1 when unseeded).
+    * Checkpoint rows map STRAIGHT to [[Actions.Action]] — a toJSON→Jackson
+    * round-trip would double the serialization work per checkpoint row,
+    * which at 10⁶-file tables is the dominant cold-start cost of this
+    * (driver-side-log) design. After cleanupMetadata, JSON below the
+    * surviving checkpoint is gone: a replay that cannot seed (no
+    * SparkSession, or `cap` below every checkpoint) fails with a
+    * diagnosis, not FileNotFoundException. */
+  private def seeded(listing: LogListing, cap: Long): (Long, ReplayState) = {
+    val state = new ReplayState()
+    def rowsOf(ss: SparkSession, paths: Seq[String]): Unit =
+      state.apply(ss.read.schema(checkpointReadSchema(ss, paths)).parquet(paths: _*)
+        .collect().iterator.map(CheckpointRows.toAction).toSeq)
+    val from = (spark, listing.checkpointAtOrBelow(cap)) match {
       case (Some(ss), Some(ck)) if ck.v2 =>
         // V2: the top-level JSON carries the non-file actions + sidecar
         // pointers; the file actions live in sidecar parquet(s), read
         // with the same spec schema as classic checkpoints
         val top = readActionsJson(ck.files.head)
         state.apply(top.filter(a => a.sidecar.isEmpty && a.checkpointMetadata.isEmpty))
-        val sidecars = top.flatMap(_.sidecar)
-          .map(s => new Path(sidecarDir, s.path).toString)
-        if (sidecars.nonEmpty) {
-          val rows = ss.read.schema(checkpointReadSchema(ss, sidecars))
-            .parquet(sidecars: _*).collect()
-          state.apply(rows.iterator.map(CheckpointRows.toAction).toSeq)
-        }
+        val sidecars = top.flatMap(_.sidecar).map(s => new Path(sidecarDir, s.path).toString)
+        if (sidecars.nonEmpty) rowsOf(ss, sidecars)
         ck.version
       case (Some(ss), Some(ck)) =>
-        val paths = ck.files.map(_.toString)
-        val rows = ss.read.schema(checkpointReadSchema(ss, paths))
-          .parquet(paths: _*)
-          .collect()
-        state.apply(rows.iterator.map(CheckpointRows.toAction).toSeq)
+        rowsOf(ss, ck.files.map(_.toString))
         ck.version
       case _ => -1L
     }
-
-  private def readActionsJson(file: Path): Seq[Action] = {
-    val in = fs.open(file)
-    try {
-      val text = new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-        .map(l => mapper.readValue(l, classOf[Action])).toSeq
-    } finally in.close()
+    if (from < 0 && !listing.commits.exists(_._1 == 0L))
+      throw new IllegalStateException(
+        s"log at $tablePath starts at a checkpoint (metadata was cleaned up); " +
+          (if (spark.isEmpty) "reading it requires a SparkSession to load the parquet checkpoint"
+           else "the requested version predates the oldest surviving checkpoint"))
+    (from, state)
   }
 
   /** Incremental snapshot cache: a streaming writer calls snapshot()
     * before every commit attempt; replaying the whole log each time is
     * O(history²) over a query's life. The cache applies only the versions
-    * committed since the last call. Cross-process writers are still seen:
-    * the version listing is re-read every call. */
+    * committed since the last call, and a commit through this handle
+    * leaves the state it produced here. Cross-process writers are still
+    * seen: the log is listed on every call. */
   private var cached: Option[(Snapshot, ReplayState)] = None
 
-  /** Reconstruct table state: cached state + new JSON commits; on a cold
-    * cache, the newest parquet checkpoint (via `_last_checkpoint`) plus
-    * the JSON tail; full JSON replay when no SparkSession/checkpoint is
-    * available. With no new commit the cached snapshot itself returns:
-    * no file-list copy, and its derived state stays parsed. */
+  /** Reconstruct table state from one listing: cached state + new
+    * commits; on a cold cache, the newest complete checkpoint the listing
+    * shows plus the JSON tail; full JSON replay when no
+    * SparkSession/checkpoint is available. With no new commit the cached
+    * snapshot itself returns: no file-list copy, and its derived state
+    * stays parsed. */
   def snapshot(): Snapshot = synchronized {
-    val latest = latestVersion()
+    val listing = listLog()
+    val latest = listing.latest
     if (latest < 0) return Snapshot(-1L, None, Nil, Map.empty)
-
-    var (fromVersion, state) = cached match {
+    val (from, state) = cached match {
       case Some((s, _)) if s.version == latest => return s
       case Some((s, st)) if s.version < latest => (s.version, st)
-      case _ => (-1L, new ReplayState())
+      case _ => seeded(listing, latest)
     }
-    if (fromVersion < 0) {
-      fromVersion = seedFromCheckpoint(state, latest)
-      requireReplayStart(fromVersion)
-    }
-    replayRange(state, fromVersion, latest)
-    val snap = Snapshot(latest, state.metadata, state.adds.values.toSeq, state.txns.toMap,
-      state.protocol, state.domains.toMap, state.txnTimes.toMap)
+    replayRange(state, listing, from, latest)
+    val snap = state.snapshot(latest)
     cached = Some((snap, state))
     snap
   }
-
-  /** After cleanupMetadata, JSON below the surviving checkpoint is gone; a
-    * replay that could not seed (no SparkSession, or target below every
-    * checkpoint) must fail with a diagnosis, not FileNotFoundException. */
-  private def requireReplayStart(fromVersion: Long): Unit =
-    if (fromVersion < 0 && !fs.exists(versionFile(0L)))
-      throw new IllegalStateException(
-        s"log at $tablePath starts at a checkpoint (metadata was cleaned up); " +
-          (if (spark.isEmpty) "reading it requires a SparkSession to load the parquet checkpoint"
-           else "the requested version predates the oldest surviving checkpoint"))
 
   /** Reconstruct table state AS OF `version` (time travel — what delta-rs
     * calls load_version). Uncached: history reads are occasional, and the
     * checkpoint seed still bounds the replay when one exists at ≤ version. */
   def snapshotAt(version: Long): Snapshot = synchronized {
-    val latest = latestVersion()
-    if (version < 0 || version > latest)
+    val listing = listLog()
+    if (version < 0 || version > listing.latest)
       throw new IllegalArgumentException(
-        s"version $version out of range [0, $latest] for $tablePath")
-    val state = new ReplayState()
-    val from = seedFromCheckpoint(state, version)
-    requireReplayStart(from)
-    replayRange(state, from, version)
-    Snapshot(version, state.metadata, state.adds.values.toSeq, state.txns.toMap,
-      state.protocol, state.domains.toMap, state.txnTimes.toMap)
+        s"version $version out of range [0, ${listing.latest}] for $tablePath")
+    val (from, state) = seeded(listing, version)
+    replayRange(state, listing, from, version)
+    state.snapshot(version)
   }
 
   /** Atomic single-version commit: put-if-absent of the version file
@@ -1021,13 +1031,7 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     val file = versionFile(version)
     // cheap fast-path only — the LogStore enforces the real guarantee
     if (fs.exists(file)) throw new VersionAlreadyExists(version)
-    val bytes = {
-      val sb = new java.lang.StringBuilder()
-      actions.foreach { a => sb.append(mapper.writeValueAsString(a)).append('\n') }
-      sb.toString.getBytes(StandardCharsets.UTF_8)
-    }
-    LogStore.forScheme(Option(fs.getUri.getScheme).getOrElse("file"))
-      .writeAtomic(fs, file, bytes, version)
+    publish(file, actions, version)
   }
 
   /** Commit with optimistic-concurrency retry. Before EVERY attempt —
@@ -1133,7 +1137,7 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
         try { write(next, withTxnTimes); true }
         catch { case _: VersionAlreadyExists => false }
       if (published) {
-        afterCommit(next, snap, withTxnTimes)
+        afterCommit(snap, next, withTxnTimes)
         return next
       }
       attempt += 1
@@ -1141,32 +1145,42 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     throw new RuntimeException(s"commit retry ceiling ($maxAttempts) hit")
   }
 
-  /** Everything after a DURABLE commit. Only a hook failure escapes, as
+  /** Everything after a DURABLE commit. The state the commit produced is
+    * derived here, once — the predecessor's replay state plus the
+    * commit's actions, applied as any replay applies them — and becomes
+    * the cached snapshot; the `.crc`, the interval checkpoint and the
+    * hooks all read it. Only a hook failure escapes, as
     * [[PostCommitFailure]] — delta-spark's postCommit contract: the
     * checkpoint is an optimization the next interval retries, while a
     * hook's artifact (a symlink manifest) is what its readers see, so its
     * failure stays visible. */
-  private def afterCommit(version: Long, snap: Snapshot, actions: Seq[Action]): Unit = {
-    writeChecksum(version, snap, actions)
-    try maybeCheckpoint(version, actions.flatMap(_.metaData).lastOption.orElse(snap.metadata))
+  private def afterCommit(prev: Snapshot, version: Long, actions: Seq[Action]): Unit = {
+    val state = new ReplayState(prev)
+    state.apply(actions)
+    val committed = state.snapshot(version)
+    synchronized {
+      if (cached.forall(_._1.version < version)) cached = Some((committed, state))
+    }
+    writeChecksum(committed)
+    try maybeCheckpoint(committed)
     catch { case scala.util.control.NonFatal(e) =>
       DeltaLog.logger.warn(s"checkpoint at version $version of $tablePath failed; " +
         "the commit stands and the next checkpoint interval retries", e)
     }
-    try postCommitHooks.foreach(h => h(version, snap, actions))
+    try postCommitHooks.foreach(h => h(prev, committed, actions))
     catch { case scala.util.control.NonFatal(e) => throw new PostCommitFailure(version, e) }
   }
 
-  /** The committed state's live file set, derived from the predecessor
-    * snapshot plus the commit's own actions (re-adds win by path) — the
-    * replay result without re-listing the log. Shared with post-commit
-    * consumers (the manifest hook) so the re-add-wins rule lives once. */
-  private[delta] def liveAfter(snap: Snapshot, actions: Seq[Action]): Seq[AddFile] = {
-    val adds = actions.flatMap(_.add)
-    val removed = actions.flatMap(_.remove).map(_.path).toSet
-    val addedPaths = adds.map(_.path).toSet
-    snap.files.filterNot(f => removed(f.path) || addedPaths(f.path)) ++ adds
-  }
+  /** The `.crc` summary of `snap`'s state: what a commit writes and what
+    * [[validateChecksum]] expects of a replay. */
+  private def checksumOf(snap: Snapshot): VersionChecksum = VersionChecksum(
+    tableSizeBytes = snap.files.map(_.size).sum,
+    numFiles = snap.files.size.toLong,
+    numMetadata = 1, numProtocol = 1,
+    numDeletionVectorsOpt = Some(snap.files.count(_.deletionVector.isDefined).toLong),
+    numDeletedRecordsOpt = Some(snap.files.flatMap(_.deletionVector).map(_.cardinality).sum),
+    metadata = snap.metadata,
+    protocol = snap.protocol)
 
   /** Per-commit VERSION CHECKSUM (`<version>.crc`, delta-spark's
     * VersionChecksum sidecar): a one-line JSON summary of the table
@@ -1177,31 +1191,22 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * happens instead of as silently wrong query results. Write failures
     * are a logged warning — the commit is already durable and the next
     * commit writes the next checksum — and leave no temp file behind. */
-  private def writeChecksum(version: Long, snap: Snapshot,
-                            actions: Seq[Action]): Unit = {
+  private def writeChecksum(committed: Snapshot): Unit = {
     val tmp = new Path(logPath, f".crc-tmp-${java.util.UUID.randomUUID()}")
     try {
-      val live = liveAfter(snap, actions)
-      val crc = VersionChecksum(
-        tableSizeBytes = live.map(_.size).sum,
-        numFiles = live.size.toLong,
-        numMetadata = 1, numProtocol = 1,
-        numDeletionVectorsOpt = Some(live.count(_.deletionVector.isDefined).toLong),
-        numDeletedRecordsOpt = Some(live.flatMap(_.deletionVector).map(_.cardinality).sum),
-        metadata = actions.flatMap(_.metaData).lastOption.orElse(snap.metadata),
-        protocol = actions.flatMap(_.protocol).lastOption.orElse(snap.protocol))
       // write-temp-then-rename: a killed writer must never leave a
       // TRUNCATED crc (a parse error would read as corruption on a
       // healthy table); a lost rename race just means the winner's
       // identical-content file stands
       val out = fs.create(tmp, true)
-      try out.write(mapper.writeValueAsString(crc).getBytes(StandardCharsets.UTF_8))
+      try out.write(mapper.writeValueAsString(checksumOf(committed))
+        .getBytes(StandardCharsets.UTF_8))
       finally out.close()
-      if (!fs.rename(tmp, checksumFile(version))) fs.delete(tmp, false)
+      if (!fs.rename(tmp, checksumFile(committed.version))) fs.delete(tmp, false)
       ()
     } catch { case scala.util.control.NonFatal(e) =>
-      DeltaLog.logger.warn(s"checksum of version $version of $tablePath not written; " +
-        "the commit stands", e)
+      DeltaLog.logger.warn(s"checksum of version ${committed.version} of $tablePath " +
+        "not written; the commit stands", e)
       try fs.delete(tmp, false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
@@ -1227,31 +1232,25 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
             s"file is unreadable (${e.getMessage}) — the crc is corrupt; " +
             "delete it to skip validation", e)
       } finally in.close()
-    val size = snap.files.map(_.size).sum
-    val dvs = snap.files.count(_.deletionVector.isDefined).toLong
-    val deleted = snap.files.flatMap(_.deletionVector).map(_.cardinality).sum
-    def fail(field: String, expect: Any, got: Any) =
-      throw new IllegalStateException(s"version ${snap.version} checksum " +
-        s"mismatch on $field: crc=$expect replayed=$got — the log is " +
-        "corrupt or was modified out-of-band")
-    if (crc.numFiles != snap.files.size.toLong)
-      fail("numFiles", crc.numFiles, snap.files.size)
-    if (crc.tableSizeBytes != size) fail("tableSizeBytes", crc.tableSizeBytes, size)
+    val got = checksumOf(snap)
+    def check(field: String, expect: Any, replayed: Any): Unit =
+      if (expect != replayed)
+        throw new IllegalStateException(s"version ${snap.version} checksum " +
+          s"mismatch on $field: crc=$expect replayed=$replayed — the log is " +
+          "corrupt or was modified out-of-band")
+    check("numFiles", crc.numFiles, got.numFiles)
+    check("tableSizeBytes", crc.tableSizeBytes, got.tableSizeBytes)
     // DV tallies are optional in the wild (older writers) — absent skips
-    crc.numDeletionVectorsOpt.foreach(v =>
-      if (v != dvs) fail("numDeletionVectorsOpt", v, dvs))
-    crc.numDeletedRecordsOpt.foreach(v =>
-      if (v != deleted) fail("numDeletedRecordsOpt", v, deleted))
-    crc.metadata.zip(snap.metadata).foreach { case (a, b) =>
-      if (a.id != b.id) fail("metadata.id", a.id, b.id) }
-    crc.protocol.zip(snap.protocol).foreach { case (a, b) =>
-      if (a != b) fail("protocol", a, b) }
+    crc.numDeletionVectorsOpt.foreach(check("numDeletionVectorsOpt", _, got.numDeletionVectorsOpt.get))
+    crc.numDeletedRecordsOpt.foreach(check("numDeletedRecordsOpt", _, got.numDeletedRecordsOpt.get))
+    crc.metadata.zip(snap.metadata).foreach { case (a, b) => check("metadata.id", a.id, b.id) }
+    crc.protocol.zip(snap.protocol).foreach { case (a, b) => check("protocol", a, b) }
   }
 
   /** Hooks invoked after every SUCCESSFUL commit through this log handle
-    * with (committedVersion, predecessorSnapshot, committedActions). The
-    * predecessor snapshot plus the actions fully determine the committed
-    * state, so hooks can maintain derived artifacts without re-listing
+    * with (predecessorSnapshot, committedSnapshot, committedActions): the
+    * state the commit produced, the state it replaced and the actions
+    * between them, so hooks maintain derived artifacts without re-listing
     * the log. Registered once per [[DeltaTable]] instance; commits made
     * through OTHER handles (or other writers entirely) do not fire them —
     * same scope as delta-spark's transaction-local post-commit hooks.
@@ -1259,8 +1258,8 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * reaches the committer as [[PostCommitFailure]] with the committed
     * version — never as a failed commit. */
   private val postCommitHooks =
-    scala.collection.mutable.ArrayBuffer.empty[(Long, Snapshot, Seq[Action]) => Unit]
-  def onPostCommit(h: (Long, Snapshot, Seq[Action]) => Unit): Unit =
+    scala.collection.mutable.ArrayBuffer.empty[(Snapshot, Snapshot, Seq[Action]) => Unit]
+  def onPostCommit(h: (Snapshot, Snapshot, Seq[Action]) => Unit): Unit =
     synchronized { postCommitHooks += h }
 
   /** Default checkpoint cadence; the `delta.checkpointInterval` table
@@ -1278,17 +1277,17 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * path without staging 50k files. */
   private[delta] var checkpointPartSize: Int = 50000
 
-  /** Every Nth version, write the spec-schema parquet checkpoint and
-    * advance `_last_checkpoint`. Requires a SparkSession (skipped, with the
-    * log staying pure-JSON, when constructed without one). */
-  private def maybeCheckpoint(version: Long, meta: Option[Metadata]): Unit = {
-    val conf = meta.map(_.configuration).getOrElse(Map.empty)
-    val interval = conf.get(DeltaTable.CheckpointIntervalKey)
+  /** Every Nth version, checkpoint the state the commit produced and
+    * expire old log entries. The checkpoint requires a SparkSession
+    * (skipped, with the log staying pure-JSON, when constructed without
+    * one). */
+  private def maybeCheckpoint(committed: Snapshot): Unit = {
+    val interval = committed.configuration.get(DeltaTable.CheckpointIntervalKey)
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1)
       .getOrElse(checkpointInterval)
-    if (version <= 0 || version % interval != 0) return
-    checkpointAt(version)
-    maybeExpireLog(conf)
+    if (committed.version <= 0 || committed.version % interval != 0) return
+    writeCheckpoint(committed)
+    maybeExpireLog(committed.configuration)
   }
 
   /** Checkpoint-time txn expiry (delta-spark's
@@ -1364,18 +1363,22 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
 
   /** Unconditionally checkpoint `version` (the cadence-independent form:
     * DROP FEATURE's history truncation needs a checkpoint NOW at the
-    * current version, whatever the interval). Classic or V2 per the
-    * table's `delta.checkpointPolicy`. */
-  def checkpointAt(version: Long): Unit = {
+    * current version, whatever the interval). The checkpoint holds
+    * exactly that version's state, replayed, never a newer commit a
+    * concurrent writer landed. */
+  def checkpointAt(version: Long): Unit =
+    if (spark.isDefined) writeCheckpoint(snapshotAt(version))
+
+  /** Write `snap` as the checkpoint of its version — classic or V2 per
+    * the table's `delta.checkpointPolicy` — then advance
+    * `_last_checkpoint`. */
+  private def writeCheckpoint(snap: Snapshot): Unit = {
     val ss = spark.getOrElse(return)
     // conformance: a checkpoint REWRITES table state — on a table with
     // unknown features it would silently drop the action types those
     // features add (this replay only knows the spec's action set)
-    // the checkpoint must contain exactly version's state: snapshot()
-    // would capture any commit a concurrent writer lands between our
-    // commit and this call, poisoning later snapshotAt(version) reads
-    val snap = snapshotAt(version)
     DeltaLog.requireWriteSupported(snap.protocol)
+    val version = snap.version
     val nonFile: Seq[Action] =
       // the REPLAYED protocol, not a fresh default: a checkpoint after a
       // feature upgrade (e.g. deletionVectors → (3,7)) must not
@@ -1386,41 +1389,70 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
           Action(txn = Some(Txn(app, v, snap.txnTimes.get(app)))) } ++
         snap.domainMetadata.toSeq.sortBy(_._1).map { case (dom, cfg) =>
           Action(domainMetadata = Some(DomainMetadata(dom, cfg))) }
-    val actions: Seq[Action] = nonFile ++ snap.files.map(f => Action(add = Some(f)))
-    // V2 checkpoints (table config delta.checkpointPolicy=v2): file
-    // actions go to sidecar parquet(s) under _sidecars/, the UUID-named
-    // top-level JSON carries the rest + checkpointMetadata + pointers
-    if (snap.configuration.get(DeltaTable.CheckpointPolicyKey).contains("v2")) {
-      writeV2Checkpoint(ss, version, snap, nonFile)
-      return
-    }
-    val lines = actions.map(mapper.writeValueAsString)
-    import scala.jdk.CollectionConverters._
-    val df = withParsedStatsCols(ss.read.schema(CheckpointSchema)
-      .json(ss.createDataset(lines.asJava)(org.apache.spark.sql.Encoders.STRING)), snap)
-    val wantParts = math.max(1,
-      math.ceil(actions.size.toDouble / checkpointPartSize).toInt)
-    val tmpDir = new Path(logPath, s".ck-${java.util.UUID.randomUUID()}")
-    (if (wantParts == 1) df.coalesce(1) else df.repartition(wantParts))
-      .write.mode("overwrite").parquet(tmpDir.toString)
-    // the ACTUAL part count is whatever the job produced (a repartition
-    // slot can come up empty) — the final names encode that count, and a
-    // rename-then-crash window leaves an INCOMPLETE set which readers
-    // ignore by construction (checkpointSets requires all parts present)
-    val written = fs.listStatus(tmpDir)
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    require(written.nonEmpty, "checkpoint write produced no parquet")
-    if (written.length == 1)
-      fs.rename(written.head.getPath, checkpointFile(version))
-    else written.zipWithIndex.foreach { case (st, i) =>
-      fs.rename(st.getPath, checkpointPartFile(version, i + 1, written.length))
-    }
-    fs.delete(tmpDir, true)
-    val partsField = if (written.length == 1) "" else s""","parts":${written.length}"""
+    val files = snap.files.map(f => Action(add = Some(f)))
+    val (size, parts) =
+      if (snap.configuration.get(DeltaTable.CheckpointPolicyKey).contains("v2")) {
+        // V2: file actions go to sidecar parquet(s) under _sidecars/, the
+        // UUID-named top-level JSON carries the rest + checkpointMetadata
+        // + pointers. A crash before the top-level publish leaves only
+        // unreferenced sidecars, which [[cleanupMetadata]] collects.
+        val sidecars =
+          if (files.isEmpty) Nil
+          else {
+            fs.mkdirs(sidecarDir)
+            writeParts(ss, snap, files)((_, _) =>
+              new Path(sidecarDir, s"${java.util.UUID.randomUUID()}.parquet")).map { p =>
+              val st = fs.getFileStatus(p)
+              SidecarFile(p.getName, Some(st.getLen), Some(st.getModificationTime))
+            }
+          }
+        publish(new Path(logPath, f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.json"),
+          Action(checkpointMetadata = Some(CheckpointMetadata(version))) +:
+            (nonFile ++ sidecars.map(s => Action(sidecar = Some(s)))), version)
+        (nonFile.size + files.size + 1, 1)
+      } else {
+        val written = writeParts(ss, snap, nonFile ++ files)((part, of) =>
+          if (of == 1) checkpointFile(version) else checkpointPartFile(version, part, of))
+        (nonFile.size + files.size, written.size)
+      }
+    val partsField = if (parts == 1) "" else s""","parts":$parts"""
     val lc = fs.create(new Path(logPath, "_last_checkpoint"), true)
-    try lc.write(s"""{"version":$version,"size":${actions.size}$partsField}"""
+    try lc.write(s"""{"version":$version,"size":$size$partsField}"""
       .getBytes(StandardCharsets.UTF_8))
     finally lc.close()
+  }
+
+  /** The checkpoint part writer: `actions` as spec-schema parquet, one
+    * part per `checkpointPartSize` actions (executor-written), through a
+    * `.ck-<uuid>` temp dir; part i of the n written is renamed to
+    * `dest(i, n)`. The temp dir goes whether the write succeeds or fails,
+    * and a failed rename throws, so no caller advertises a part that is
+    * not there. */
+  private def writeParts(ss: SparkSession, snap: Snapshot, actions: Seq[Action])
+                        (dest: (Int, Int) => Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val lines = actions.map(mapper.writeValueAsString)
+    val df = withParsedStatsCols(ss.read.schema(CheckpointSchema)
+      .json(ss.createDataset(lines.asJava)(org.apache.spark.sql.Encoders.STRING)), snap)
+    val wantParts = math.max(1, math.ceil(actions.size.toDouble / checkpointPartSize).toInt)
+    val tmpDir = new Path(logPath, s".ck-${java.util.UUID.randomUUID()}")
+    try {
+      (if (wantParts == 1) df.coalesce(1) else df.repartition(wantParts))
+        .write.mode("overwrite").parquet(tmpDir.toString)
+      // the ACTUAL part count is whatever the job produced (a repartition
+      // slot can come up empty) — the final names encode that count, and
+      // a rename-then-crash window leaves an INCOMPLETE set which readers
+      // ignore by construction (a listing keeps complete sets only)
+      val written = fs.listStatus(tmpDir)
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName).toSeq
+      require(written.nonEmpty, "checkpoint write produced no parquet")
+      written.zipWithIndex.map { case (st, i) =>
+        val to = dest(i + 1, written.size)
+        if (!fs.rename(st.getPath, to))
+          throw new java.io.IOException(s"failed to publish checkpoint part $to")
+        to
+      }
+    } finally fs.delete(tmpDir, true)
   }
 
   /** Checkpoint-time log expiry (delta-spark's `doLogCleanup`, governed
@@ -1428,8 +1460,9 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * mtime is older than `delta.logRetentionDuration` (default 30 days)
     * feed [[cleanupMetadata]] — its snap-down-to-a-checkpoint rule keeps
     * every surviving version reconstructable, so this can only ever
-    * retire history nobody can time-travel to anyway. One directory
-    * listing; nothing to do on young tables. */
+    * retire history nobody can time-travel to anyway. One listing, taken
+    * after the checkpoint (the commit it follows may itself be expired
+    * under a short retention); nothing to do on young tables. */
   private def maybeExpireLog(conf: Map[String, String]): Unit = {
     if (conf.get(DeltaTable.ExpiredLogCleanupKey).contains("false")) return
     // LENIENT parse: this runs AFTER the commit is durable — an
@@ -1439,71 +1472,9 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     val retentionMs = conf.get(DeltaTable.LogRetentionKey)
       .flatMap(DeltaTable.parseIntervalMsLenient).getOrElse(30L * 24 * 3600 * 1000)
     val cutoffTime = System.currentTimeMillis() - retentionMs
-    val expired = fs.listStatus(logPath).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(".json") && !n.contains("checkpoint") &&
-        st.getModificationTime < cutoffTime)
-        try Some(n.stripSuffix(".json").toLong)
-        catch { case _: NumberFormatException => None }
-      else None
-    }
+    val expired = listLog().commits.collect { case (v, mtime) if mtime < cutoffTime => v }
     if (expired.nonEmpty) cleanupMetadata(expired.max)
     ()
-  }
-
-  /** V2-checkpoint writer: sidecar parquet part(s) (spec checkpoint
-    * schema, executor-written like classic multi-part) renamed into
-    * `_sidecars/<uuid>.parquet`, then ONE atomic UUID-named top-level
-    * JSON with checkpointMetadata + non-file actions + sidecar pointers.
-    * `_last_checkpoint` advances exactly like the classic form; a crash
-    * before the top-level publish leaves only unreferenced sidecars,
-    * which [[cleanupMetadata]] garbage-collects. */
-  private def writeV2Checkpoint(ss: SparkSession, version: Long,
-                                snap: Snapshot, nonFile: Seq[Action]): Unit = {
-    import scala.jdk.CollectionConverters._
-    val fileActions = snap.files.map(f => Action(add = Some(f)))
-    val sidecars: Seq[SidecarFile] =
-      if (fileActions.isEmpty) Nil
-      else {
-        val lines = fileActions.map(mapper.writeValueAsString)
-        val df = withParsedStatsCols(ss.read.schema(CheckpointSchema)
-          .json(ss.createDataset(lines.asJava)(org.apache.spark.sql.Encoders.STRING)), snap)
-        val wantParts = math.max(1,
-          math.ceil(fileActions.size.toDouble / checkpointPartSize).toInt)
-        val tmpDir = new Path(logPath, s".ck2-${java.util.UUID.randomUUID()}")
-        (if (wantParts == 1) df.coalesce(1) else df.repartition(wantParts))
-          .write.mode("overwrite").parquet(tmpDir.toString)
-        fs.mkdirs(sidecarDir)
-        val written = fs.listStatus(tmpDir)
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        val out = written.toSeq.map { st =>
-          val name = s"${java.util.UUID.randomUUID()}.parquet"
-          val dest = new Path(sidecarDir, name)
-          if (!fs.rename(st.getPath, dest))
-            throw new RuntimeException(s"failed to publish sidecar $dest")
-          SidecarFile(name, Some(fs.getFileStatus(dest).getLen),
-            Some(fs.getFileStatus(dest).getModificationTime))
-        }
-        fs.delete(tmpDir, true)
-        out
-      }
-    val top: Seq[Action] =
-      Seq(Action(checkpointMetadata = Some(CheckpointMetadata(version)))) ++
-        nonFile ++ sidecars.map(s => Action(sidecar = Some(s)))
-    val bytes = {
-      val sb = new java.lang.StringBuilder()
-      top.foreach(a => sb.append(mapper.writeValueAsString(a)).append('\n'))
-      sb.toString.getBytes(StandardCharsets.UTF_8)
-    }
-    val file = new Path(logPath,
-      f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.json")
-    LogStore.forScheme(Option(fs.getUri.getScheme).getOrElse("file"))
-      .writeAtomic(fs, file, bytes, version)
-    val lc = fs.create(new Path(logPath, "_last_checkpoint"), true)
-    try lc.write(
-      s"""{"version":$version,"size":${nonFile.size + snap.files.size + 1}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally lc.close()
   }
 
   /** Delete JSON commits and checkpoints strictly below the newest
@@ -1513,68 +1484,45 @@ final class DeltaLog(val tablePath: String, conf: Configuration,
     * snapshotAt(v ≥ cutoff) keep working (including versions between the
     * cutoff checkpoint and a newer one); time travel BELOW the cutoff
     * stops, like Delta's logRetentionDuration cleanup. Returns the number
-    * of files deleted.
+    * of files deleted; a file whose delete fails stays, and so does
+    * everything it needs.
     *
-    * `tempGraceMs` guards the two V2-checkpoint transients against a
-    * concurrent writer: an unreferenced `_sidecars` parquet is only GC'd
-    * once older than the grace (a writer renames sidecars BEFORE its
-    * atomic top-level publish, so a fresh unreferenced sidecar may be an
-    * in-flight checkpoint, not garbage), and a stale `.ck2-<uuid>`
-    * staging dir (crash mid-write) is likewise only collected past the
-    * grace. */
+    * `tempGraceMs` guards the transients of concurrent writers: an
+    * unreferenced `_sidecars` parquet is only GC'd once older than the
+    * grace (a V2 writer renames sidecars BEFORE its atomic top-level
+    * publish, so a fresh unreferenced sidecar may be an in-flight
+    * checkpoint, not garbage), and a stale checkpoint staging dir or
+    * checksum temp file (crash mid-write) is likewise only collected
+    * past the grace. */
   def cleanupMetadata(beforeVersion: Long,
                       tempGraceMs: Long = DeltaLog.DefaultTempGraceMs): Int = synchronized {
-    val cutoff = checkpointVersions().filter(_ <= beforeVersion).lastOption.getOrElse(return 0)
+    val listing = listLog()
+    val cutoff = listing.checkpointAtOrBelow(beforeVersion).map(_.version).getOrElse(return 0)
     if (cutoff <= 0) return 0
     val staleBefore = System.currentTimeMillis() - math.max(0L, tempGraceMs)
-    var deleted = 0
-    // crashed V2 writers leave `.ck2-<uuid>` staging dirs behind; collect
-    // them once old enough that no live writer can still be renaming out
-    fs.listStatus(logPath).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".ck2-") && st.isDirectory &&
-        st.getModificationTime < staleBefore && fs.delete(st.getPath, true))
-        deleted += 1
-      // crashed checksum writers leave `.crc-tmp-<uuid>` files — same
-      // age-guarded collection as the V2 staging dirs
-      else if (n.startsWith(".crc-tmp-") && !st.isDirectory &&
-        st.getModificationTime < staleBefore && fs.delete(st.getPath, false))
-        deleted += 1
-    }
-    fs.listStatus(logPath).foreach { st =>
-      val n = st.getPath.getName
-      val v: Option[Long] = n match {
-        case SinglePartRx(x) => Some(x.toLong)
-        case MultiPartRx(x, _, _) => Some(x.toLong)
-        // a compaction span dies with its END version: any replay that
-        // could still use it starts at a checkpoint >= cutoff > end
-        case CompactedRx(_, b) => Some(b.toLong)
-        case V2Rx(x, _) => Some(x.toLong)
-        case _ if n.endsWith(".json") && !n.contains("checkpoint") =>
-          try Some(n.stripSuffix(".json").toLong)
-          catch { case _: NumberFormatException => None }
-        // version checksums die with their commit JSON
-        case _ if n.endsWith(".crc") =>
-          try Some(n.stripSuffix(".crc").toLong)
-          catch { case _: NumberFormatException => None }
-        case _ => None
+    def drop(p: Path, recursive: Boolean): Boolean =
+      try fs.delete(p, recursive)
+      catch { case scala.util.control.NonFatal(e) =>
+        DeltaLog.logger.warn(s"metadata cleanup of $tablePath kept $p", e)
+        false
       }
-      if (v.exists(_ < cutoff) && fs.delete(st.getPath, false)) deleted += 1
-    }
+    val temps = listing.temps.count(st =>
+      st.getModificationTime < staleBefore && drop(st.getPath, st.isDirectory))
+    val retired = listing.retirable.collect { case (v, p) if v < cutoff && drop(p, false) => p }
+      .toSet
     // sidecar GC: a sidecar survives while a surviving V2 top-level file
     // references it, OR while it is younger than the grace window — a
     // concurrent checkpointer renames sidecars before publishing its
     // top-level, so "unreferenced and fresh" may be in-flight, not orphaned
-    if (fs.exists(sidecarDir)) {
-      val referenced = checkpointSets().filter(_.v2)
-        .flatMap(ck => readActionsJson(ck.files.head).flatMap(_.sidecar.map(_.path)))
-        .toSet
-      fs.listStatus(sidecarDir).foreach { st =>
-        if (!referenced.contains(st.getPath.getName) &&
-          st.getModificationTime < staleBefore &&
-          fs.delete(st.getPath, false)) deleted += 1
+    val sidecars =
+      if (!listing.sidecars) 0
+      else {
+        val referenced = listing.v2Files.filterNot(retired)
+          .flatMap(f => readActionsJson(f).flatMap(_.sidecar.map(_.path))).toSet
+        fs.listStatus(sidecarDir).count(st =>
+          !referenced.contains(st.getPath.getName) &&
+            st.getModificationTime < staleBefore && drop(st.getPath, false))
       }
-    }
-    deleted
+    temps + retired.size + sidecars
   }
 }

@@ -2369,37 +2369,32 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * The SET/CREATE-time invariant checks
     * ([[DeltaTable.requireIcebergCompatible]]) guarantee sync cannot
     * start refusing mid-lifecycle. */
-  private def maybeSyncIceberg(version: Long, prev: Snapshot,
-                               actions: Seq[Action]): Unit = {
-    val meta = actions.flatMap(_.metaData).lastOption.orElse(prev.metadata)
-    val conf = meta.map(_.configuration).getOrElse(Map.empty)
-    if (DeltaTable.uniformIcebergOn(conf)) IcebergUniform.sync(this): Unit
-  }
+  private def maybeSyncIceberg(prev: Snapshot, committed: Snapshot,
+                               actions: Seq[Action]): Unit =
+    if (DeltaTable.uniformIcebergOn(committed.configuration)) IcebergUniform.sync(this): Unit
 
   /** Post-commit symlink-manifest maintenance
     * (`delta.compatibility.symlinkFormatManifest.enabled`): after a data
     * commit, rewrite the manifests of exactly the partitions the commit
     * touched; after the enabling ALTER (or any metadata commit), run a
-    * full generation. The committed state is derived from the
-    * predecessor snapshot + the commit's own actions — no log re-listing
-    * on the hot commit path, and hook runs see precisely the state their
-    * commit produced even under concurrent writers.
+    * full generation. The hook reads the snapshot its commit produced —
+    * no log re-listing on the hot commit path, and hook runs see
+    * precisely the state their commit produced even under concurrent
+    * writers.
     *
     * Concurrency caveat (delta-spark's too): hooks of RACING writers can
     * land out of order — writer A's manifest for a partition may
     * overwrite writer B's newer one until the partition is next touched.
     * Manifests are eventually consistent with the log; GENERATE is the
     * explicit repair for readers that need a point-in-time sync. */
-  private def maybeUpdateManifest(version: Long, prev: Snapshot,
+  private def maybeUpdateManifest(prev: Snapshot, committed: Snapshot,
                                   actions: Seq[Action]): Unit = {
-    val meta = actions.flatMap(_.metaData).lastOption.orElse(prev.metadata)
-    val conf = meta.map(_.configuration).getOrElse(Map.empty)
-    if (!conf.get(DeltaTable.SymlinkManifestKey).contains("true")) return
-    val parts = meta.map(_.partitionColumns).getOrElse(Nil)
+    if (!committed.enabled(DeltaTable.SymlinkManifestKey)) return
+    val parts = committed.partitionColumns
     val adds = actions.flatMap(_.add)
     val removed = actions.flatMap(_.remove).map(_.path).toSet
-    val live = log.liveAfter(prev, actions) // the one re-add-wins-by-path rule
-    requireManifestCompatible(conf, live)
+    val live = committed.files
+    requireManifestCompatible(committed.configuration, live)
     val wasOn = prev.enabled(DeltaTable.SymlinkManifestKey)
     if (!wasOn || actions.exists(_.metaData.isDefined)) {
       writeManifests(live, parts, dirs = None)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.delta.DeltaTable
 import graft.transforms.Transformer
@@ -33,8 +32,7 @@ final class DeltaDeadLetterSink(table: DeltaTable, appId: String,
                                 transforms: Seq[(String, String)]) extends DeadLetterSink {
   override def write(dead: DataFrame, batchId: Long): Unit = {
     val out = new Transformer(transforms)(dead)
-    table.append(out.select(table.schema.fieldNames.map(col).toSeq: _*),
-      Some(appId + "-dlq"), batchId): Unit
+    table.append(out, Some(appId + "-dlq"), batchId): Unit
   }
 }
 

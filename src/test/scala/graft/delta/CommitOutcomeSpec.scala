@@ -60,6 +60,8 @@ class CommitOutcomeSpec extends SparkSpec {
       finally FaultyFileSystem.reset()
     assert(v === 2L)
     assert(!new java.io.File(local, "_delta_log/00000000000000000002.checkpoint.parquet").exists())
+    val log = new java.io.File(local, "_delta_log").list().toSeq
+    assert(!log.exists(_.startsWith(".ck-")), log.sorted.mkString(", "))
     assertIntact(dir, local, version = 2L, batchId = 2L, ids = (0L until 20L))
     assert(t.append(batch(10, 10), Some("app"), 2L) === -1L)
     assertIntact(dir, local, version = 2L, batchId = 2L, ids = (0L until 20L))

@@ -84,4 +84,31 @@ class V2CheckpointSpec extends SparkSpec {
     assert(fs.listStatus(scDir).nonEmpty)
     assert(DeltaTable.forPath(spark, dir).toDF.count() === 22L)
   }
+
+  test("a failed delete of a V2 top-level file keeps its sidecars, and the table reads") {
+    FaultyFileSystem.install(spark)
+    val local = tmpDir("v2ck-keep")
+    val dir = FaultyFileSystem.uriOf(local)
+    val t = DeltaTable.forPath(spark, dir).create(
+      Seq((0L, "s")).toDF("k", "v").schema,
+      configuration = Map(DeltaTable.CheckpointPolicyKey -> "v2"))
+    (0 until 22).foreach(b => t.append(Seq((b.toLong, s"b$b")).toDF("k", "v")))
+    val top10 = logFiles(local).filter(_.matches("""0{18}10\.checkpoint\..*\.json"""))
+    assert(top10.size === 1, logFiles(local).sorted.mkString(", "))
+    val fs = new Path(local).getFileSystem(spark.sessionState.newHadoopConf())
+    val scDir = new Path(local, "_delta_log/_sidecars")
+    def sidecarNames() = fs.listStatus(scDir).map(_.getPath.getName).toSet
+    val before = sidecarNames()
+    FaultyFileSystem.failMatching((op, p) => op == "delete" && p.getName == top10.head)
+    val deleted =
+      try t.log.cleanupMetadata(20L, tempGraceMs = 0L)
+      finally FaultyFileSystem.reset()
+    assert(deleted > 0)
+    assert(logFiles(local).contains(top10.head), "the failed delete leaves the file")
+    assert(!logFiles(local).contains("00000000000000000009.json"))
+    assert(sidecarNames() === before, "the surviving top-level keeps its sidecars")
+    val cold = DeltaTable.forPath(spark, dir)
+    assert(cold.toDF.count() === 22L)
+    assert(cold.toDF(10L).count() === 10L, "version 10 still seeds from its checkpoint")
+  }
 }
