@@ -1,6 +1,6 @@
 package graft.coercions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,11 +17,14 @@ import org.apache.spark.sql.types._
   *     are left alone (and the row subsequently dead-letters); JSON *numbers*
   *     pass through as already-µs.
   * `parse_json` keeps the original types, then cheap binary sub-access per
-  * field (codegen'd, no UDFs on the hot path). Every field's value and
-  * error reads the one parsed column, so a consumer that filters on the
-  * errors re-parses the message once per field unless the filter sits
-  * above a node the optimizer cannot push it through (ingest's
-  * `PipelineStages.split` observation: one parse per message).
+  * field (codegen'd, no UDFs on the hot path). [[coerce]] walks each
+  * message once: every schema path is read once, from its parent path's
+  * column, and every use of the field reads that column; the errors join
+  * into one string without a lambda, so an array-free schema's whole
+  * walk stays inside whole-stage codegen. A consumer that filters on
+  * `error` still re-evaluates the walk unless the filter sits above a
+  * node the optimizer cannot push it through (ingest's
+  * `PipelineStages.split` observation: one walk per message).
   * Transform outputs reach the same pass as VARIANT values set at their
   * target paths (the reference transforms, then coerces: src/lib.rs:827-832),
   * so this is the only module that knows how a value becomes a table type.
@@ -44,16 +47,18 @@ object Coercions {
   /** Result of coercing one field: the typed value plus an optional
     * per-field error (non-null ⇒ the row must dead-letter, mirroring the
     * reference's parquet-write quarantine E4). */
-  final case class Coerced(value: Column, error: Column)
+  private final case class Coerced(value: Column, error: Column)
 
   private def err(path: String, msg: Column): Column =
     concat(lit(path + ": "), msg)
 
   /** Coerce a VARIANT value `v` (the field at `path`, already extracted) to
-    * Delta/Spark type `dt`; a non-null value `set` holds for a path
-    * (`a.b.c`) beneath replaces the message's own field there. */
-  def coerceField(v: Column, dt: DataType, path: String,
-                  set: Map[String, Column] = Map.empty): Coerced = dt match {
+    * Delta/Spark type `dt`. `field(v, name, path)` is the VARIANT of a
+    * struct's field; a non-null value `set` holds for a path (`a.b.c`)
+    * beneath builds a struct the message lacks. */
+  private def coerceField(v: Column, dt: DataType, path: String,
+                          field: (Column, String, String) => Column,
+                          set: Map[String, Column]): Coerced = dt match {
     case StringType =>
       // C1: string passes through; anything else → compact JSON text.
       // try_variant_get(.., string) renders scalars exactly like serde_json
@@ -78,7 +83,7 @@ object Coercions {
     case st: StructType =>
       val fields = st.fields.map { f =>
         val p = s"$path.${f.name}"
-        f.name -> coerceField(fieldOf(v, f.name, p, set), f.dataType, p, set)
+        f.name -> coerceField(field(v, f.name, p), f.dataType, p, field, set)
       }
       val present = v.isNotNull && !is_variant_null(v)
       // a value set beneath a missing struct builds it (the reference's
@@ -98,10 +103,13 @@ object Coercions {
       Coerced(value, error)
 
     case ArrayType(et, _) =>
+      // an element has no column of its own: its fields are read inline
+      def element(e: Column) =
+        coerceField(e, et, path + "[]", (o, name, _) => fieldOf(o, name), Map.empty)
       val arr = try_variant_get(v, "$", "array<variant>")
       val value = when(v.isNull || is_variant_null(v), lit(null).cast(ArrayType(et)))
-        .otherwise(transform(arr, e => coerceField(e, et, path + "[]").value))
-      val anyErr = exists(arr, e => coerceField(e, et, path + "[]").error.isNotNull)
+        .otherwise(transform(arr, element(_).value))
+      val anyErr = exists(arr, element(_).error.isNotNull)
       val error = when(v.isNotNull && !is_variant_null(v) &&
           (arr.isNull || coalesce(anyErr, lit(false))),
         err(path, lit("cannot coerce array element")))
@@ -118,21 +126,43 @@ object Coercions {
       Coerced(value, error)
   }
 
-  /** Field `name` of the VARIANT object `v`, unless `set` holds a non-null
-    * value for its `path` (null-result-not-set). */
-  private def fieldOf(v: Column, name: String, path: String, set: Map[String, Column]): Column =
-    coalesce(set.getOrElse(path, lit(null)), try_variant_get(v, "$." + name, "variant"))
+  /** Field `name` of the VARIANT object `v`. */
+  private def fieldOf(v: Column, name: String): Column =
+    try_variant_get(v, "$." + name, "variant")
 
-  /** Coerce a whole message: VARIANT root → (typed struct, array of field
-    * errors). Empty error array ⇒ clean row. `set`: transform outputs by
-    * target path, SQL-null where a transform yielded null. */
-  def coerceMessage(v: Column, schema: StructType,
-                    set: Map[String, Column] = Map.empty): (Column, Column) = {
-    val fields = schema.fields.map { f =>
-      f.name -> coerceField(fieldOf(v, f.name, f.name, set), f.dataType, f.name, set)
+  /** Coerce each message of `df` in one walk: VARIANT root `v` → `msg`
+    * (typed struct per `schema`) and `error` (string), dropping every
+    * column the walk adds. Level by level, each schema path gets one
+    * column: the non-null value `set` holds there (transform outputs by
+    * target path, SQL-null where a transform yielded null), else the field
+    * read once from its parent path's column; every use of a path reads
+    * that column. `error` is `failed` (transform failures) then the field
+    * errors in schema order, `"; "`-joined with nulls skipped: `""` ⇔ a
+    * clean row. No expression here falls back from codegen unless the
+    * schema holds an array (its elements are coerced in a lambda). */
+  def coerce(df: DataFrame, v: Column, schema: StructType,
+             set: Map[String, Column] = Map.empty, failed: Seq[Column] = Nil): DataFrame = {
+    // (path, parent path, field), one level of the schema per entry
+    val levels = Iterator.iterate(schema.fields.toSeq.map(f => (f.name, None: Option[String], f))) {
+      _.flatMap {
+        case (p, _, StructField(_, st: StructType, _, _)) =>
+          st.fields.toSeq.map(f => (s"$p.${f.name}", Some(p), f))
+        case _ => Nil
+      }
+    }.takeWhile(_.nonEmpty).toSeq
+    val names = levels.flatten.map(_._1).zipWithIndex.map { case (p, i) => p -> s"_coerce_$i" }.toMap
+    def at(p: String): Column = col(names(p))
+    val read = levels.foldLeft(df) { (acc, level) =>
+      acc.withColumns(level.map { case (p, parent, f) =>
+        names(p) -> coalesce(set.getOrElse(p, lit(null)), fieldOf(parent.fold(v)(at), f.name))
+      }.toMap)
     }
-    val value = struct(fields.map { case (n, c) => c.value.as(n) }.toSeq: _*)
-    val errors = array_compact(array(fields.map(_._2.error).toSeq: _*))
-    (value, errors)
+    val fields = schema.fields.toSeq.map { f =>
+      f.name -> coerceField(at(f.name), f.dataType, f.name, (_, _, p) => at(p), set)
+    }
+    read.withColumns(Map(
+        "msg" -> struct(fields.map { case (n, c) => c.value.as(n) }: _*),
+        "error" -> concat_ws("; ", failed ++ fields.map(_._2.error): _*)))
+      .drop(names.values.toSeq: _*)
   }
 }

@@ -1023,7 +1023,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
 
   def schema: StructType = schemaOf(snapshot)
 
-  private def schemaOf(snap: Snapshot): StructType =
+  private[graft] def schemaOf(snap: Snapshot): StructType =
     snap.schema.getOrElse(throw new IllegalStateException(s"no table at $path"))
 
   def partitionColumns: Seq[String] = snapshot.partitionColumns
@@ -1850,17 +1850,24 @@ final class DeltaTable(spark: SparkSession, val path: String) {
   def append(df: DataFrame, txnAppId: Option[String] = None,
              txnVersion: Long = -1L, operation: String = "WRITE",
              mergeSchema: Boolean = false,
-             compactBelow: Option[Long] = None): Long = {
+             compactBelow: Option[Long] = None): Long =
+    appendAt(snapshot, df, txnAppId, txnVersion, operation, mergeSchema, compactBelow)
+
+  /** [[append]] on `baseSnap`, a snapshot the caller already read (ingest
+    * builds its batch against the schema of the version it appends to).
+    *
+    * ONE base snapshot for the whole evolution computation: schema,
+    * maxColumnId, and the metadata the schemaUpdate action copies must
+    * come from the SAME version — three separate snapshot() reads left a
+    * torn-read window where a concurrent evolving append lands between
+    * them and this append's metaData action mixes old schema with new
+    * configuration (minting duplicate column-mapping ids). */
+  private[graft] def appendAt(baseSnap: Snapshot, df: DataFrame, txnAppId: Option[String],
+                              txnVersion: Long, operation: String, mergeSchema: Boolean,
+                              compactBelow: Option[Long]): Long = {
     def txnNotYetApplied(snap: Snapshot): Boolean = txnAppId.forall { app =>
       txnVersion < 0 || snap.txns.getOrElse(app, -1L) < txnVersion
     }
-    // ONE base snapshot for the whole evolution computation: schema,
-    // maxColumnId, and the metadata the schemaUpdate action copies must
-    // come from the SAME version — three separate snapshot() reads left
-    // a torn-read window where a concurrent evolving append lands
-    // between them and this append's metaData action mixes old schema
-    // with new configuration (minting duplicate column-mapping ids)
-    val baseSnap = snapshot
     if (!txnNotYetApplied(baseSnap)) return -1L
     // mergeSchema (the delta-rs writer's schema-evolution mode): source
     // columns the table lacks WIDEN the schema instead of silently

@@ -36,16 +36,12 @@ object ReferenceOps extends QueryModule {
       col("ts"))
 
   /** Decode JSON text and coerce to `schema` via the production path
-    * (try_parse_json → Coercions.coerceMessage). Returns payload struct
-    * `msg` + `errs` array. */
+    * (try_parse_json → Coercions.coerce). Returns payload struct `msg`,
+    * the `error` string (`""` for a clean row) and `decode_failed`. */
   private def decode(df: DataFrame, payload: Column, schema: StructType): DataFrame = {
-    val v = try_parse_json(payload)
-    val (msg, errs) = Coercions.coerceMessage(v, schema)
-    df.withColumn("_v", v)
-      .withColumn("msg", msg)
-      .withColumn("errs", errs)
+    val withVar = df.withColumn("_v", try_parse_json(payload))
       .withColumn("decode_failed", payload.isNotNull && col("_v").isNull)
-      .drop("_v")
+    Coercions.coerce(withVar, col("_v"), schema).drop("_v")
   }
 
   private val propsSchema = StructType(Seq(StructField("k", LongType)))
@@ -306,7 +302,7 @@ object ReferenceOps extends QueryModule {
           concat(lit("{\"t\":"), tStr, lit("}")).as("payload"))
         decode(df, col("payload"), StructType(Seq(StructField("t", TimestampType))))
           .select(col("event_id"), col("msg.t").as("t"),
-            (size(col("errs")) > 0).as("has_error"))
+            (col("error") =!= "").as("has_error"))
           .orderBy(col("event_id"))
       },
       Some("""SELECT event_id,

@@ -89,10 +89,11 @@ object PipelineStages {
 
   /** Apply the full message path in the reference's order (src/lib.rs:
     * 827-832): decode, evaluate each transform over the raw message,
-    * then coerce the message and the transform outputs in one pass
-    * ([[Coercions.coerceMessage]]). Input df must carry `value` plus (when
+    * then coerce the message and the transform outputs in one walk
+    * ([[Coercions.coerce]]). Input df must carry `value` plus (when
     * kafka meta transforms are used) the Kafka source columns. Returns df
-    * with: `msg` (typed struct per schema), `errs` (array<string>),
+    * with: `msg` (typed struct per schema), `error` (transform failures,
+    * then field errors, `"; "`-joined; `""` for a clean row),
     * `decode_failed` (boolean), `_json` (decoded text).
     */
   def apply(df: DataFrame, schema: StructType, opts: IngestOptions): DataFrame = {
@@ -103,6 +104,7 @@ object PipelineStages {
     val withJson = nonEmpty.withColumn("_json", json)
     val v = try_parse_json(col("_json"))
     val withVar = withJson.withColumn("_v", v)
+      .withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
 
     // transforms read the raw message (or a Kafka column); a later spec
     // for the same target wins where it is non-null. A real Kafka
@@ -117,14 +119,9 @@ object PipelineStages {
     }
     val set = outs.foldLeft(Map.empty[String, Column]) { case (m, (t, out)) =>
       m.updated(t, coalesce(out.value.cast(VariantType), m.getOrElse(t, lit(null)))) }
-    val (msg, errs) = Coercions.coerceMessage(col("_v"), schema, set)
     // E3: a function that failed on its arguments dead-letters the row
     val failed = outs.map { case (t, out) => when(out.failed, lit(s"$t: transform failed")) }
-
-    withVar.withColumn("msg", msg)
-      .withColumn("errs",
-        if (failed.isEmpty) errs else concat(array_compact(array(failed: _*)), errs))
-      .withColumn("decode_failed", col("_json").isNull || col("_v").isNull)
+    Coercions.coerce(withVar, col("_v"), schema, set, failed)
   }
 
   /** A transform target must name a field of the table schema, through
@@ -155,16 +152,16 @@ object PipelineStages {
     val staged = apply(batch, schema, opts).observe(obs,
       count(lit(1)).as("messages"),
       count(when(col("decode_failed"), lit(1))).as("deser_failed"),
-      count(when(!col("decode_failed") && size(col("errs")) > 0, lit(1))).as("transform_failed"),
+      count(when(!col("decode_failed") && col("error") =!= "", lit(1))).as("transform_failed"),
       coalesce(sum(octet_length(col("value").cast(BinaryType))), lit(0L)).as("bytes"))
-    val okRows = staged.filter(!col("decode_failed") && size(col("errs")) === 0)
+    val okRows = staged.filter(!col("decode_failed") && col("error") === "")
       .select(col("msg.*"))
-    val dead = staged.filter(col("decode_failed") || size(col("errs")) > 0)
+    val dead = staged.filter(col("decode_failed") || col("error") =!= "")
       .select(
         when(col("decode_failed"), base64(col("value").cast(BinaryType))).as("base64_bytes"),
         when(!col("decode_failed"), col("_json")).as("json_string"),
         when(col("decode_failed"), lit("deserialization failed"))
-          .otherwise(concat_ws("; ", col("errs"))).as("error"),
+          .otherwise(col("error")).as("error"),
         current_timestamp().as("timestamp"))
     (obs, okRows, dead)
   }
@@ -229,11 +226,13 @@ object IngestPipeline {
     * (/root/reference/src/writer.rs:370-387). */
   def processBatch(batch: DataFrame, batchId: Long, table: DeltaTable,
                    dlq: DeadLetterSink, opts: IngestOptions): Unit = {
-    // current snapshot's schema, not start-time's. The observation is
-    // attached on every batch, sink or not: it is the node that keeps the
-    // ok and dead filters above the staged frame (see split), and the M1
-    // counters ride the write job as its aggregates (zero extra jobs).
-    val (obs, ok, dead) = PipelineStages.split(batch, table.schema, opts)
+    // current snapshot's schema, not start-time's; the append commits on
+    // top of the same read. The observation is attached on every batch,
+    // sink or not: it is the node that keeps the ok and dead filters above
+    // the staged frame (see split), and the M1 counters ride the write job
+    // as its aggregates (zero extra jobs).
+    val snap = table.snapshot
+    val (obs, ok, dead) = PipelineStages.split(batch, table.schemaOf(snap), opts)
     val t0 = System.nanoTime()
     // obs.get blocks until the write job fires it; safe only when the
     // append actually committed (an idempotent skip may run no job)
@@ -241,8 +240,8 @@ object IngestPipeline {
       IngestMetrics.emitBatch(s, obs.get, (System.nanoTime() - t0) / 1000000L))
     try {
       val committed =
-        try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE",
-          compactBelow = opts.minBytesPerFile)
+        try table.appendAt(snap, ok, Some(opts.appId), batchId, "STREAMING UPDATE",
+          mergeSchema = false, compactBelow = opts.minBytesPerFile)
         catch {
           // the version is durable and the batch landed; only post-commit
           // work failed, so this is not a failed write

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * matrix plus the ToString and recursive struct/array rules. Where the
   * reference leaves a non-coercible value in place and quarantines the row
   * at parquet-write time, this engine nulls the value and raises a field
-  * error — same endpoint (the row dead-letters), asserted via `errs`.
+  * error — same endpoint (the row dead-letters), asserted via `error`.
   */
 class CoercionsSpec extends SparkSpec {
   import spark.implicits._
@@ -29,15 +29,15 @@ class CoercionsSpec extends SparkSpec {
       StructField("level2_int", IntegerType),
       StructField("level2_timestamp", TimestampType)))))))
 
-  private def coerce(json: String) = {
-    val (msg, errs) = Coercions.coerceMessage(parse_json(col("json")), schema)
-    Seq(json).toDF("json").select(msg.as("msg"), errs.as("errs"))
-      .select(col("msg.*"), col("errs"))
+  private def coerce(json: String) =
+    Coercions.coerce(Seq(json).toDF("json").withColumn("v", parse_json(col("json"))),
+        col("v"), schema)
+      .select(col("msg.*"), col("error"))
       .head()
-  }
 
-  private def errsOf(r: org.apache.spark.sql.Row): Seq[String] =
-    r.getSeq[String](r.fieldIndex("errs"))
+  /** The row's field errors, `"; "`-joined in schema order. */
+  private def errsOf(r: org.apache.spark.sql.Row): String =
+    r.getAs[String]("error")
 
   private def tsMicros(r: org.apache.spark.sql.Row, field: String): Long = {
     val ts = r.getAs[java.sql.Timestamp](field)
@@ -69,7 +69,7 @@ class CoercionsSpec extends SparkSpec {
   test("timestamp matrix: ISO-8601-basic (not RFC3339) dead-letters") {
     val r = coerce("""{"level1_timestamp": "20211111T22115800Z"}""")
     assert(r.isNullAt(r.fieldIndex("level1_timestamp")))
-    assert(errsOf(r).exists(_.contains("level1_timestamp")))
+    assert(errsOf(r).contains("level1_timestamp"))
   }
 
   test("timestamp matrix: java-style datetime dead-letters") {
@@ -135,12 +135,28 @@ class CoercionsSpec extends SparkSpec {
     // every child get of a non-object is null; without the explicit type
     // check the row passed as clean with a struct of nulls (review finding)
     val r = coerce("""{"level2": 42}""")
-    assert(errsOf(r).exists(_.contains("cannot coerce to struct")),
+    assert(errsOf(r).contains("cannot coerce to struct"),
       s"scalar-at-struct must raise a field error; got ${errsOf(r)}")
     val arr = coerce("""{"level2": [1, 2]}""")
-    assert(errsOf(arr).exists(_.contains("cannot coerce to struct")))
+    assert(errsOf(arr).contains("cannot coerce to struct"))
     // a real (empty) object is still fine
     assert(errsOf(coerce("""{"level2": {}}""")).isEmpty)
+  }
+
+  test("an array-of-struct element error dead-letters the row, the other elements coerce") {
+    val r = coerce("""{"array_struct": [{"level2_int": 1}, {"level2_int": "x"}]}""")
+    assert(errsOf(r) === "array_struct: cannot coerce array element")
+    val structs = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("array_struct"))
+    assert(structs.map(s => Option(s.get(s.fieldIndex("level2_int")))) === Seq(Some(1), None))
+  }
+
+  test("field errors join in schema order, a nested one named by its full path") {
+    val r = coerce(
+      """{"array_struct": [{"level2_int": "x"}], "level2": {"level2_timestamp": "bad"},
+        | "level1_integer": "a"}""".stripMargin.replace("\n", ""))
+    assert(errsOf(r) === "level1_integer: cannot coerce to int: \"a\"; " +
+      "level2.level2_timestamp: cannot coerce to timestamp: \"bad\"; " +
+      "array_struct: cannot coerce array element")
   }
 
   test("rfc3339 regex rejects lax Spark casts, accepts lowercase t/z") {

@@ -94,7 +94,7 @@ class LogListingSpec extends SparkSpec {
     assert(cold.files.toSet === t.snapshot.files.toSet)
   }
 
-  test("one ingest batch with a Delta DLQ and a compaction lists the log at most 7 times") {
+  test("one ingest batch with a Delta DLQ and a compaction lists the log at most 6 times") {
     val t = table("listing-batch-table").create(schema, Seq("date"))
     // the batch's file and this one make a two-file bin: the batch compacts
     t.append(Seq(100L -> "2021-11-01").toDF("id", "date"))
@@ -115,6 +115,6 @@ class LogListingSpec extends SparkSpec {
     assert(t.log.history(Some(1)).head._2.exists(_.operation === "OPTIMIZE"))
     assert(t.snapshot.files.size === 1)
     assert(dlq.toDF.count() === 1L)
-    assert(listings <= 7L, s"$listings listings")
+    assert(listings <= 6L, s"$listings listings")
   }
 }

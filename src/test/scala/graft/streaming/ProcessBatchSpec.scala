@@ -5,7 +5,10 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -66,6 +69,50 @@ class ProcessBatchSpec extends SparkSpec {
     assert(parses(dead) === 1, dead.queryExecution.sparkPlan.treeString)
     assert(okWritten.count() === 2L)
     assert(dead.count() === 2L)
+  }
+
+  private def variantGets(df: DataFrame): Seq[VariantGet] =
+    df.queryExecution.sparkPlan.collect { case p => p.expressions.flatMap(_.collect {
+      case g: VariantGet => g }) }.flatten
+
+  /** The plan's projections that read the message VARIANT: none may fall
+    * back from codegen, and each must run inside a whole-stage codegen
+    * stage (not behind one of its InputAdapters). */
+  private def assertStagedInCodegen(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(stage)
+    }
+    val inCodegen = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    val staged = plan.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[VariantGet])) => p }
+    assert(staged.nonEmpty, plan.treeString)
+    staged.foreach { p =>
+      assert(!p.projectList.exists(_.exists(_.isInstanceOf[CodegenFallback])), p.treeString)
+      assert(inCodegen.exists(_ eq p), plan.treeString)
+    }
+  }
+
+  test("plan pin: each schema path is read once, inside whole-stage codegen") {
+    val (_, ok, dead) = PipelineStages.split(batch.localCheckpoint(), schema,
+      IngestOptions(appId = "pin", transforms = transforms))
+    // the one JMESPath path of the transforms (the kafka.* ones read columns)
+    val transformPaths = Set("$.meta.producer.timestamp")
+    val schemaPaths = 13 // meta, its 2 structs and their 4 leaves, 6 top-level leaves
+    Seq(ok.repartition(col("date")), dead).foreach { df =>
+      val (fromTransforms, fromSchema) = variantGets(df).filter(_.path.toString != "$")
+        .partition(g => transformPaths.contains(g.path.toString))
+      // a schema path is read once, from its parent's column; a transform
+      // path is one expression over the raw message (shared by the
+      // transform's value and its failure test)
+      val repeated = fromSchema.groupBy(_.canonicalized).filter(_._2.size > 1)
+      assert(repeated.isEmpty, repeated.keys.map(_.sql).mkString("\n"))
+      assert(fromSchema.size <= schemaPaths, df.queryExecution.sparkPlan.treeString)
+      assert(fromTransforms.map(_.canonicalized).distinct.size <= transformPaths.size)
+    }
+    assertStagedInCodegen(ok)
+    assertStagedInCodegen(dead)
   }
 
   test("replay of a committed batch: no job, no wait, no second counters, nothing left registered") {
@@ -182,6 +229,30 @@ class ProcessBatchSpec extends SparkSpec {
     assert(rows("none").isNullAt(rows("none").fieldIndex("url")))
     assert(dead.map(_.getAs[String]("error")) === Seq("url: transform failed"))
     assert(dead.head.getAs[String]("json_string").contains("abc"))
+    assert(sink.counters(IngestMetrics.MessageTransformFailed) === 1L)
+  }
+
+  test("a scalar where a struct is wanted dead-letters, though a transform targets beneath it") {
+    val sink = new RecordingMetricsSink
+    val (rows, dead) = ingest(Seq(
+      """{"meta": "x", "uuid": "scalar", "status": 200}""", message(1, "200")), transforms, sink)
+    assert(rows.keySet === Set("u1"))
+    assert(dead.map(_.getAs[String]("error")) === Seq("meta: cannot coerce to struct: \"x\""))
+    assert(dead.head.getAs[String]("json_string").contains("scalar"))
+    assert(sink.counters(IngestMetrics.MessageTransformFailed) === 1L)
+  }
+
+  test("a dead letter's error is its transform failures, then its field errors in schema order") {
+    val sink = new RecordingMetricsSink
+    val (rows, dead) = ingest(Seq(
+      """{"uuid": "bad", "status": "n/a", "ms": "abc", "meta": 5}""",
+      """{"uuid": "ok", "status": 200}"""),
+      Seq("url" -> "epoch_millis_to_iso8601(ms)", "session_id" -> "epoch_seconds_to_iso8601(ms)"),
+      sink)
+    assert(rows.keySet === Set("ok"))
+    assert(dead.map(_.getAs[String]("error")) === Seq(
+      "url: transform failed; session_id: transform failed; " +
+        "meta: cannot coerce to struct: 5; status: cannot coerce to int: \"n/a\""))
     assert(sink.counters(IngestMetrics.MessageTransformFailed) === 1L)
   }
 
