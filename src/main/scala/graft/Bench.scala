@@ -366,17 +366,17 @@ object Bench {
         // identical inner work purely from leg order.
         val graphIters =
           sys.env.getOrElse("SPARK_GRAFT_BENCH_GRAPH_ITERS", "2").toInt
-        def stepMin[A](name: String)(body: => A): A = {
+        // `release` frees what one iteration's result holds, untimed
+        def stepMin[A](name: String, release: A => Unit = (_: A) => ())(body: => A): Unit = {
           var best = Double.MaxValue
-          var last: Option[A] = None
           (1 to math.max(1, graphIters)).foreach { _ =>
             val t0 = System.nanoTime()
-            last = Some(body)
+            val out = body
             best = math.min(best, (System.nanoTime() - t0) / 1e9)
+            release(out)
           }
           steps(name) = (best, calibSlice())
           System.err.println(f"[bench] maint $name%-18s $best%.3f (min of $graphIters)")
-          last.get
         }
         val dir = Scratch.dir("graft-bench-maint") + "/tbl"
         val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -480,7 +480,7 @@ object Bench {
             run(ops.Graph.applyTriangleDelta(triPre,
               ops.Graph.triangleDelta(pre, changes)))
           }
-          stepMin("graph_recompute") {
+          stepMin("graph_recompute", org.apache.spark.sql.graft.KeyedCheckpoint.release) {
             val post = pre.unionAll(ins)
             // post is canonical by construction (the edge table holds
             // canonical distinct pairs; ins is guard-disjoint), so the
@@ -492,6 +492,7 @@ object Bench {
             val deg = ops.Graph.pairDegrees(post, "u", "v").localCheckpoint()
             run(deg)
             run(ops.Graph.trianglesCanonical(post, Some(deg)))
+            deg
           }
         }
         val rows = t.toDF.count()

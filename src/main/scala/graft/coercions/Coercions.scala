@@ -17,7 +17,12 @@ import org.apache.spark.sql.types._
   *     are left alone (and the row subsequently dead-letters); JSON *numbers*
   *     pass through as already-µs.
   * `parse_json` keeps the original types, then cheap binary sub-access per
-  * field (codegen'd, no UDFs on the hot path). [[coerce]] walks each
+  * field (codegen'd, no UDFs on the hot path). Every atomic leaf, the
+  * timestamp rule's string and long reads and the struct rule's object
+  * test go through [[VariantLeaf]]: one generated read per value that
+  * equals `try_variant_get(v, '$', type)` (and `schema_of_variant`'s type
+  * prefix) without building Spark's per-value `Literal`/`Cast` trees or
+  * rendering a schema string. [[coerce]] walks each
   * message once: every schema path is read once, from its parent path's
   * column, and every use of the field reads that column; the errors join
   * into one string without a lambda, so an array-free schema's whole
@@ -61,20 +66,17 @@ object Coercions {
                           set: Map[String, Column]): Coerced = dt match {
     case StringType =>
       // C1: string passes through; anything else → compact JSON text.
-      // try_variant_get(.., string) renders scalars exactly like serde_json
-      // (numbers/booleans as their JSON text); objects/arrays need to_json.
-      val asString = try_variant_get(v, "$", "string")
-      val value = when(v.isNull || is_variant_null(v), lit(null).cast(StringType))
-        .otherwise(coalesce(asString, to_json(v)))
-      Coerced(value, lit(null).cast(StringType))
+      // A variant read as string renders scalars exactly like serde_json
+      // (numbers/booleans as their JSON text) and objects/arrays as compact
+      // JSON; it is null only for a null or JSON-null value.
+      Coerced(VariantLeaf.as(v, StringType), lit(null).cast(StringType))
 
     case TimestampType =>
-      val tpe = schema_of_variant(v)
-      val asStr = try_variant_get(v, "$", "string")
-      val asLong = try_variant_get(v, "$", "long")
+      val asStr = VariantLeaf.as(v, StringType)
+      val asLong = VariantLeaf.as(v, LongType)
       val fromStr = rfc3339ToTimestamp(asStr)
       val value = when(v.isNull || is_variant_null(v), lit(null).cast(TimestampType))
-        .when(tpe === "STRING", fromStr)
+        .when(VariantLeaf.isString(v), fromStr)
         .otherwise(timestamp_micros(asLong))
       val error = when(v.isNotNull && !is_variant_null(v) && value.isNull,
         err(path, concat(lit("cannot coerce to timestamp: "), to_json(v))))
@@ -93,7 +95,7 @@ object Coercions {
       // a scalar/array where the schema wants a struct must DEAD-LETTER:
       // every child get would be null, silently passing a struct of nulls
       // (the array branch below already errors symmetrically)
-      val isObject = schema_of_variant(v).startsWith("OBJECT")
+      val isObject = VariantLeaf.isObject(v)
       val value = when(!built, lit(null).cast(st))
         .otherwise(struct(fields.map { case (n, c) => c.value.as(n) }.toSeq: _*))
       val errors = fields.map(_._2.error)
@@ -118,9 +120,11 @@ object Coercions {
     case other =>
       // Integer/long/double/float/boolean…: the reference passes these
       // through untouched and lets the Arrow write fail on mismatch
-      // (quarantine E4). try_variant_get nulls on mismatch; surface that as
-      // a field error to preserve the dead-letter contract.
-      val value = try_variant_get(v, "$", other.sql)
+      // (quarantine E4). The read nulls on mismatch; surface that as a
+      // field error to preserve the dead-letter contract.
+      val value =
+        if (VariantLeaf.reads(other)) VariantLeaf.as(v, other)
+        else try_variant_get(v, "$", other.sql)
       val error = when(v.isNotNull && !is_variant_null(v) && value.isNull,
         err(path, concat(lit(s"cannot coerce to ${other.simpleString}: "), to_json(v))))
       Coerced(value, error)

@@ -12,6 +12,11 @@ object ColumnBridge {
   def wrap(e: Expression): Column = ExpressionUtils.column(e)
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Whether `dt` is atomic (a leaf, VARIANT included; AtomicType is
+    * private[sql]). */
+  def isAtomic(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt.isInstanceOf[org.apache.spark.sql.types.AtomicType]
+
   /** EAGER Column→Expression conversion: resolves the ColumnNode tree to a
     * plain Catalyst tree NOW instead of deferring to plan conversion.
     * Required inside analyzer-time FunctionBuilders (GraftExtensions): the

@@ -58,14 +58,20 @@ object KeyedCheckpoint {
       n, partitionKeys, sortKeys)
   }
 
+  /** Drop the blocks a `localCheckpoint`ed frame holds (blocking); the
+    * frame cannot be read afterwards. */
+  def release(cp: DataFrame): Unit = { rddOf(cp).rdd.unpersist(blocking = true); () }
+
+  private def rddOf(cp: DataFrame): LogicalRDD = cp.queryExecution.analyzed match {
+    case l: LogicalRDD => l
+    case other => throw new IllegalStateException(
+      s"localCheckpoint did not yield a LogicalRDD plan: $other")
+  }
+
   private def declare(cp: DataFrame, n: Int, partitionKeys: Seq[String],
                       sortKeys: Seq[String]): DataFrame = {
     val cs = cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val lr = cp.queryExecution.analyzed match {
-      case l: LogicalRDD => l
-      case other => throw new IllegalStateException(
-        s"localCheckpoint did not yield a LogicalRDD plan: $other")
-    }
+    val lr = rddOf(cp)
     def attr(k: String) =
       lr.output.find(_.name == k).getOrElse(throw new IllegalArgumentException(
         s"key column '$k' not in checkpointed output ${lr.output.map(_.name)}"))

@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
+import org.apache.spark.sql.catalyst.expressions.variant.{SchemaOfVariant, VariantGet}
 import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -110,6 +110,14 @@ class ProcessBatchSpec extends SparkSpec {
       assert(repeated.isEmpty, repeated.keys.map(_.sql).mkString("\n"))
       assert(fromSchema.size <= schemaPaths, df.queryExecution.sparkPlan.treeString)
       assert(fromTransforms.map(_.canonicalized).distinct.size <= transformPaths.size)
+      // atomic leaves and type tests are VariantLeaf reads: no per-value
+      // Literal/Cast trees (an atomic-target VariantGet), no schema string
+      val atomic = variantGets(df).filter(_.targetType != VariantType)
+      assert(atomic.isEmpty, atomic.map(_.sql).mkString("\n"))
+      val plan = df.queryExecution.sparkPlan
+      val schemaOf = plan.collect { case p => p.expressions.flatMap(_.collect {
+        case s: SchemaOfVariant => s }) }.flatten
+      assert(schemaOf.isEmpty, plan.treeString)
     }
     assertStagedInCodegen(ok)
     assertStagedInCodegen(dead)
