@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone: the reference engine renders all timestamps in
   *    UTC (chrono `Utc`, /root/reference/src/transforms.rs:243-281), and the
   *    DuckDB oracle compares rendered values.
+  *  - Generated code compiles once per JVM: a large shared codegen cache,
+  *    and no per-session artifact class loader, so a new streaming query
+  *    reuses the classes an earlier one compiled. Nothing that reaches
+  *    generated code may vary per batch (see `BatchTimestamp`).
   */
 object GraftSession {
   def builder(appName: String = "graft", master: Option[String] = None): SparkSession.Builder = {
@@ -50,6 +54,17 @@ object GraftSession {
       // referenced, so memory is bounded by live plans. On a production
       // cluster the same value applies to the driver and executors alike.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // ... and a cache that every query of the JVM shares. Spark keys a
+      // generated class on its source AND the task thread's context class
+      // loader; with artifact isolation on, the executor tasks of each
+      // streaming query run under a loader of that query's cloned session,
+      // so every new query (another topic, a restart, the next test)
+      // recompiled every class and its first batch ran them interpreted
+      // while the JIT warmed up again. Off, every task runs under the
+      // default loader. Given up: session-scoped artifacts added through
+      // `addArtifact`, which only Spark Connect uses; nothing here adds
+      // any. Static conf, set at session creation.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // harness events table carries TIMESTAMP(NANOS); Spark 4 reads it as
       // long under this flag (Tables.events converts to µs timestamps)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -5382,7 +5382,11 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * plan-embedded map literal. The motivating case is a 100 TB table's
     * accumulated small-file debt (10⁵–10⁶ entries), where a typedlit map
     * would serialize multi-MB into every task's plan and through
-    * codegen. Seam for PlanSpec's no-map-literal pin. */
+    * codegen. The bin IS the shuffle partition id (`repartitionById`), so
+    * each bin is exactly one task and one output file, and no job reads
+    * the input first to sample range bounds (sampled bounds could also
+    * merge a small bin into its neighbour). Seam for DeltaSpec's routing
+    * pins. */
   private[delta] def binRoutedFrame(snap: Snapshot, df0: DataFrame,
                                     binOf: Map[String, Int],
                                     totalBins: Int): DataFrame =
@@ -5393,7 +5397,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
         binOf.map { case (k, b) => k -> b.toLong }))
       df0.withColumn("__bin", ColumnBridge.wrap(FileLongValue(
           ColumnBridge.toExpr(fileKeyExpr(snap)), bc, "compact_bin")))
-        .repartitionByRange(totalBins, col("__bin"))
+        .repartitionById(totalBins, col("__bin").cast("int"))
         .drop("__bin")
     }
 
@@ -5431,7 +5435,7 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * rewritten (a partition's lone small file stays as it is), so a
     * re-run never rewrites a file to itself. Returns -1 when no bin is
     * left. Rows route to their bin by source file name (UUID-unique
-    * within a table) and one range-partition task writes ≈ one bin — a
+    * within a table) and one shuffle partition writes exactly one bin — a
     * 100 TB streaming table's small-file debt compacts into target-size
     * files with one shuffle of ONLY the small bytes, instead of
     * funneling through the single output task a coalesce(1) would

@@ -1,6 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.types.{DataType, TimestampType}
 
 import graft.delta.DeltaTable
 import graft.transforms.Transformer
@@ -33,6 +38,25 @@ final class DeltaDeadLetterSink(table: DeltaTable, appId: String,
   override def write(dead: DataFrame, batchId: Long): Unit = {
     val out = new Transformer(transforms)(dead)
     table.append(out, Some(appId + "-dlq"), batchId): Unit
+  }
+}
+
+/** A dead letter's `timestamp`: one instant per batch, taken when the
+  * batch is split. `current_timestamp()` is folded to a literal that is
+  * inlined into the generated source, so each batch would compile a class
+  * of its own (on the driver and again on an executor). This value reaches
+  * generated code as a reference object, so the source is the same on
+  * every batch and Spark's codegen cache hits. Not foldable, for the same
+  * reason. */
+case class BatchTimestamp(micros: Long) extends LeafExpression {
+  override def dataType: DataType = TimestampType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = micros
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("batchTimestamp", java.lang.Long.valueOf(micros),
+      classOf[java.lang.Long].getName)
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
   }
 }
 

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.StreamBridge
+import org.apache.spark.sql.graft.{ColumnBridge, StreamBridge}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -162,7 +163,8 @@ object PipelineStages {
         when(!col("decode_failed"), col("_json")).as("json_string"),
         when(col("decode_failed"), lit("deserialization failed"))
           .otherwise(col("error")).as("error"),
-        current_timestamp().as("timestamp"))
+        ColumnBridge.wrap(BatchTimestamp(
+          DateTimeUtils.instantToMicros(java.time.Instant.now()))).as("timestamp"))
     (obs, okRows, dead)
   }
 }

@@ -1815,4 +1815,61 @@ class DeltaSpec extends SparkSpec {
       "bin routing must not embed a file-count-sized map literal in the plan")
     assert(routed.count() === 200L)
   }
+
+  test("compact routes each bin to its own shuffle partition, without range sampling") {
+    val dir = tmpDir("delta-binid")
+    val t0 = DeltaTable.forPath(spark, dir).create(
+      StructType(Seq(StructField("v", LongType))))
+    (0 until 6).foreach(k =>
+      t0.append((0L until 50L).map(i => i * 31L + k).toDF("v").coalesce(1)))
+    val t = DeltaTable.forPath(spark, dir)
+    val snap = t.snapshot
+    val binOf = t.compactBins(snap, snap.files,
+      target = snap.files.map(_.size).max * 2)
+    val totalBins = binOf.values.max + 1
+    assert(totalBins === 3)
+    val df0 = spark.read.parquet(snap.files.map(f => s"$dir/${f.path}"): _*)
+      .withColumn("f", input_file_name())
+    val routed = t.binRoutedFrame(snap, df0, binOf, totalBins)
+    val shuffles = routed.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s.outputPartitioning }
+    assert(shuffles.nonEmpty && !shuffles.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]),
+      routed.queryExecution.sparkPlan.treeString)
+    // a bin is exactly one shuffle partition, and a partition one bin
+    val filesByPartition = routed.rdd.mapPartitions(rows =>
+      Iterator(rows.map(_.getAs[String]("f").split('/').last).toSet)).collect().toSeq
+    assert(filesByPartition.size === totalBins)
+    val bins = filesByPartition.map(_.map(binOf))
+    assert(bins.map(_.size) === Seq(1, 1, 1) && bins.flatten.sorted === Seq(0, 1, 2))
+  }
+
+  test("compact writes every bin as one file when bins hold very different row counts") {
+    // bins pack by bytes, but range bounds were sampled by rows: files of
+    // equal size hold 20,000 short values (bins 0 and 2) or 2 long random
+    // ones (bin 1). One append writes them in task order, so the path
+    // order the packer walks is this order.
+    val dir = tmpDir("delta-skewbins")
+    val t = DeltaTable.forPath(spark, dir).create(
+      StructType(Seq(StructField("s", StringType))))
+    val rowsOf = Seq(20000, 20000, 2, 2, 20000, 20000)
+    val df = spark.sparkContext.parallelize(rowsOf.indices, rowsOf.size).flatMap { p =>
+      val r = new scala.util.Random(p)
+      val n = rowsOf(p)
+      Iterator.fill(n)(r.alphanumeric.take(200000 / n).mkString)
+    }.toDF("s")
+    t.append(df)
+    val files = t.snapshot.files.sortBy(_.path)
+    assert(files.size === 6)
+    val target = files.grouped(2).map(_.map(_.size).sum).max
+    assert(files.sliding(3).forall(_.map(_.size).sum > target),
+      s"file sizes ${files.map(_.size)} do not pack into pairs")
+    val data = t.toDF.orderBy("s").collect().toSeq
+    t.setProperties(Map(DeltaTable.TargetFileSizeKey -> target.toString))
+    assert(t.compact(minBytes = target) > 0L)
+    val after = DeltaTable.forPath(spark, dir)
+    assert(after.snapshot.files.size === 3,
+      s"three bins must be three files, got ${after.snapshot.files.map(_.path)}")
+    assert(after.toDF.orderBy("s").collect().toSeq === data)
+  }
 }

@@ -4,6 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -17,8 +18,9 @@ import graft.delta.DeltaTable
 /** The frames one micro-batch writes: the staged message path (decode →
   * transforms → coercions) must run once per message per write job, a
   * replayed batch must neither run a job nor leave its observation
-  * registered with the session, and transform outputs land, keep the
-  * message's own value when null, or dead-letter the row alone. */
+  * registered with the session, transform outputs land, keep the
+  * message's own value when null, or dead-letter the row alone, and the
+  * generated code compiles once per JVM, not per query or batch. */
 class ProcessBatchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -284,6 +286,65 @@ class ProcessBatchSpec extends SparkSpec {
     assert(filesOf("2021-03-24").size === 1)
     assert(table.toDF.count() === 8L)
     assert(table.log.history(Some(1)).head._2.exists(_.operation === "OPTIMIZE"))
+  }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One ingest query over a parquet file source, with a fresh table,
+    * Delta DLQ and checkpoint: each batch is one file of 40 messages, 8 of
+    * them malformed. Returns the classes each batch compiled (local mode:
+    * the driver and the executors share this JVM's counter). */
+  private def runQuery(batches: Int): Seq[Long] = {
+    val tablePath = tmpDir("reuse-table")
+    DeltaTable.forPath(spark, tablePath).create(schema, Seq("date"))
+    val in = tmpDir("reuse-in")
+    val source = spark.readStream
+      .schema(StructType(Seq(StructField("offset", LongType), StructField("value", StringType))))
+      .option("maxFilesPerTrigger", "1").parquet(in)
+      .select(col("value").cast(BinaryType).as("value"), lit(0).as("partition"),
+        col("offset"), lit("web_requests").as("topic"),
+        lit(1636668718000L).as("timestamp"), lit(0).as("timestampType"))
+    val opts = IngestOptions(appId = "reuse", transforms = transforms,
+      dlqTablePath = Some(tmpDir("reuse-dlq")),
+      checkpointLocation = Some(tmpDir("reuse-ckpt")),
+      allowedLatency = java.time.Duration.ofMillis(50),
+      minBytesPerFile = Some(128L * 1024 * 1024))
+    val started = new java.sql.Timestamp(System.currentTimeMillis())
+    val q = IngestPipeline.start(spark, source, tablePath, opts)
+    val compiled = try (0 until batches).map { b =>
+      (b * 40 until (b + 1) * 40).map { i =>
+        (i.toLong, i % 10 match {
+          case 0 => "not json"
+          case 5 => message(i, "\"n/a\"")
+          case _ => message(i, "200")
+        })
+      }.toDF("offset", "value").coalesce(1).write.mode("append").parquet(in)
+      val before = compiles
+      q.processAllAvailable()
+      compiles - before
+    } finally q.stop()
+    // every batch ran and split: a batch that never ran compiles nothing
+    assert(DeltaTable.forPath(spark, tablePath).toDF.count() === batches * 32)
+    val dead = DeltaTable.forPath(spark, opts.dlqTablePath.get).toDF
+    assert(dead.count() === batches * 8)
+    // one dead-letter timestamp per batch, taken while the query ran
+    val stamps = dead.select("timestamp").distinct().as[java.sql.Timestamp].collect()
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    assert(stamps.length === batches && stamps.forall(t => !t.before(started) && !t.after(now)),
+      stamps.mkString(", "))
+    compiled
+  }
+
+  test("a second ingest query compiles no class; a steady DLQ batch compiles none") {
+    // nothing in the generated source may vary per query or per batch.
+    // The first query's first batch compiles the staged path, its second
+    // the compaction (two small files in the date); the third and fourth
+    // do what the second did
+    val first = runQuery(batches = 4)
+    val second = runQuery(batches = 4)
+    val shown = s"classes compiled per batch: first query $first, second query $second"
+    assert(first.drop(2) === Seq(0L, 0L), shown)
+    assert(second === Seq(0L, 0L, 0L, 0L), shown)
   }
 
   /** Observations the session still waits to fire (Spark drops one only
