@@ -58,12 +58,14 @@ object GraftSession {
       // generated class on its source AND the task thread's context class
       // loader; with artifact isolation on, the executor tasks of each
       // streaming query run under a loader of that query's cloned session,
-      // so every new query (another topic, a restart, the next test)
-      // recompiled every class and its first batch ran them interpreted
-      // while the JIT warmed up again. Off, every task runs under the
-      // default loader. Given up: session-scoped artifacts added through
-      // `addArtifact`, which only Spark Connect uses; nothing here adds
-      // any. Static conf, set at session creation.
+      // so every query after a JVM's first recompiled every class and its
+      // first batch ran them interpreted while the JIT warmed up again.
+      // Off, every task runs under the default loader. This pays only
+      // where one JVM starts several queries (the tests, the benchmark's
+      // drains, an embedder of `Main.start`); `Main.main` runs one query
+      // per JVM and gains nothing. Given up: session-scoped artifacts
+      // added through `addArtifact`, which only Spark Connect uses;
+      // nothing here adds any. Static conf, set at session creation.
       .config("spark.sql.artifact.isolation.enabled", "false")
       // harness events table carries TIMESTAMP(NANOS); Spark 4 reads it as
       // long under this flag (Tables.events converts to µs timestamps)

@@ -5383,10 +5383,8 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * accumulated small-file debt (10⁵–10⁶ entries), where a typedlit map
     * would serialize multi-MB into every task's plan and through
     * codegen. The bin IS the shuffle partition id (`repartitionById`), so
-    * each bin is exactly one task and one output file, and no job reads
-    * the input first to sample range bounds (sampled bounds could also
-    * merge a small bin into its neighbour). Seam for DeltaSpec's routing
-    * pins. */
+    * each bin is exactly one task and one output file. Seam for
+    * DeltaSpec's routing pins. */
   private[delta] def binRoutedFrame(snap: Snapshot, df0: DataFrame,
                                     binOf: Map[String, Int],
                                     totalBins: Int): DataFrame =

@@ -312,6 +312,11 @@ class ProcessBatchSpec extends SparkSpec {
     val started = new java.sql.Timestamp(System.currentTimeMillis())
     val q = IngestPipeline.start(spark, source, tablePath, opts)
     val compiled = try (0 until batches).map { b =>
+      // the window opens before the file lands: the running query may
+      // pick it up at once. The counter is JVM-wide, so no other query
+      // of the session may run inside the window
+      assert(spark.streams.active.map(_.id).toSeq === Seq(q.id))
+      val before = compiles
       (b * 40 until (b + 1) * 40).map { i =>
         (i.toLong, i % 10 match {
           case 0 => "not json"
@@ -319,7 +324,6 @@ class ProcessBatchSpec extends SparkSpec {
           case _ => message(i, "200")
         })
       }.toDF("offset", "value").coalesce(1).write.mode("append").parquet(in)
-      val before = compiles
       q.processAllAvailable()
       compiles - before
     } finally q.stop()
